@@ -76,6 +76,7 @@ import base64
 import hashlib
 import json
 import math
+import numbers
 import os
 
 from pyspark.sql import DataFrame
@@ -112,6 +113,7 @@ KLL_DEFAULT_K = 200
 # published DataSketches KLL accuracy model (single-sided, 99% confidence):
 # eps(k) ≈ 2.296 / k^0.9 — inverted to honor allow_relative_error
 _KLL_EPS_COEF, _KLL_EPS_EXP = 2.296, 0.9
+_KLL_MIN_K = 8  # the smallest k the DataSketches KLL sketch accepts
 _KLL_MAX_K = 16384  # ~0.04% rank error, ~300 KB sketch — still stats-file KB
 
 
@@ -121,9 +123,16 @@ def _kll_k_for(kw: dict) -> int:
     rank-error tolerance and k is derived from the inverted accuracy model
     (never below the default — tighter than requested is always safe).
     Tolerances the largest supported sketch cannot deliver are rejected at
-    classification time, not silently rounded to k=200."""
+    classification time, not silently rounded to k=200. An explicit k
+    outside [_KLL_MIN_K, _KLL_MAX_K] is a configuration error."""
     if "kll_k" in kw:
-        return int(kw["kll_k"])
+        k = kw["kll_k"]
+        if (isinstance(k, bool) or not isinstance(k, numbers.Integral)
+                or not _KLL_MIN_K <= k <= _KLL_MAX_K):
+            raise ValueError(
+                f"kll_k={k!r} must be an integer in "
+                f"[{_KLL_MIN_K}, {_KLL_MAX_K}]")
+        return int(k)
     err = kw.get("allow_relative_error", False)
     if isinstance(err, (int, float)) and not isinstance(err, bool) and err > 0:
         k = math.ceil((_KLL_EPS_COEF / float(err)) ** (1.0 / _KLL_EPS_EXP))

@@ -27,7 +27,7 @@ from __future__ import annotations
 import traceback
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .expectations.defs import ExpectationSpec, get_spec
@@ -49,6 +49,23 @@ from .types import (
 )
 
 UNEXPECTED_LIST_LIMIT = 10_000
+# grouping(__pid) of a partition rollup: 1 on the grand-total row, 0 on a
+# partition's row. With partition_col a null partition value also reads
+# __pid = null, so the key alone cannot tell the two apart.
+_GRAND = "__grand"
+
+
+def _pid_rollup(df: DataFrame, *aggs: Column) -> DataFrame:
+    """``df`` (which carries ``__pid``) rolled up by partition, with the
+    grand-total row flagged in ``__grand``."""
+    return df.rollup("__pid").agg(*aggs, F.grouping("__pid").alias(_GRAND))
+
+
+def _split_grand(rows: list) -> tuple[Any, list]:
+    """Collected rollup rows -> (the grand-total row or None, the
+    partition rows)."""
+    grand = [r for r in rows if r[_GRAND]]
+    return (grand[0] if grand else None), [r for r in rows if not r[_GRAND]]
 
 
 def _is_valid_partition_object(po) -> bool:
@@ -411,7 +428,7 @@ class ValidationRun:
         it with Catalyst expressions (map/agg/row_count/unique_proportion/
         quantile/distinct_set kinds) or an Arrow-batched pandas UDF (drift
         scores) — the driver reads back only the single global row (a pushed
-        `__pid IS NULL` filter on the tiny parquet). The residual
+        `__grand = 1` filter on the tiny parquet). The residual
         driver-bound items (exact-opt-in quantiles, auto-partition KL,
         bootstrapped KS, categorical KL with a positive tail_weight_holdout)
         collect a NARROW projection (that
@@ -423,13 +440,13 @@ class ValidationRun:
         spark = dfd.sparkSession
         sink = self.partition_verdict_sink
         rollup_path = os.path.join(sink, f"rollup-domain-{didx}.parquet")
-        (dfd.withColumn("__pid", self._pid_expr())
-            .rollup("__pid").agg(*dp.slot_table.agg_list)
+        (_pid_rollup(dfd.withColumn("__pid", self._pid_expr()),
+                     *dp.slot_table.agg_list)
             .write.mode("overwrite").parquet(rollup_path))
         stored = spark.read.parquet(rollup_path)
-        g = stored.filter(F.col("__pid").isNull()).collect()
+        g = stored.filter(f"{_GRAND} = 1").collect()
         grow = g[0].asDict() if g else {a: None for a in dp.slot_table.exprs}
-        pid_src = stored.filter(F.col("__pid").isNotNull())
+        pid_src = stored.filter(f"{_GRAND} = 0")
         frames, narrow = [], []
         for item in dp.fused_items:
             if item.spec.kind == "drift":
@@ -608,6 +625,50 @@ class ValidationRun:
             "kind": item.spec.kind,
             **extra,
         })
+
+    def _record_count_verdicts(self, item: CompiledItem,
+                               pid_rows: list[dict] | None,
+                               unexpected_by_pid: dict) -> None:
+        """One verdict per partition of the domain rollup for a job item
+        that counts unexpected rows per partition (window, unique); a
+        partition missing from ``unexpected_by_pid`` has none."""
+        mostly = float(item.kwargs.get("mostly", 1.0))
+        for prow in pid_rows or []:
+            el = int(prow[item.slots["element"]] or 0)
+            nn = int(prow[item.slots["nonnull"]] or 0)
+            ux = unexpected_by_pid.get(prow["__pid"], 0)
+            self._record_partition_verdict(
+                prow["__pid"], item, mostly_success(el, nn, ux, mostly),
+                {"unexpected_count": ux, "element_count": el,
+                 "missing_count": el - nn, "observed_value": None})
+
+    def _count_verdict_frame(self, item: CompiledItem, counts: DataFrame,
+                             didx: int) -> DataFrame:
+        """The sink twin of _record_count_verdicts: ``counts`` (``__pid``,
+        ``__ux``) joined null-safe to the stored domain rollup's
+        per-partition element/nonnull, as verdict rows."""
+        import os
+        rollup = (counts.sparkSession.read.parquet(os.path.join(
+            self.partition_verdict_sink, f"rollup-domain-{didx}.parquet"))
+            .filter(f"{_GRAND} = 0")
+            .select("__pid", item.slots["element"], item.slots["nonnull"]))
+        counts = counts.select(F.col("__pid").alias("__cpid"), "__ux")
+        joined = rollup.join(
+            counts, rollup["__pid"].eqNullSafe(counts["__cpid"]), "left")
+        mostly = float(item.kwargs.get("mostly", 1.0))
+        el = F.coalesce(F.col(item.slots["element"]), F.lit(0)).cast("long")
+        nn = F.coalesce(F.col(item.slots["nonnull"]), F.lit(0)).cast("long")
+        ux = F.coalesce(F.col("__ux"), F.lit(0)).cast("long")
+        success = ((el == 0) | (nn == 0)
+                   | ((nn - ux).cast("double")
+                      >= F.lit(mostly) * nn.cast("double")))
+        return joined.select(
+            F.col("__pid").cast("string").alias("partition_id"),
+            *self._sink_lits(item), success.alias("success"),
+            el.alias("element_count"), (el - nn).alias("missing_count"),
+            ux.alias("unexpected_count"),
+            F.lit(None).cast("double").alias("observed_value"),
+        ).select(*self._SINK_COLS)
 
     # ---------------------------------------------------------- fused evrs
 
@@ -1034,65 +1095,33 @@ class ValidationRun:
         flagged = dfd.select(*sel)
         ux_agg = F.coalesce(
             F.sum(F.when(F.col("__unexpected"), 1).otherwise(0)),
-            F.lit(0)).alias("u")
+            F.lit(0)).alias("__ux")
         element = int(grow[item.slots["element"]] or 0)
         nonnull = int(grow[item.slots["nonnull"]] or 0)
-        mostly = float(kw.get("mostly", 1.0))
         if per_part and self.partition_verdict_sink is not None:
             # one pass: rollup by pid written distributed, global row read
-            # back via a pushed __pid IS NULL filter; per-partition verdicts
+            # back via a pushed __grand = 1 filter; per-partition verdicts
             # derived executor-side against the stored domain rollup's
-            # element/nonnull (exactly the unique-item sink shape)
+            # element/nonnull
             import os
-            spark = flagged.sparkSession
             wpath = os.path.join(self.partition_verdict_sink,
                                  f"wrollup-domain-{didx}-w{jidx}.parquet")
-            (flagged.rollup("__pid").agg(ux_agg)
-             .write.mode("overwrite").parquet(wpath))
-            stored = spark.read.parquet(wpath)
-            g = stored.filter(F.col("__pid").isNull()).collect()
-            unexpected = int(g[0]["u"]) if g else 0
-            rollup = (spark.read.parquet(os.path.join(
-                self.partition_verdict_sink,
-                f"rollup-domain-{didx}.parquet"))
-                .filter(F.col("__pid").isNotNull())
-                .select("__pid", item.slots["element"],
-                        item.slots["nonnull"]))
-            joined = rollup.join(
-                stored.filter(F.col("__pid").isNotNull()), "__pid", "left")
-            el = F.coalesce(F.col(item.slots["element"]), F.lit(0)).cast("long")
-            nn_c = F.coalesce(F.col(item.slots["nonnull"]), F.lit(0)).cast("long")
-            ux = F.coalesce(F.col("u"), F.lit(0)).cast("long")
-            success = ((el == 0) | (nn_c == 0)
-                       | ((nn_c - ux).cast("double")
-                          >= F.lit(mostly) * nn_c.cast("double")))
-            (joined.select(
-                F.col("__pid").cast("string").alias("partition_id"),
-                *self._sink_lits(item), success.alias("success"),
-                el.alias("element_count"), (el - nn_c).alias("missing_count"),
-                ux.alias("unexpected_count"),
-                F.lit(None).cast("double").alias("observed_value"))
-             .select(*self._SINK_COLS)
+            _pid_rollup(flagged, ux_agg).write.mode("overwrite").parquet(wpath)
+            stored = flagged.sparkSession.read.parquet(wpath)
+            g = stored.filter(f"{_GRAND} = 1").collect()
+            unexpected = int(g[0]["__ux"]) if g else 0
+            (self._count_verdict_frame(
+                item, stored.filter(f"{_GRAND} = 0"), didx)
              .write.mode("overwrite").parquet(os.path.join(
                  self.partition_verdict_sink,
                  f"verdicts-domain-{didx}-w{jidx}.parquet")))
         elif per_part:
-            rows = flagged.rollup("__pid").agg(ux_agg).collect()
-            by_pid = {r["__pid"]: int(r["u"] or 0)
-                      for r in rows if r["__pid"] is not None}
-            g = [r for r in rows if r["__pid"] is None]
-            unexpected = int(g[0]["u"]) if g else 0
-            for prow in pid_rows or []:
-                el = int(prow[item.slots["element"]] or 0)
-                nn_p = int(prow[item.slots["nonnull"]] or 0)
-                ux = by_pid.get(prow["__pid"], 0)
-                self._record_partition_verdict(
-                    prow["__pid"], item,
-                    mostly_success(el, nn_p, ux, mostly),
-                    {"unexpected_count": ux, "element_count": el,
-                     "missing_count": el - nn_p, "observed_value": None})
+            g, rows = _split_grand(_pid_rollup(flagged, ux_agg).collect())
+            unexpected = int(g["__ux"]) if g else 0
+            self._record_count_verdicts(
+                item, pid_rows, {r["__pid"]: int(r["__ux"]) for r in rows})
         else:
-            unexpected = int(flagged.agg(ux_agg).first()["u"])
+            unexpected = int(flagged.agg(ux_agg).first()["__ux"])
         samples: list = []
         if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
             samples = [
@@ -1116,15 +1145,25 @@ class ValidationRun:
         the sketch alone (no second job — for exploratory scans); 'exact'
         (default) always resolves exact dup counts.
 
-        per_partition (r5): the exact path also emits one verdict row per
-        partition counting that partition's rows that participate in a
-        GLOBAL duplicate group (the counts sum to the global
-        unexpected_count). Derived from a (key, partition) pre-aggregation,
-        so the extra cost is one shuffle of distinct-key-sized data; in sink
-        mode the rows are joined to the stored rollup and written by
-        executors — nothing per-partition reaches the driver. The
-        approx/clean-prescreen strategies skip per-partition verdicts: an
-        HLL sketch cannot attribute cross-partition duplicates.
+        The exact path is ONE plan resolved by ONE action, so the input is
+        scanned once (the branches below share their exchanges). Its rows,
+        put together with unionByName:
+        - stats: the dup rows (``__ux``) and dup groups (``__groups``) in
+          the row flagged ``__grand = 1``;
+        - samples: the top-k duplicated keys by count (``__cnt``, ranked by
+          ``__rank``), left out under BOOLEAN_ONLY.
+        With per_partition the plan starts from a (key, partition)
+        pre-aggregate; a window over the key attaches each key's total, the
+        duplicated keys are kept, and stats becomes a rollup by partition:
+        the grand-total row holds the global values and every other row is
+        that partition's count of rows in a GLOBAL duplicate group (they sum
+        to the global unexpected_count). Without it the plan is a plain
+        groupBy(key). In sink mode the frame is written to the sink, the
+        driver reads back only the grand-total and sample rows, and the
+        per-partition rows are joined to the stored domain rollup and
+        written as verdicts by executors. The approx/clean-prescreen
+        strategies skip per-partition verdicts: an HLL sketch cannot
+        attribute cross-partition duplicates.
         """
         kw = item.kwargs
         compound = item.spec.extra.get("compound", False)
@@ -1172,102 +1211,70 @@ class ValidationRun:
             {"column_list": cols,
              "ignore_row_if": kw.get("ignore_row_if", "all_values_are_missing")}) \
             if compound else F.col(cols[0]).isNotNull()
-        g1 = None
+        kept = dfd.filter(nn)
         if self.per_partition:
-            # (key, partition) pre-agg: the global dup groups AND each
-            # partition's share of them derive from this one distinct-key-
-            # sized intermediate (map-side partial agg does the heavy lift)
-            g1 = (dfd.filter(nn).withColumn("__pid", self._pid_expr())
-                  .groupBy(*cols, "__pid")
-                  .agg(F.count(F.lit(1)).alias("__c")))
-            vc = g1.groupBy(*cols).agg(F.sum("__c").alias("__cnt"))
+            # (key, partition) pre-agg: map-side partial aggregation does the
+            # heavy lift, everything after it is distinct-key sized
+            by_key = Window.partitionBy(*cols).orderBy("__pid")
+            dup = (kept.withColumn("__pid", self._pid_expr())
+                   .groupBy(*cols, "__pid")
+                   .agg(F.count(F.lit(1)).alias("__c"))
+                   .withColumn("__cnt", F.sum("__c").over(by_key.rowsBetween(
+                       Window.unboundedPreceding, Window.unboundedFollowing)))
+                   .withColumn("__key", F.row_number().over(by_key) == 1)
+                   .filter(F.col("__cnt") > 1))
+            frame = _pid_rollup(dup, F.sum("__c").alias("__ux"),
+                                F.count_if("__key").alias("__groups"))
+            keys = dup.filter("__key")
         else:
-            vc = dfd.filter(nn).groupBy(*cols).agg(
-                F.count(F.lit(1)).alias("__cnt"))
-        dup = vc.filter(F.col("__cnt") > 1)
-        stats = dup.agg(
-            F.coalesce(F.sum("__cnt"), F.lit(0)).alias("dup_rows"),
-            F.count(F.lit(1)).alias("dup_groups")).first()
-        unexpected = int(stats["dup_rows"])
+            keys = (kept.groupBy(*cols).agg(F.count(F.lit(1)).alias("__cnt"))
+                    .filter(F.col("__cnt") > 1))
+            frame = keys.agg(F.sum("__cnt").alias("__ux"),
+                             F.count(F.lit(1)).alias("__groups"),
+                             F.lit(1).alias(_GRAND))
+        k = (0 if self.rf["result_format"] == "BOOLEAN_ONLY"
+             else self._sample_limit())
+        if k:
+            frame = frame.unionByName(
+                keys.orderBy(F.desc("__cnt"), *cols).limit(k).select(
+                    *cols, "__cnt",
+                    F.monotonically_increasing_id().alias("__rank")),
+                allowMissingColumns=True)
+        sink = self.per_partition and self.partition_verdict_sink is not None
+        if sink:
+            import os
+            upath = os.path.join(self.partition_verdict_sink,
+                                 f"urollup-domain-{didx}-u{jidx}.parquet")
+            frame.write.mode("overwrite").parquet(upath)
+            frame = dfd.sparkSession.read.parquet(upath)
+            (self._count_verdict_frame(
+                item, frame.filter(f"{_GRAND} = 0"), didx)
+             .write.mode("overwrite").parquet(os.path.join(
+                 self.partition_verdict_sink,
+                 f"verdicts-domain-{didx}-u{jidx}.parquet")))
+            frame = frame.filter(f"{_GRAND} IS NULL OR {_GRAND} = 1")
+        rows = frame.collect()
+        grand = next((r for r in rows if r[_GRAND] == 1), None)
+        unexpected = int(grand["__ux"] or 0) if grand else 0
         samples: list = []
-        if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
-            k = self._sample_limit()
-            top = dup.orderBy(F.desc("__cnt"), *cols).limit(k).collect()
-            for r in top:
-                val = r[cols[0]] if not compound else {c: r[c] for c in cols}
-                samples.extend([val] * min(int(r["__cnt"]), k - len(samples)))
-                if len(samples) >= k:
-                    break
+        for r in sorted((r for r in rows if r[_GRAND] is None),
+                        key=lambda r: r["__rank"]):
+            val = r[cols[0]] if not compound else {c: r[c] for c in cols}
+            samples.extend([val] * min(int(r["__cnt"]), k - len(samples)))
+            if len(samples) >= k:
+                break
         evr = self._map_evr(item, element, nonnull, unexpected, samples)
         if evr.result:
             evr.result["details"] = {
                 "strategy": ("exact_after_suspect_prescreen"
                              if self.unique_strategy == "auto" else "exact_groupby"),
                 "approx_distinct": approx,
-                "duplicate_groups": int(stats["dup_groups"])}
-        if g1 is not None:
-            self._emit_unique_partition_verdicts(item, g1, dup, cols,
-                                                 pid_rows, didx, jidx)
+                "duplicate_groups": int(grand["__groups"]) if grand else 0}
+        if self.per_partition and not sink:
+            self._record_count_verdicts(
+                item, pid_rows,
+                {r["__pid"]: int(r["__ux"]) for r in rows if r[_GRAND] == 0})
         return evr
-
-    def _emit_unique_partition_verdicts(self, item: CompiledItem, g1, dup,
-                                        cols: list[str],
-                                        pid_rows: list[dict] | None,
-                                        didx: int, jidx: int) -> None:
-        """Per-partition rows participating in a GLOBAL duplicate group:
-        g1 = (key, partition, count), dup = the duplicated keys. Null-safe
-        key equality — partially-null compound keys DO group (and therefore
-        duplicate) in the reference semantics."""
-        import os
-        from functools import reduce
-        g = g1.alias("g")
-        d = dup.select(*cols).alias("d")
-        cond = reduce(lambda a, b: a & b,
-                      [F.col(f"g.{c}").eqNullSafe(F.col(f"d.{c}"))
-                       for c in cols])
-        pid_dup = (g.join(d, cond, "left_semi")
-                   .groupBy("__pid").agg(F.sum("__c").alias("__dup")))
-        mostly = float(item.kwargs.get("mostly", 1.0))
-        if self.partition_verdict_sink is not None:
-            # join executor-side to the stored rollup's per-partition
-            # element/nonnull and write verdict rows distributed
-            spark = g1.sparkSession
-            rollup = (spark.read.parquet(os.path.join(
-                self.partition_verdict_sink,
-                f"rollup-domain-{didx}.parquet"))
-                .filter(F.col("__pid").isNotNull())
-                .select("__pid", item.slots["element"],
-                        item.slots["nonnull"]))
-            joined = rollup.join(pid_dup, "__pid", "left")
-            el = F.coalesce(F.col(item.slots["element"]), F.lit(0)).cast("long")
-            nn = F.coalesce(F.col(item.slots["nonnull"]), F.lit(0)).cast("long")
-            ux = F.coalesce(F.col("__dup"), F.lit(0)).cast("long")
-            success = ((el == 0) | (nn == 0)
-                       | ((nn - ux).cast("double")
-                          >= F.lit(mostly) * nn.cast("double")))
-            null_l = F.lit(None).cast("long")
-            (joined.select(
-                F.col("__pid").cast("string").alias("partition_id"),
-                *self._sink_lits(item), success.alias("success"),
-                el.alias("element_count"), (el - nn).alias("missing_count"),
-                ux.alias("unexpected_count"),
-                F.lit(None).cast("double").alias("observed_value"))
-             .select(*self._SINK_COLS)
-             .write.mode("overwrite").parquet(os.path.join(
-                 self.partition_verdict_sink,
-                 f"verdicts-domain-{didx}-u{jidx}.parquet")))
-            return
-        dups_by_pid = {r["__pid"]: int(r["__dup"] or 0)
-                       for r in pid_dup.collect()}  # bounded by #partitions
-        for prow in pid_rows or []:
-            el = int(prow[item.slots["element"]] or 0)
-            nn = int(prow[item.slots["nonnull"]] or 0)
-            ux = dups_by_pid.get(prow["__pid"], 0)
-            self._record_partition_verdict(
-                prow["__pid"], item,
-                mostly_success(el, nn, ux, item.kwargs.get("mostly", 1.0)),
-                {"unexpected_count": ux, "element_count": el,
-                 "missing_count": el - nn, "observed_value": None})
 
     def _run_most_common(self, item: CompiledItem, dfd: DataFrame, grow: dict) -> ExpectationValidationResult:
         """Most-common value(s) with the tie collect BOUNDED (`max_ties`,
@@ -1416,13 +1423,12 @@ class ValidationRun:
             spark = dfd.sparkSession
             zpath = os.path.join(self.partition_verdict_sink,
                                  f"zrollup-domain-{didx}.parquet")
-            (dfd.withColumn("__pid", self._pid_expr())
-                .rollup("__pid").agg(*exprs)
+            (_pid_rollup(dfd.withColumn("__pid", self._pid_expr()), *exprs)
                 .write.mode("overwrite").parquet(zpath))
             stored = spark.read.parquet(zpath)
-            zg = stored.filter(F.col("__pid").isNull()).collect()
+            zg = stored.filter(f"{_GRAND} = 1").collect()
             zrow = zg[0].asDict() if zg else {f"z{i}": 0 for i in range(len(items))}
-            pid_src = stored.filter(F.col("__pid").isNotNull())
+            pid_src = stored.filter(f"{_GRAND} = 0")
             null_l = F.lit(None).cast("long")
             parts = [pid_src.select(
                 F.col("__pid").cast("string").alias("partition_id"),
@@ -1441,12 +1447,10 @@ class ValidationRun:
                         self.partition_verdict_sink,
                         f"verdicts-domain-{didx}-z.parquet"))
         elif self.per_partition:
-            rows = dfd.withColumn("__pid", self._pid_expr()).rollup("__pid").agg(*exprs).collect()
-            global_rows = [r for r in rows if r["__pid"] is None]
-            zrow = global_rows[0].asDict() if global_rows else {f"z{i}": 0 for i in range(len(items))}
+            g, rows = _split_grand(_pid_rollup(
+                dfd.withColumn("__pid", self._pid_expr()), *exprs).collect())
+            zrow = g.asDict() if g else {f"z{i}": 0 for i in range(len(items))}
             for r in rows:
-                if r["__pid"] is None:
-                    continue
                 for i, item in enumerate(items):
                     self._record_partition_verdict(
                         r["__pid"], item, True, {"unexpected_count": int(r[f"z{i}"] or 0)})
@@ -1782,12 +1786,10 @@ class ValidationRun:
                         # distributed; nothing wide is collected (r4 #6)
                         grow = self._fused_pass_to_sink(dp, dfd, didx)
                     elif self.per_partition:
-                        rows = [r.asDict() for r in
-                                dfd.withColumn("__pid", self._pid_expr())
-                                .rollup("__pid").agg(*agg_list).collect()]
-                        global_rows = [r for r in rows if r["__pid"] is None]
-                        grow = global_rows[0] if global_rows else {a: None for a in dp.slot_table.exprs}
-                        pid_rows = [r for r in rows if r["__pid"] is not None]
+                        g, pid_rows = _split_grand([r.asDict() for r in _pid_rollup(
+                            dfd.withColumn("__pid", self._pid_expr()),
+                            *agg_list).collect()])
+                        grow = g or {a: None for a in dp.slot_table.exprs}
                     else:
                         first = dfd.agg(*agg_list).first()
                         grow = first.asDict() if first is not None else {a: None for a in dp.slot_table.exprs}

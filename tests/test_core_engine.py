@@ -138,6 +138,16 @@ class TestMapExpectations:
         assert not r.success
         assert r.result["element_count"] == 4
         assert r.result["unexpected_count"] == 2  # the (5, NULL) pair
+        # per_partition leaves the global EVR as it is, and the partitions'
+        # dup counts sum to it (the pair's rows sit in separate partitions)
+        suite = ExpectationSuite("t").add(
+            "expect_compound_columns_to_be_unique", column_list=["a", "b"])
+        on = validate(df, suite, result_format="COMPLETE", per_partition=True)
+        assert (on.results[0].success, on.results[0].result) == \
+            (r.success, r.result)
+        assert sorted(v["unexpected_count"]
+                      for v in on.meta["partition_verdicts"]
+                      if v["unexpected_count"]) == [1, 1]
         # any_value_is_missing opt-in drops the partially-null rows entirely
         r2 = one(df, "expect_compound_columns_to_be_unique",
                  column_list=["a", "b"], ignore_row_if="any_value_is_missing")

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcheck import ExpectationSuite, validate
-from sparkcheck.incremental import IncrementalCheckpoint
+from sparkcheck.incremental import _KLL_MAX_K, _KLL_MIN_K, IncrementalCheckpoint
 from sparkcheck.io import write_table
 
 
@@ -532,6 +532,29 @@ def test_allow_relative_error_sizes_kll_sketch(spark, tmp_path):
     # k~5400 => <=0.1% of 1000 ranks => ~1 rank ~ 1 value unit; allow 3
     assert r.result["observed_value"]["values"][0] == pytest.approx(
         full.result["observed_value"]["values"][0], abs=3)
+
+
+@pytest.mark.parametrize("kll_k", [0, -200, _KLL_MIN_K - 1, _KLL_MAX_K + 1,
+                                   8.5, True, "200"])
+def test_explicit_kll_k_out_of_range_is_a_config_error(spark, tmp_path,
+                                                        kll_k):
+    """An explicit kll_k the KLL sketch cannot take is refused when the
+    checkpoint is configured, naming the option, in strict and lenient mode
+    alike, instead of failing later inside the sketch aggregate."""
+    suite = ExpectationSuite("k").add(
+        "expect_column_quantile_values_to_be_between", column="v",
+        quantile_ranges={"quantiles": [0.5], "value_ranges": [[0, 600]]},
+        kll_k=kll_k)
+    for strict in (True, False):
+        with pytest.raises(ValueError, match=(
+                rf"kll_k=.* must be an integer in \[{_KLL_MIN_K}, {_KLL_MAX_K}\]")):
+            IncrementalCheckpoint(suite, str(tmp_path / "s"), strict=strict)
+
+
+def test_explicit_kll_k_bounds_are_accepted():
+    from sparkcheck.incremental import _kll_k_for
+    assert _kll_k_for({"kll_k": _KLL_MIN_K}) == _KLL_MIN_K
+    assert _kll_k_for({"kll_k": _KLL_MAX_K}) == _KLL_MAX_K
 
 
 def test_missing_stored_statistic_refuses_partial_merge(spark, tmp_path):

@@ -338,3 +338,52 @@ def test_unique_proportion_approx_plans_hll(spark, clips_path):
     assert "approx_count_distinct" not in exact
     assert "approx_count_distinct" in approx
     assert "count(distinct" not in approx.lower()
+
+
+def _unique_item_jobs(spark, df, monkeypatch, **validate_kw):
+    """(Spark jobs launched inside the exact uniqueness item of one
+    validate(), its EVR), counted through a job group set around the
+    item."""
+    import uuid
+
+    from sparkcheck import ExpectationSuite, validate
+    from sparkcheck.runner import ValidationRun
+
+    sc = spark.sparkContext
+    group = f"unique-budget-{uuid.uuid4().hex}"
+    inner = ValidationRun._run_unique_item
+
+    def tagged(self, *args, **kwargs):
+        sc.setJobGroup(group, group)
+        try:
+            return inner(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(ValidationRun, "_run_unique_item", tagged)
+    suite = ExpectationSuite("u").add(
+        "expect_column_values_to_be_unique", column="clip_id", mostly=0.5)
+    res = validate(df, suite, **validate_kw)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), res.results[0]
+
+
+@pytest.mark.parametrize("mode", ["global", "per_partition", "sink"])
+def test_exact_unique_job_budget(spark, clips_path, monkeypatch, tmp_path,
+                                 mode):
+    """Exact uniqueness resolves its dup stats, dup samples and
+    per-partition dup counts from ONE plan over one scan: a change that
+    adds an action (and with it a re-scan of the input) fails here. The
+    budgets are the jobs that plan takes under adaptive execution (one per
+    shuffle stage plus the result stage); sink mode adds the read-back of
+    the stored frame and the verdict write."""
+    budget = {"global": 3, "per_partition": 4, "sink": 9}[mode]
+    kw = {}
+    if mode != "global":
+        kw["per_partition"] = True
+    if mode == "sink":
+        kw["partition_verdict_sink"] = str(tmp_path / "sink")
+    jobs, evr = _unique_item_jobs(spark, spark.read.parquet(clips_path),
+                                  monkeypatch, **kw)
+    assert evr.result["unexpected_count"] > 0  # samples branch is exercised
+    assert jobs == budget, jobs

@@ -93,6 +93,23 @@ def test_unique_marks_all_duplicate_rows(spark, data):
     assert r.result["unexpected_count"] == dup_rows
     assert r.success == (dup_rows == 0)
 
+    # per_partition, by physical partition or by a partition column with
+    # nulls, leaves the global EVR as it is (sample order and duplicate
+    # groups included), and the partitions' dup counts sum to it
+    df = spark.createDataFrame(
+        [(v, None if i % 4 == 0 else i % 3) for i, v in enumerate(data)],
+        "v int, p int")
+    suite = ExpectationSuite("prop").add(
+        "expect_column_values_to_be_unique", column="v", mostly=0.5)
+    off = validate(df, suite, result_format="SUMMARY").results[0]
+    for kw in ({}, {"partition_col": "p"}):
+        on = validate(df, suite, result_format="SUMMARY", per_partition=True,
+                      **kw)
+        assert (on.results[0].success, on.results[0].result) == \
+            (off.success, off.result)
+        assert sum(v["unexpected_count"]
+                   for v in on.meta["partition_verdicts"]) == dup_rows
+
 
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])

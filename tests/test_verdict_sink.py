@@ -329,3 +329,61 @@ def test_non_row_local_items_emit_no_partition_verdicts(spark):
     assert hres.results[0].success
     hpv = {v["partition_id"] for v in hres.meta["partition_verdicts"]}
     assert hpv == {"0", "2", "3"}  # bucket 1 holds 'z': refused, not faked
+
+
+def test_null_partition_value_is_not_the_grand_total(spark, tmp_path):
+    """With partition_col, a null partition value reads __pid = null in the
+    rollup just like the grand-total row; grouping(__pid) tells them apart.
+    Every rollup site (fused, window, unique, z-score), collected and in the
+    sink, must report the per_partition=False global EVRs and give the null
+    partition verdict rows of its own."""
+    from pyspark.sql import functions as F
+    df = spark.range(0, 200, numPartitions=4).select(
+        F.col("id"),
+        F.when(F.col("id") % 10 == 0, None)
+        .otherwise((F.col("id") % 4).cast("string")).alias("part"),
+        F.when(F.col("id") % 5 == 0, None)
+        .otherwise(F.col("id") % 30).alias("v"),
+        F.when(F.col("id") % 7 == 0, None)
+        .otherwise(F.col("id") % 3).alias("w"),
+        (F.col("id") % 3).alias("g"))
+    suite = (ExpectationSuite("null-part")
+             .add("expect_column_values_to_not_be_null", column="v")
+             .add("expect_column_values_to_be_unique", column="v", mostly=0.5)
+             .add("expect_compound_columns_to_be_unique",
+                  column_list=["v", "w"], mostly=0.5)
+             .add("expect_column_values_to_be_increasing", column="v",
+                  group_by="g", order_by="id", mostly=0.5)
+             .add("expect_column_value_z_scores_to_be_less_than",
+                  column="v", threshold=1.5, mostly=0.5))
+    off = validate(df, suite, result_format="SUMMARY")
+    nn = off.results[0].result
+    assert (nn["element_count"], nn["unexpected_count"]) == (200, 40)
+    on = validate(df, suite, result_format="SUMMARY", per_partition=True,
+                  partition_col="part")
+    sink_dir = str(tmp_path / "sink")
+    sunk = validate(df, suite, result_format="SUMMARY", per_partition=True,
+                    partition_col="part", partition_verdict_sink=sink_dir)
+    for res in (on, sunk):
+        assert [(r.success, r.result) for r in res.results] == \
+            [(r.success, r.result) for r in off.results]
+
+    got = {(r["partition_id"], r["expectation_type"], r["domain"]):
+           (bool(r["success"]), r["unexpected_count"], r["element_count"],
+            r["missing_count"])
+           for r in read_partition_verdicts(spark, sink_dir).collect()}
+    want = {(v["partition_id"], v["expectation_type"], v["domain"]):
+            (v["success"], v.get("unexpected_count"), v.get("element_count"),
+             v.get("missing_count"))
+            for v in on.meta["partition_verdicts"]}
+    assert got == want
+    assert {k[0] for k in want} == {"0", "1", "2", "3", None}
+    assert len(want) == 5 * len(suite.expectations)
+    # the null partition is ids 0, 10, ..., 190: v is null on every row
+    assert want[(None, "expect_column_values_to_not_be_null", "v")] == \
+        (False, 20, 20, 0)
+    # the partitions' unexpected counts sum to the global ones
+    for r in off.results:
+        etype = r.expectation_config.expectation_type
+        assert sum(v[1] for k, v in want.items() if k[1] == etype) == \
+            r.result["unexpected_count"], etype
