@@ -271,7 +271,9 @@ class IncrementalCheckpoint:
         self.result_format = result_format
         self.tables = tables or {}
         self._fp = _suite_fingerprint(suite)
-        self._plan = compile_suite(suite.expectations)
+        # uniqueness merges through HLL sketches across snapshots, so plan
+        # the prescreen slot that _stat_exprs swaps for hll_sketch_agg
+        self._plan = compile_suite(suite.expectations, unique_strategy="approx")
         self._strategy: dict[int, str] = {}   # id(config) -> strategy
         self._unsupported: list[dict] = []
         for item in self._iter_items():

@@ -19,6 +19,7 @@ Scale design:
 from __future__ import annotations
 
 import posixpath
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -221,6 +222,28 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return per_doc.select(F.col(id_col), expr.cast("int").alias("simhash"))
 
 
+def _hadoop_location(p: str, default_fs: str) -> tuple[str, str, str]:
+    """(scheme, authority, path) of a Hadoop path. A path without a scheme
+    lives on the default filesystem, and every ``file:`` spelling
+    ('file:/x', 'file:///x') is the one local filesystem."""
+    u = urlsplit(p)
+    fs = u if u.scheme else urlsplit(default_fs)
+    authority = "" if fs.scheme == "file" else fs.netloc.lower()
+    return fs.scheme, authority, posixpath.normpath(u.path or "/")
+
+
+def _is_checkpoint_dir(existing: str, requested: str, default_fs: str) -> bool:
+    """Whether the session's checkpoint dir ``existing`` is ``requested``.
+    setCheckpointDir stores a scheme-qualified UUID SUBDIR of the requested
+    path ('/tmp/cc' -> 'file:/tmp/cc/<uuid>'), so a repeat call with the
+    same plain path matches its own directory; scheme and authority must
+    match too, or 'hdfs://nn/tmp/cc/<uuid>' would pass for a local '/tmp/cc'."""
+    ex_scheme, ex_auth, ex_path = _hadoop_location(existing, default_fs)
+    req_scheme, req_auth, req_path = _hadoop_location(requested, default_fs)
+    return ((ex_scheme, ex_auth) == (req_scheme, req_auth)
+            and req_path in (ex_path, posixpath.dirname(ex_path)))
+
+
 def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
                        id_b: str = "id_b", max_iter: int = 25,
                        checkpoint_dir: str | None = None,
@@ -260,31 +283,18 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
         # when none is configured, so this call never silently redirects
         # other df.checkpoint() users for the rest of the session. A
         # conflicting pre-set dir is an explicit error, not a clobber.
-        current = spark.sparkContext._jsc.sc().getCheckpointDir()
-        existing = current.get() if current.isDefined() else None
-
-        def _path_part(p: str) -> str:
-            # setCheckpointDir stores a scheme-qualified UUID SUBDIR of the
-            # requested path ('/tmp/cc' -> 'file:/tmp/cc/<uuid>'); compare
-            # path parts only, so a repeat call with the same plain path is
-            # recognized instead of raising on its own directory.
-            if "://" in p:  # hdfs://nn/path, s3a://bucket/path
-                rest = p.split("://", 1)[1]
-                p = rest[rest.index("/"):] if "/" in rest else "/"
-            elif p.startswith("file:"):
-                p = p[len("file:"):]
-            return posixpath.normpath(p)
-
-        if existing is None:
+        jsc = spark.sparkContext._jsc
+        current = jsc.sc().getCheckpointDir()
+        if not current.isDefined():
             spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        else:
-            req, ex = _path_part(checkpoint_dir), _path_part(existing)
-            if ex != req and posixpath.dirname(ex) != req:
-                raise ValueError(
-                    f"SparkContext already has checkpoint dir {existing!r}; "
-                    f"refusing to clobber it with {checkpoint_dir!r} — "
-                    "either omit checkpoint_dir (the session's is used) or "
-                    "set the session-level dir to the desired path")
+        elif not _is_checkpoint_dir(
+                current.get(), checkpoint_dir,
+                jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")):
+            raise ValueError(
+                f"SparkContext already has checkpoint dir {current.get()!r}; "
+                f"refusing to clobber it with {checkpoint_dir!r} — "
+                "either omit checkpoint_dir (the session's is used) or "
+                "set the session-level dir to the desired path")
 
     def _truncate(df: DataFrame, eager: bool) -> DataFrame:
         if checkpoint_dir is not None:

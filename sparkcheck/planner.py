@@ -10,7 +10,9 @@ map-condition unexpected-counts, HLL sketches, histogram buckets — over one
 domain compile into slots of ONE ``df.agg``/``df.rollup("__pid").agg`` pass.
 The reference runs one extra Spark job per materialized map metric; we fold
 the counts into the fused pass and only run extra jobs for violation samples,
-window conditions, and uniqueness dup-groups.
+window conditions, and uniqueness dup-groups. An imperative sketch slot
+(HLL++) turns off whole-stage codegen for the whole pass, so one is planned
+only when a verdict reads it.
 
 Domains: expectations sharing the same ``row_condition`` share one fused pass
 (the reference groups bundles by compute-domain id the same way).
@@ -101,7 +103,11 @@ def _nn_key(spec: ExpectationSpec, kw: dict) -> str:
     return f"col:{kw['column']}"
 
 
-def compile_suite(suite_expectations: list[ExpectationConfiguration]) -> CompiledSuite:
+def compile_suite(suite_expectations: list[ExpectationConfiguration],
+                  unique_strategy: str = "exact") -> CompiledSuite:
+    """Group the expectations into domains and their metrics into fused
+    slots. ``unique_strategy`` is the run's: the HLL++ uniqueness prescreen
+    slot is emitted only under 'approx'/'auto', whose verdicts read it."""
     plan = CompiledSuite()
     for config in suite_expectations:
         spec = get_spec(config.expectation_type)
@@ -156,16 +162,18 @@ def compile_suite(suite_expectations: list[ExpectationConfiguration]) -> Compile
                 else:
                     nn = F.lit(True)
                 _add_common_map_slots(dp, item, nn, _nn_key(spec, kw))
-                if spec.kind == "map_unique":
-                    # HLL++ prescreen in the fused pass (free) — north_star:
-                    # approx_count_distinct with exact fallback. The target
-                    # is gated on the SAME domain filter as the nonnull slot
-                    # (when() -> NULL outside the domain, which the HLL
-                    # ignores): a compound key whose struct is non-null even
-                    # when all members are null would otherwise count the
-                    # all-null group, deflating est_dups = nonnull - approx
-                    # by one group right at the 3*rsd decision band
-                    # (ADVICE r3 #4).
+                if spec.kind == "map_unique" and unique_strategy in ("approx", "auto"):
+                    # HLL++ prescreen (north_star: approx_count_distinct with
+                    # exact fallback). Not free: HLL++ is an imperative
+                    # aggregate, which turns off whole-stage codegen for the
+                    # WHOLE fused pass, so the slot is only planned when a
+                    # verdict reads it. The target is gated on the SAME
+                    # domain filter as the nonnull slot (when() -> NULL
+                    # outside the domain, which the HLL ignores): a compound
+                    # key whose struct is non-null even when all members are
+                    # null would otherwise count the all-null group,
+                    # deflating est_dups = nonnull - approx by one group
+                    # right at the 3*rsd decision band (ADVICE r3 #4).
                     target = (F.struct(*[F.col(c) for c in kw["column_list"]])
                               if spec.extra.get("compound") else F.col(kw["column"]))
                     item.slots["approx_distinct"] = dp.slot_table.add(

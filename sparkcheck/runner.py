@@ -24,6 +24,7 @@ full set available via the checkpoint results sink instead of the driver.
 
 from __future__ import annotations
 
+import logging
 import traceback
 from typing import Any
 
@@ -48,6 +49,8 @@ from .types import (
     build_statistics,
 )
 
+log = logging.getLogger("sparkcheck")
+
 UNEXPECTED_LIST_LIMIT = 10_000
 # grouping(__pid) of a partition rollup: 1 on the grand-total row, 0 on a
 # partition's row. With partition_col a null partition value also reads
@@ -66,6 +69,18 @@ def _split_grand(rows: list) -> tuple[Any, list]:
     partition rows)."""
     grand = [r for r in rows if r[_GRAND]]
     return (grand[0] if grand else None), [r for r in rows if not r[_GRAND]]
+
+
+def _pid_value(pid: Any) -> Any:
+    """A partition label as reported: the physical partition id as an int,
+    a ``partition_col`` value as is."""
+    return int(pid) if isinstance(pid, (int, bool)) else pid
+
+
+def _domain(kw: dict) -> str:
+    """The column(s) an expectation checks, as one label."""
+    return (kw.get("column") or ",".join(kw.get("column_list", []))
+            or kw.get("column_A", ""))
 
 
 def _is_valid_partition_object(po) -> bool:
@@ -124,6 +139,7 @@ class ValidationRun:
             raise ValueError(
                 "partition_verdict_sink requires per_partition=True")
         self.partition_verdicts: list[dict] = []
+        self.partition_scoring_errors: list[dict] = []
 
     # ------------------------------------------------------------- helpers
 
@@ -146,11 +162,9 @@ class ValidationRun:
     def _sink_lits(self, item: CompiledItem) -> list[Column]:
         import json as _json
         kw = item.kwargs
-        domain = (kw.get("column") or ",".join(kw.get("column_list", []))
-                  or kw.get("column_A", ""))
         return [
             F.lit(item.config.expectation_type).alias("expectation_type"),
-            F.lit(domain).alias("domain"),
+            F.lit(_domain(kw)).alias("domain"),
             F.lit(item.spec.kind).alias("kind"),
             F.lit(_json.dumps(kw, sort_keys=True, default=str))
             .alias("config_kwargs"),
@@ -482,7 +496,8 @@ class ValidationRun:
                     d = r.asDict()
                     try:
                         pevr = self._evr_from_row_quiet(item, d)
-                    except Exception:  # noqa: BLE001 — mirror collected path
+                    except Exception as exc:  # noqa: BLE001 — recorded, not raised
+                        self._partition_scoring_error(d["__pid"], item, exc)
                         continue
                     if pevr is None:
                         continue
@@ -491,8 +506,7 @@ class ValidationRun:
                     kw = item.kwargs
                     rows_out.append((
                         str(d["__pid"]), item.config.expectation_type,
-                        kw.get("column") or ",".join(kw.get("column_list", []))
-                        or kw.get("column_A", ""),
+                        _domain(kw),
                         item.spec.kind, bool(pevr.success),
                         _opt_int(res.get("element_count")),
                         _opt_int(res.get("missing_count")),
@@ -564,6 +578,14 @@ class ValidationRun:
         return ExpectationValidationResult(success=success, expectation_config=item.config, result=result)
 
     def _between_evr(self, item: CompiledItem, value: Any) -> ExpectationValidationResult:
+        """Verdict for an aggregate observed value against min/max bounds.
+
+        A DATE observed value checked against datetime bounds (the
+        dateutil-parsed ``parse_strings_as_datetimes`` strings) is compared
+        as that day's midnight; observed_value still reports the date. So
+        with a bound of '2024-01-05 00:00:00' a 2024-01-05 value fails under
+        ``strict_max`` or ``strict_min``, and a bound later that day counts
+        the whole date as before it."""
         kw = item.kwargs
         min_v, max_v = kw.get("min_value"), kw.get("max_value")
         if kw.get("parse_strings_as_datetimes"):
@@ -612,11 +634,9 @@ class ValidationRun:
         # pid is the physical partition id (int) or, with partition_col, the
         # partition's column value (any scalar type)
         self.partition_verdicts.append({
-            "partition_id": int(pid) if isinstance(pid, (int, bool)) else pid,
+            "partition_id": _pid_value(pid),
             "expectation_type": item.config.expectation_type,
-            "domain": item.kwargs.get("column")
-            or ",".join(item.kwargs.get("column_list", []))
-            or item.kwargs.get("column_A", ""),
+            "domain": _domain(item.kwargs),
             "success": bool(success),
             # full kwargs so consumers (checkpoint single-pass) can identify
             # the exact CONFIG — (type, domain) alone collides when a suite
@@ -625,6 +645,17 @@ class ValidationRun:
             "kind": item.spec.kind,
             **extra,
         })
+
+    def _partition_scoring_error(self, pid: Any, item: CompiledItem,
+                                 exc: Exception) -> None:
+        """A partition whose verdict could not be scored has no verdict row;
+        record why in meta["partition_scoring_errors"] and the log."""
+        err = {"partition_id": _pid_value(pid),
+               "expectation_type": item.config.expectation_type,
+               "domain": _domain(item.kwargs),
+               "error": f"{type(exc).__name__}: {exc}"}
+        log.warning("partition verdict not scored: %s", err, exc_info=exc)
+        self.partition_scoring_errors.append(err)
 
     def _record_count_verdicts(self, item: CompiledItem,
                                pid_rows: list[dict] | None,
@@ -1140,10 +1171,12 @@ class ValidationRun:
         (column_values_unique.py:83-87), but with a key-partitioned shuffle
         instead of a whole-table window.
 
-        HLL++ prescreen (north_star): the fused pass already computed
-        approx_count_distinct. With unique_strategy='approx' the verdict uses
-        the sketch alone (no second job — for exploratory scans); 'exact'
-        (default) always resolves exact dup counts.
+        HLL++ prescreen (north_star): under unique_strategy='approx'/'auto'
+        the fused pass also computed approx_count_distinct. With 'approx' the
+        verdict uses the sketch alone (no second job — for exploratory
+        scans); 'exact' (default) always resolves exact dup counts and plans
+        no sketch, so its details report the exact distinct count
+        (nonnull - dup rows + dup groups) instead of the estimate.
 
         The exact path is ONE plan resolved by ONE action, so the input is
         scanned once (the branches below share their exchanges). Its rows,
@@ -1170,10 +1203,10 @@ class ValidationRun:
         cols = kw["column_list"] if compound else [kw["column"]]
         element = int(grow[item.slots["element"]] or 0)
         nonnull = int(grow[item.slots["nonnull"]] or 0)
-        approx = int(grow[item.slots["approx_distinct"]] or 0)
-
-        rsd = float(kw.get("rsd", 0.05))
+        details: dict = {"strategy": "exact_groupby"}
         if self.unique_strategy in ("approx", "auto"):
+            approx = int(grow[item.slots["approx_distinct"]] or 0)
+            rsd = float(kw.get("rsd", 0.05))
             # HLL++ prescreen (north_star): the fused pass already paid for
             # approx_count_distinct. est_dups beyond the 3*rsd noise band is
             # REAL duplication; inside the band the sketch cannot distinguish
@@ -1182,7 +1215,9 @@ class ValidationRun:
             tolerated = 3.0 * rsd * max(nonnull, 1)
             suspect = est_dups > tolerated
             if self.unique_strategy == "auto" and suspect:
-                pass  # fall through to the exact groupBy job below
+                # fall through to the exact groupBy job below
+                details = {"strategy": "exact_after_suspect_prescreen",
+                           "approx_distinct": approx}
             else:
                 if self.unique_strategy == "auto":
                     # clean prescreen: no detectable duplicates at the
@@ -1263,13 +1298,12 @@ class ValidationRun:
             samples.extend([val] * min(int(r["__cnt"]), k - len(samples)))
             if len(samples) >= k:
                 break
+        groups = int(grand["__groups"]) if grand else 0
         evr = self._map_evr(item, element, nonnull, unexpected, samples)
         if evr.result:
             evr.result["details"] = {
-                "strategy": ("exact_after_suspect_prescreen"
-                             if self.unique_strategy == "auto" else "exact_groupby"),
-                "approx_distinct": approx,
-                "duplicate_groups": int(grand["__groups"]) if grand else 0}
+                **details, "distinct_count": nonnull - unexpected + groups,
+                "duplicate_groups": groups}
         if self.per_partition and not sink:
             self._record_count_verdicts(
                 item, pid_rows,
@@ -1735,7 +1769,7 @@ class ValidationRun:
                     })
                 continue
             plannable.append(config)
-        plan = compile_suite(plannable)
+        plan = compile_suite(plannable, self.unique_strategy)
 
         def record(config: ExpectationConfiguration, fn) -> None:
             try:
@@ -1819,8 +1853,8 @@ class ValidationRun:
                                  "element_count": pevr.result.get("element_count"),
                                  "missing_count": pevr.result.get("missing_count"),
                                  "observed_value": _jsonable(pevr.result.get("observed_value"))})
-                    except Exception:  # noqa: BLE001
-                        pass
+                    except Exception as exc:  # noqa: BLE001 — recorded, not raised
+                        self._partition_scoring_error(prow["__pid"], item, exc)
 
             if dp.dependent_items:
                 try:
@@ -1843,9 +1877,12 @@ class ValidationRun:
         for config in suite.expectations:
             results.append(evrs[id(config)])
         success = all(r.success for r in results)
+        meta = {"expectation_suite_name": suite.expectation_suite_name}
+        if self.per_partition:
+            meta["partition_scoring_errors"] = self.partition_scoring_errors
         return ExpectationSuiteValidationResult(
             success=success, results=results, statistics=build_statistics(results),
-            meta={"expectation_suite_name": suite.expectation_suite_name})
+            meta=meta)
 
     def _evr_from_row_quiet(self, item: CompiledItem, row: dict) -> ExpectationValidationResult | None:
         """Per-partition verdict from a rollup row — no sample collection.

@@ -389,6 +389,34 @@ class TestDuplicateClusters:
         with _pytest.raises(ValueError, match="refusing to clobber"):
             duplicate_clusters(pairs, checkpoint_dir=str(tmp_path / "cc2"))
 
+    def test_checkpoint_dir_on_another_filesystem_is_refused(self):
+        """The session's checkpoint dir matches a requested one only on the
+        same filesystem: 'hdfs://nn/tmp/cc/<uuid>' is not a local '/tmp/cc'.
+        A bare path lives on fs.defaultFS, and every 'file:' spelling is
+        the local filesystem. The session is faked, so no HDFS is touched."""
+        from types import SimpleNamespace
+
+        from sparkcheck.pipeline.dedup import _is_checkpoint_dir, duplicate_clusters
+        local = "file:///"
+        assert _is_checkpoint_dir("file:/tmp/cc/0a1b", "/tmp/cc", local)
+        assert _is_checkpoint_dir("file:/tmp/cc/0a1b", "file:///tmp/cc/", local)
+        assert _is_checkpoint_dir("hdfs://nn/tmp/cc/0a1b", "hdfs://nn/tmp/cc", local)
+        assert _is_checkpoint_dir("hdfs://nn/tmp/cc/0a1b", "/tmp/cc", "hdfs://nn")
+        assert not _is_checkpoint_dir("hdfs://nn/tmp/cc/0a1b", "/tmp/cc", local)
+        assert not _is_checkpoint_dir("hdfs://nn/tmp/cc/0a1b", "file:/tmp/cc", "hdfs://nn")
+        assert not _is_checkpoint_dir("hdfs://nn/tmp/cc/0a1b", "hdfs://nn2/tmp/cc", local)
+        assert not _is_checkpoint_dir("s3a://b/tmp/cc/0a1b", "hdfs://b/tmp/cc", local)
+
+        stored = SimpleNamespace(isDefined=lambda: True,
+                                 get=lambda: "hdfs://nn/tmp/cc/0a1b")
+        jsc = SimpleNamespace(
+            sc=lambda: SimpleNamespace(getCheckpointDir=lambda: stored),
+            hadoopConfiguration=lambda: SimpleNamespace(get=lambda k, d: d))
+        pairs = SimpleNamespace(sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(_jsc=jsc)))
+        with pytest.raises(ValueError, match="refusing to clobber"):
+            duplicate_clusters(pairs, checkpoint_dir="/tmp/cc")
+
 
 class TestLangIdEdges:
     def test_empty_and_null_text(self, spark):

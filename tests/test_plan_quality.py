@@ -387,3 +387,57 @@ def test_exact_unique_job_budget(spark, clips_path, monkeypatch, tmp_path,
                                   monkeypatch, **kw)
     assert evr.result["unexpected_count"] > 0  # samples branch is exercised
     assert jobs == budget, jobs
+
+
+def _contract_shaped_suite():
+    from sparkcheck import ExpectationSuite
+    return (ExpectationSuite("contract")
+            .add("expect_column_values_to_not_be_null", column="clip_id",
+                 mostly=0.999)
+            .add("expect_column_values_to_match_regex", column="clip_id",
+                 regex=r"^clip-[0-9]{10}$", mostly=0.99)
+            .add("expect_column_values_to_be_unique", column="clip_id",
+                 mostly=0.99)
+            .add("expect_column_values_to_be_between", column="sr_hz",
+                 min_value=8000, max_value=48000, mostly=0.999)
+            .add("expect_column_values_to_be_in_set", column="codec",
+                 value_set=["wav", "flac", "mp3", "opus"], mostly=0.999)
+            .add("expect_column_value_lengths_to_be_between",
+                 column="transcript", min_value=5, max_value=400, mostly=0.99)
+            .add("expect_column_mean_to_be_between", column="dur_ms",
+                 min_value=2000, max_value=5000)
+            .add("expect_column_stdev_to_be_between", column="dur_ms",
+                 min_value=100, max_value=5000)
+            .add("expect_column_kl_divergence_to_be_less_than",
+                 column="dur_ms", threshold=1.0, tail_weight_holdout=0.01,
+                 partition_object={"bins": [200, 1500, 5000, 30000],
+                                   "weights": [0.4, 0.4, 0.2]})
+            .add("expect_table_row_count_to_be_between", min_value=1))
+
+
+@pytest.mark.parametrize("strategy", ["exact", "approx", "auto"])
+def test_fused_pass_stays_whole_stage_codegen(spark, clips_path, strategy):
+    """An imperative aggregate slot (HLL++) turns off whole-stage codegen
+    for the whole fused pass, so under exact uniqueness — whose verdict
+    never reads an HLL estimate — the planner plans none, and every
+    HashAggregate of the executed fused pass carries its '*(n)' codegen
+    prefix, in the global agg and in the per-partition rollup form. A slot
+    that silently de-codegens the pass fails here. Under 'approx'/'auto'
+    the prescreen reads the sketch, so its slot is planned."""
+    from sparkcheck.runner import _pid_rollup
+    plan = compile_suite(_contract_shaped_suite().expectations, strategy)
+    (dp,) = plan.domains.values()
+    hll = [k for k in dp.slot_table.keys if k.startswith("hll::")]
+    (unique,) = dp.job_items
+    if strategy != "exact":
+        assert len(hll) == 1 and "approx_distinct" in unique.slots
+        return
+    assert not hll and "approx_distinct" not in unique.slots
+    df = spark.read.parquet(clips_path)
+    for fused in (df.agg(*dp.slot_table.agg_list),
+                  _pid_rollup(df.withColumn("__pid", F.spark_partition_id()),
+                              *dp.slot_table.agg_list)):
+        aggs = [line for line in _executed_plan(fused).splitlines()
+                if "Aggregate" in line]
+        assert aggs and all(re.search(r"\*\(\d+\) HashAggregate", line)
+                            for line in aggs), "\n".join(aggs)

@@ -5,13 +5,16 @@ semantics (mostly denominator, null filtering, strictness, vacuous truth)."""
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sparkcheck import ExpectationSuite, validate
+from sparkcheck.runner import read_partition_verdicts
 
 VALUES = st.lists(
     st.one_of(st.none(), st.integers(-20, 20)), min_size=0, max_size=40)
+# suspect to the HLL prescreen: 'auto' resolves it with the exact job
+DUP_HEAVY = [1, 1, 1, 2, 2, None, 3, 3, 3, 3, None]
 
 
 def _run(spark, data, etype, **kw):
@@ -84,7 +87,8 @@ def test_in_set_matches_model(spark, data, vset, mostly):
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=VALUES)
-def test_unique_marks_all_duplicate_rows(spark, data):
+@example(data=DUP_HEAVY)
+def test_unique_marks_all_duplicate_rows(spark, tmp_path_factory, data):
     r = _run(spark, data, "expect_column_values_to_be_unique")
     nonnull = [v for v in data if v is not None]
     from collections import Counter
@@ -93,22 +97,61 @@ def test_unique_marks_all_duplicate_rows(spark, data):
     assert r.result["unexpected_count"] == dup_rows
     assert r.success == (dup_rows == 0)
 
-    # per_partition, by physical partition or by a partition column with
-    # nulls, leaves the global EVR as it is (sample order and duplicate
-    # groups included), and the partitions' dup counts sum to it
-    df = spark.createDataFrame(
-        [(v, None if i % 4 == 0 else i % 3) for i, v in enumerate(data)],
-        "v int, p int")
-    suite = ExpectationSuite("prop").add(
-        "expect_column_values_to_be_unique", column="v", mostly=0.5)
-    off = validate(df, suite, result_format="SUMMARY").results[0]
-    for kw in ({}, {"partition_col": "p"}):
+    # a single key, a compound key and a partially-null compound key (an
+    # all-null compound key is outside the default domain): the exact
+    # distinct count and dup rows match a brute-force count. per_partition,
+    # by physical partition, by a partition column with nulls, or into a
+    # sink, leaves the global EVRs as they are (sample order, duplicate
+    # groups and distinct count included), and the partitions' dup counts
+    # sum to the global ones
+    rows = [(v, None if i % 4 == 0 else i % 3, 99 if v is None else v, i % 2)
+            for i, v in enumerate(data)]
+    keys = {"v": [(v,) for v, _, _, _ in rows if v is not None],
+            "w,q": [(w, q) for _, _, w, q in rows],
+            "v,p": [(v, p) for v, p, _, _ in rows if (v, p) != (None, None)]}
+    df = spark.createDataFrame(rows, "v int, p int, w int, q int")
+    suite = (ExpectationSuite("prop")
+             .add("expect_column_values_to_be_unique", column="v", mostly=0.5)
+             .add("expect_compound_columns_to_be_unique",
+                  column_list=["w", "q"], mostly=0.5)
+             .add("expect_compound_columns_to_be_unique",
+                  column_list=["v", "p"], mostly=0.5))
+
+    def dups(ks):
+        return sum(n for n in Counter(ks).values() if n > 1)
+
+    off = validate(df, suite, result_format="SUMMARY").results
+    for evr, ks in zip(off, keys.values()):
+        assert evr.result["unexpected_count"] == dups(ks)
+        assert evr.result["details"]["distinct_count"] == len(set(ks))
+        assert "approx_distinct" not in evr.result["details"]
+    sink = str(tmp_path_factory.mktemp("usink"))
+    for kw in ({}, {"partition_col": "p"}, {"partition_verdict_sink": sink}):
         on = validate(df, suite, result_format="SUMMARY", per_partition=True,
                       **kw)
-        assert (on.results[0].success, on.results[0].result) == \
-            (off.success, off.result)
-        assert sum(v["unexpected_count"]
-                   for v in on.meta["partition_verdicts"]) == dup_rows
+        assert [(e.success, e.result) for e in on.results] == \
+            [(e.success, e.result) for e in off]
+        verdicts = (on.meta["partition_verdicts"] if "partition_verdict_sink"
+                    not in kw else read_partition_verdicts(spark, sink).collect())
+        for dom, ks in keys.items():
+            assert sum(v["unexpected_count"] for v in verdicts
+                       if v["domain"] == dom) == dups(ks)
+
+    # 'auto': a suspect prescreen falls through to the exact job and reports
+    # the sketch's estimate next to the exact count
+    auto = validate(df, suite, result_format="SUMMARY",
+                    unique_strategy="auto").results
+    for evr, ks in zip(auto, keys.values()):
+        d = evr.result["details"]
+        assert "approx_distinct" in d
+        if d["strategy"] == "exact_after_suspect_prescreen":
+            assert d["distinct_count"] == len(set(ks))
+            assert evr.result["unexpected_count"] == dups(ks)
+        else:
+            assert d["strategy"] == "hll_prescreen_clean"
+    if data == DUP_HEAVY:
+        assert auto[0].result["details"]["strategy"] == \
+            "exact_after_suspect_prescreen"
 
 
 @settings(max_examples=15, deadline=None,

@@ -387,3 +387,50 @@ def test_null_partition_value_is_not_the_grand_total(spark, tmp_path):
         etype = r.expectation_config.expectation_type
         assert sum(v[1] for k, v in want.items() if k[1] == etype) == \
             r.result["unexpected_count"], etype
+
+
+@pytest.mark.parametrize("sink", [False, True])
+def test_partition_scoring_error_is_recorded(spark, tmp_path, monkeypatch,
+                                             caplog, sink):
+    """A partition whose verdict raises while being scored is reported in
+    meta["partition_scoring_errors"] and the "sparkcheck" log, and only that
+    partition's row is missing; the other partitions and the global EVR
+    are unaffected. String bounds keep the max item off the Catalyst sink
+    path, so sink mode scores it through the narrow collected fallback."""
+    from sparkcheck.runner import ValidationRun
+    df = spark.createDataFrame(
+        [(i % 3, f"s{i % 7}") for i in range(60)], "p int, s string")
+    suite = ExpectationSuite("err").add(
+        "expect_column_max_to_be_between", column="s",
+        min_value="a", max_value="z")
+    inner = ValidationRun._evr_from_row_quiet
+
+    def flaky(self, item, row):
+        if row["__pid"] == 1:
+            raise RuntimeError("boom")
+        return inner(self, item, row)
+
+    monkeypatch.setattr(ValidationRun, "_evr_from_row_quiet", flaky)
+    kw = {"partition_verdict_sink": str(tmp_path / "sink")} if sink else {}
+    with caplog.at_level("WARNING", logger="sparkcheck"):
+        res = validate(df, suite, per_partition=True, partition_col="p", **kw)
+    assert res.results[0].success
+    assert res.meta["partition_scoring_errors"] == [{
+        "partition_id": 1, "expectation_type": "expect_column_max_to_be_between",
+        "domain": "s", "error": "RuntimeError: boom"}]
+    assert any("boom" in r.getMessage() for r in caplog.records
+               if r.name == "sparkcheck")
+    pids = ([r["partition_id"] for r in
+             read_partition_verdicts(spark, str(tmp_path / "sink")).collect()]
+            if sink else
+            [str(v["partition_id"]) for v in res.meta["partition_verdicts"]])
+    assert sorted(pids) == ["0", "2"]
+
+
+def test_clean_run_reports_no_partition_scoring_errors(spark):
+    df = spark.createDataFrame([(i,) for i in range(20)], "v int")
+    suite = ExpectationSuite("ok").add(
+        "expect_column_values_to_not_be_null", column="v")
+    assert validate(df, suite, per_partition=True
+                    ).meta["partition_scoring_errors"] == []
+    assert "partition_scoring_errors" not in validate(df, suite).meta
