@@ -244,6 +244,40 @@ class Checkpoint:
         digest = hashlib.md5(str(gid).encode()).hexdigest()[:12]
         return f"group-{digest}.parquet"
 
+    def _verdict_rows(self, snapshot_id: str, epoch: int):
+        """Empty verdict-store columns (VERDICT_FIELDS) and ``emit``, which
+        appends one row to them: from an EVR (``evr=``), or from one
+        group's counts."""
+        rows: dict[str, list] = {f: [] for f in VERDICT_FIELDS}
+
+        def emit(gid, etype: str, kw: dict, *, count_based: bool, evr=None,
+                 success=None, element=None, missing=None, unexpected=None):
+            sample_json = "[]"
+            if evr is not None:
+                r = evr.result
+                success, element, missing, unexpected = (
+                    evr.success, r.get("element_count"),
+                    r.get("missing_count"), r.get("unexpected_count"))
+                sample_json = json.dumps(
+                    r.get("partial_unexpected_list", []), default=str)
+            element = int(element or 0)
+            row = {
+                "group_id": str(gid), "snapshot_id": snapshot_id,
+                "checkpoint_epoch": epoch,
+                "suite_name": self.suite.expectation_suite_name,
+                "config_id": config_id(etype, kw), "expectation_type": etype,
+                "domain": (kw.get("column")
+                           or ",".join(kw.get("column_list", [])) or ""),
+                "success": bool(success), "element_count": element,
+                "nonnull_count": element - int(missing or 0),
+                "unexpected_count": int(unexpected or 0),
+                "mostly": (float(kw.get("mostly", 1.0)) if count_based
+                           else None),
+                "unexpected_sample_json": sample_json}
+            for f in VERDICT_FIELDS:
+                rows[f].append(row[f])
+        return rows, emit
+
     def run(self, df: DataFrame, *, snapshot_id: str = "snap-0",
             fail_after_groups: int | None = None) -> dict:
         """Validate group-by-group, committing after each. ``fail_after_groups``
@@ -264,7 +298,7 @@ class Checkpoint:
                 gdf, tables=self.tables, result_format=self.result_format,
                 unique_strategy=self.unique_strategy)
             result = run.run(self.suite)
-            rows = {f: [] for f in VERDICT_FIELDS}
+            rows, emit = self._verdict_rows(snapshot_id, epoch)
             for evr in result.results:
                 from .expectations.defs import get_spec
                 kw = evr.expectation_config.kwargs
@@ -276,24 +310,7 @@ class Checkpoint:
                         or (kind == "referential" and "unexpected_count" in evr.result))
                 except KeyError:
                     count_based = False
-                element = int(evr.result.get("element_count") or 0)
-                missing = int(evr.result.get("missing_count") or 0)
-                rows["group_id"].append(str(gid))
-                rows["snapshot_id"].append(snapshot_id)
-                rows["checkpoint_epoch"].append(epoch)
-                rows["suite_name"].append(self.suite.expectation_suite_name)
-                rows["config_id"].append(config_id(etype, kw))
-                rows["expectation_type"].append(etype)
-                rows["domain"].append(
-                    kw.get("column") or ",".join(kw.get("column_list", [])) or "")
-                rows["success"].append(bool(evr.success))
-                rows["element_count"].append(element)
-                rows["nonnull_count"].append(element - missing)
-                rows["unexpected_count"].append(int(evr.result.get("unexpected_count") or 0))
-                rows["mostly"].append(
-                    float(kw.get("mostly", 1.0)) if count_based else None)
-                rows["unexpected_sample_json"].append(
-                    json.dumps(evr.result.get("partial_unexpected_list", []), default=str))
+                emit(gid, etype, kw, count_based=count_based, evr=evr)
             table = pa.table(rows, schema=VERDICT_SCHEMA)
             # idempotent per-group file: a crashed, uncommitted write is
             # simply overwritten on resume — no dup verdict rows
@@ -385,26 +402,7 @@ class Checkpoint:
             partition_col="__grp", unique_strategy=self.unique_strategy,
             partition_verdict_sink=work)
         result = run.run(self.suite)
-
-        rows = {f: [] for f in VERDICT_FIELDS}
-
-        def emit(gid, etype, kw, success, element, nonnull, unexpected,
-                 count_based, sample_json="[]"):
-            rows["group_id"].append(str(gid))
-            rows["snapshot_id"].append(snapshot_id)
-            rows["checkpoint_epoch"].append(epoch)
-            rows["suite_name"].append(self.suite.expectation_suite_name)
-            rows["config_id"].append(config_id(etype, kw))
-            rows["expectation_type"].append(etype)
-            rows["domain"].append(
-                kw.get("column") or ",".join(kw.get("column_list", [])) or "")
-            rows["success"].append(bool(success))
-            rows["element_count"].append(int(element or 0))
-            rows["nonnull_count"].append(int(nonnull or 0))
-            rows["unexpected_count"].append(int(unexpected or 0))
-            rows["mostly"].append(
-                float(kw.get("mostly", 1.0)) if count_based else None)
-            rows["unexpected_sample_json"].append(sample_json)
+        rows, emit = self._verdict_rows(snapshot_id, epoch)
 
         # per-group rows only for count-decomposable kinds (map/audio):
         # their summed counts equal the whole-table run, so the rollup's
@@ -419,11 +417,10 @@ class Checkpoint:
                 continue
             etype, kw = pv["expectation_type"], pv["config_kwargs"]
             grouped_configs.add(config_id(etype, kw))
-            element = pv["element_count"]
-            missing = pv.get("missing_count") or 0
-            emit(pv["partition_id"], etype, kw, pv["success"],
-                 element, (element or 0) - missing,
-                 pv.get("unexpected_count"), count_based=True)
+            emit(pv["partition_id"], etype, kw, count_based=True,
+                 success=pv["success"], element=pv["element_count"],
+                 missing=pv.get("missing_count"),
+                 unexpected=pv.get("unexpected_count"))
         if distributed_verdicts:
             # map-kind per-group rows were diverted to the work sink; write
             # them into the store with a Spark job (no driver materialization)
@@ -434,14 +431,7 @@ class Checkpoint:
             kw = evr.expectation_config.kwargs
             if config_id(etype, kw) in grouped_configs:
                 continue  # covered by per-group rows
-            element = int(evr.result.get("element_count") or 0)
-            missing = int(evr.result.get("missing_count") or 0)
-            emit("__global__", etype, kw, evr.success, element,
-                 element - missing,
-                 int(evr.result.get("unexpected_count") or 0),
-                 count_based=False,
-                 sample_json=json.dumps(
-                     evr.result.get("partial_unexpected_list", []), default=str))
+            emit("__global__", etype, kw, count_based=False, evr=evr)
         table = pa.table(rows, schema=VERDICT_SCHEMA)
         pq.write_table(table, os.path.join(
             self.store_path, "verdicts", "single-pass.parquet"))
@@ -470,26 +460,26 @@ class Checkpoint:
         write the result as a parquet directory inside the store. Returns
         the config_ids covered (their global rows are skipped, exactly like
         the collected path)."""
-        import json as _json
-
-        from .planner import compile_suite
+        from .expectations.defs import get_spec
         from .runner import read_partition_verdicts
         # keyed dict, not a list: a suite containing two IDENTICAL
         # expectation configs would make the sink join many-to-many and
         # rollup() double-count those verdicts (duplicate configs share one
-        # config_id, so one mapping row serves both)
+        # config_id, so one mapping row serves both). The kwargs JSON is the
+        # sink's config_kwargs: the config's kwargs over the spec defaults.
         mapping: dict[tuple, tuple] = {}
         grouped = set()
-        for dp in compile_suite(self.suite.expectations).domains.values():
-            for item in dp.fused_items:
-                if item.spec.kind != "map":
-                    continue
-                cid = config_id(item.config.expectation_type, item.kwargs)
-                kwj = _json.dumps(item.kwargs, sort_keys=True, default=str)
-                mapping[(item.config.expectation_type, kwj)] = (
-                    item.config.expectation_type, kwj, cid,
-                    float(item.kwargs.get("mostly", 1.0)))
-                grouped.add(cid)
+        for config in self.suite.expectations:
+            etype = config.expectation_type
+            spec = get_spec(etype)
+            if spec.kind != "map":
+                continue
+            kw = {**spec.defaults, **config.kwargs}
+            cid = config_id(etype, kw)
+            kwj = json.dumps(kw, sort_keys=True, default=str)
+            mapping[(etype, kwj)] = (etype, kwj, cid,
+                                     float(kw.get("mostly", 1.0)))
+            grouped.add(cid)
         if not mapping:
             return set()
         m = spark.createDataFrame(

@@ -86,7 +86,8 @@ from .checkpoint import config_id
 from .planner import CompiledItem, compile_suite
 from .results import (format_map_output, mostly_success,
                       normalize_result_format)
-from .runner import UNEXPECTED_LIST_LIMIT, ValidationRun
+from .runner import (UNEXPECTED_LIST_LIMIT, ValidationRun, _agg_custom_evr,
+                     _between_evr, _drift_evr)
 from .types import (ExpectationSuite, ExpectationSuiteValidationResult,
                     ExpectationValidationResult, build_statistics)
 
@@ -710,9 +711,10 @@ class IncrementalCheckpoint:
 
     def _verdicts(self, merged_domains: dict,
                   deltas: list[dict]) -> ExpectationSuiteValidationResult:
-        # a detached ValidationRun shim: the fused-EVR methods used below
-        # (_map_evr / _between_evr / _agg_custom_evr / _drift_evr on explicit
-        # partition_objects) are row-arithmetic only — no DataFrame touched
+        # a detached ValidationRun shim for _map_evr's result format; the
+        # fused-EVR functions used below (_between_evr / _agg_custom_evr /
+        # _drift_evr on explicit partition_objects) get no DataFrame, so
+        # they are row arithmetic only
         vr = ValidationRun.__new__(ValidationRun)
         vr.rf = normalize_result_format(self.result_format)
         vr.rf.setdefault("unexpected_list_limit", UNEXPECTED_LIST_LIMIT)
@@ -831,7 +833,7 @@ class IncrementalCheckpoint:
                 value = inv_rows.get(f"inc::hll::{c}")
             else:  # pragma: no cover
                 raise ValueError(what)
-            return vr._between_evr(item, value)
+            return _between_evr(item, value)
         if strat.startswith("kll:"):
             c = kw["column"]
             k = _kll_k_for(kw)
@@ -843,7 +845,7 @@ class IncrementalCheckpoint:
                              "within the sketch's normalized rank-error "
                              "bound of a full recompute")}
             if strat == "kll:median":
-                evr = vr._between_evr(item, qmap.get(0.5))
+                evr = _between_evr(item, qmap.get(0.5))
                 evr.result.setdefault("details", {}).update(note)
                 return evr
             quantiles = [float(q) for q in item.info["quantiles"]]
@@ -866,7 +868,7 @@ class IncrementalCheckpoint:
             distinct = inv_rows.get(f"inc::hllp::{c}::{lg}")
             nonnull = int(inv_rows.get(f"inc::nncnt::{c}") or 0)
             value = (distinct / nonnull) if nonnull else None
-            evr = vr._between_evr(item, value)
+            evr = _between_evr(item, value)
             evr.result.setdefault("details", {}).update({
                 "strategy": "hll_union_incremental",
                 "approx_distinct": distinct,
@@ -876,7 +878,7 @@ class IncrementalCheckpoint:
                          "standard error ≈ 1.04/sqrt(2^lgConfigK)")})
             return evr
         if strat in ("row_count", "distinct_set"):
-            return vr._agg_custom_evr(item, row)
+            return _agg_custom_evr(item, row)
         if strat == "drift":
             if "values" in item.info:
                 nonnull = float(row[item.slots["nonnull"]] or 0)
@@ -887,8 +889,7 @@ class IncrementalCheckpoint:
                         "categorical drift merge saw values outside the "
                         "expected set; resolving their mass needs per-value "
                         "counts — run a full validation for this check")
-            item.info["dfd"] = None  # guard: merge path must never scan
-            return vr._drift_evr(item, row)
+            return _drift_evr(item, row)
         raise ValueError(strat)  # pragma: no cover
 
 

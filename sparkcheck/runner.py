@@ -24,10 +24,14 @@ full set available via the checkpoint results sink instead of the driver.
 
 from __future__ import annotations
 
+import json
 import logging
+import math
 import traceback
+from decimal import Decimal
 from typing import Any
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -160,270 +164,8 @@ class ValidationRun:
     # ------------------------------------- distributed verdict sink (r4)
 
     def _sink_lits(self, item: CompiledItem) -> list[Column]:
-        import json as _json
-        kw = item.kwargs
-        return [
-            F.lit(item.config.expectation_type).alias("expectation_type"),
-            F.lit(_domain(kw)).alias("domain"),
-            F.lit(item.spec.kind).alias("kind"),
-            F.lit(_json.dumps(kw, sort_keys=True, default=str))
-            .alias("config_kwargs"),
-        ]
-
-    def _sink_verdict_select(self, item: CompiledItem) -> list[Column] | None:
-        """Spark-expression verdict derivation for one fused item over stored
-        rollup rows — the distributed twin of _evr_from_row_quiet. Returns
-        None when the verdict is not Catalyst-expressible (exact-opt-in
-        quantiles / non-numeric or datetime bounds / NaN-bearing value
-        sets); those fall back to a NARROW driver collect of just that
-        item's slot columns. Drift items go through _sink_drift_frame
-        (Arrow-scored) instead."""
-        spec, kw = item.spec, item.kwargs
-        pid = F.col("__pid").cast("string").alias("partition_id")
-        lits = self._sink_lits(item)
-        null_l = F.lit(None).cast("long")
-        null_d = F.lit(None).cast("double")
-
-        def _between(v: Column) -> Column:
-            lo, hi = kw.get("min_value"), kw.get("max_value")
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (v > lo if kw.get("strict_min") else v >= lo)
-            if hi is not None:
-                cond = cond & (v < hi if kw.get("strict_max") else v <= hi)
-            # validate_metric_value_between: a NULL observed value fails
-            return F.when(v.isNull(), F.lit(False)).otherwise(cond)
-
-        def _numeric_bounds() -> bool:
-            lo, hi = kw.get("min_value"), kw.get("max_value")
-            num = (int, float, type(None))
-            return (isinstance(lo, num) and isinstance(hi, num)
-                    and not isinstance(lo, bool) and not isinstance(hi, bool)
-                    and not kw.get("parse_strings_as_datetimes"))
-
-        if spec.kind == "map":
-            el = F.coalesce(F.col(item.slots["element"]), F.lit(0)).cast("long")
-            nn = F.coalesce(F.col(item.slots["nonnull"]), F.lit(0)).cast("long")
-            ux = F.coalesce(F.col(item.slots["unexpected"]), F.lit(0)).cast("long")
-            mostly = float(kw.get("mostly", 1.0))
-            # mostly_success(): vacuous pass on empty/all-null, else
-            # (nonnull - unexpected) / nonnull >= mostly
-            success = ((el == 0) | (nn == 0)
-                       | ((nn - ux).cast("double")
-                          >= F.lit(mostly) * nn.cast("double")))
-            return [pid, *lits, success.alias("success"),
-                    el.alias("element_count"),
-                    (el - nn).alias("missing_count"),
-                    ux.alias("unexpected_count"),
-                    null_d.alias("observed_value")]
-        if spec.kind == "agg":
-            if not _numeric_bounds():
-                return None
-            v = F.col(item.slots["value"]).cast("double")
-            return [pid, *lits, _between(v).alias("success"),
-                    null_l.alias("element_count"),
-                    null_l.alias("missing_count"),
-                    null_l.alias("unexpected_count"),
-                    v.alias("observed_value")]
-        if spec.kind == "agg_custom":
-            handler = spec.extra["handler"]
-            if handler == "row_count":
-                v = F.coalesce(F.col(item.slots["value"]), F.lit(0))
-                success = (v == int(kw["value"])
-                           if spec.extra["mode"] == "equal"
-                           else _between(v) if _numeric_bounds() else None)
-                if success is None:
-                    return None
-                return [pid, *lits, success.alias("success"),
-                        null_l.alias("element_count"),
-                        null_l.alias("missing_count"),
-                        null_l.alias("unexpected_count"),
-                        v.cast("double").alias("observed_value")]
-            if handler == "unique_proportion":
-                if not _numeric_bounds():
-                    return None
-                nn = F.coalesce(F.col(item.slots["nonnull"]), F.lit(0))
-                v = F.when(nn > 0, F.col(item.slots["distinct"])
-                           .cast("double") / nn.cast("double"))
-                return [pid, *lits, _between(v).alias("success"),
-                        null_l.alias("element_count"),
-                        null_l.alias("missing_count"),
-                        null_l.alias("unexpected_count"),
-                        v.alias("observed_value")]
-            if handler == "quantiles" and "value" in item.slots:
-                # fused percentile_approx array; exact-opt-in (approxQuantile
-                # job) has no slot and stays on the driver fallback
-                vals = F.col(item.slots["value"])
-                ranges = kw["quantile_ranges"]["value_ranges"]
-                conds = [F.lit(len(ranges) > 0)]
-                for i, (lo, hi) in enumerate(ranges):
-                    v = F.element_at(vals, i + 1)
-                    c = v.isNotNull()
-                    if lo is not None:
-                        c = c & (v >= lo)
-                    if hi is not None:
-                        c = c & (v <= hi)
-                    conds.append(c)
-                from functools import reduce as _reduce
-                success = F.when(
-                    vals.isNull() | (F.size(vals) < len(ranges)),
-                    F.lit(False)).otherwise(
-                        _reduce(lambda a, b: a & b, conds))
-                return [pid, *lits, success.alias("success"),
-                        null_l.alias("element_count"),
-                        null_l.alias("missing_count"),
-                        null_l.alias("unexpected_count"),
-                        null_d.alias("observed_value")]
-            if handler == "distinct_set":
-                # the rollup already stores each partition's sorted
-                # collect_set; subset/superset/equal reduce to array_except
-                # emptiness checks — pure Catalyst, no driver round-trip.
-                # The per-partition observed SET itself doesn't fit the
-                # sink's double observed_value (matches the collected
-                # path, which also normalizes non-numeric observed to null).
-                mode = spec.extra["mode"]
-                vs = kw.get("value_set")
-                obs = F.col(item.slots["value"])
-                if vs is not None:
-                    prim = (int, float, str, bool)
-                    if not all(isinstance(v, prim)
-                               and not (isinstance(v, float) and v != v)
-                               for v in vs):
-                        return None  # NaN / exotic types: driver semantics
-                if vs is None:
-                    # null set = universal set (vacuously true
-                    # subset/superset; equal only to the empty set)
-                    success = (F.lit(True) if mode != "equal"
-                               else F.coalesce(F.size(obs), F.lit(0)) == 0)
-                elif len(vs) == 0:
-                    success = (F.lit(True) if mode == "superset"
-                               else F.coalesce(F.size(obs), F.lit(0)) == 0)
-                else:
-                    lit_arr = F.array(*[F.lit(v) for v in dict.fromkeys(vs)])
-                    subset = F.size(F.array_except(obs, lit_arr)) == 0
-                    superset = F.size(F.array_except(lit_arr, obs)) == 0
-                    raw = {"subset": subset, "superset": superset,
-                           "equal": subset & superset}[mode]
-                    # a partition with zero non-null rows stores an empty
-                    # (or null) set: subset vacuously holds, the others
-                    # need every expected value present
-                    success = F.when(obs.isNull(),
-                                     F.lit(mode == "subset")).otherwise(raw)
-                return [pid, *lits, success.alias("success"),
-                        null_l.alias("element_count"),
-                        null_l.alias("missing_count"),
-                        null_l.alias("unexpected_count"),
-                        null_d.alias("observed_value")]
-            return None
-        return None
-
-    def _sink_drift_frame(self, item: CompiledItem, pid_src: DataFrame):
-        """Distributed per-partition drift verdicts: the score is a pure
-        function of the partition's fused bin counts, computed by an
-        Arrow-batched pandas UDF calling the SAME sketches.* scoring code as
-        the driver path — no per-partition row ever reaches the driver.
-        Categorical KL with the default tail_weight_holdout of 0 is scored
-        here too (any out-of-set mass is inf however it splits, so one
-        synthetic entry is exact). Returns None (driver fallback) for the
-        genuinely driver-bound modes: auto-partition KL (builds the
-        partition from the batch), bootstrapped KS (raw-sample job), and
-        categorical KL with a positive holdout (out-of-set expected mass is
-        split per distinct value — its own (value, partition) job)."""
-        import pandas as pd
-        spec, kw = item.spec, item.kwargs
-        score_kind = spec.extra["score"]
-        if item.info.get("auto") or kw.get("bootstrap"):
-            return None
-        values = (list(item.info["values"])
-                  if score_kind == "kl" and "values" in item.info else None)
-        if values is not None and float(kw.get("tail_weight_holdout", 0.0)) > 0:
-            # a positive holdout is split per distinct out-of-set value
-            # (tail_weight_holdout / n_unexpected), so per-partition
-            # exactness would need its own (value, partition) job — keep
-            # the narrow driver fallback for this opt-in. With the default
-            # holdout of 0 the verdict is exact from the rollup alone: any
-            # out-of-set mass scores inf however it is split.
-            return None
-        expected = list(item.info["expected_weights"])
-        bins = list(item.info["bins"]) if item.info.get("bins") else None
-        po = kw.get("partition_object") or {}
-        tail_w = list(po["tail_weights"]) if po.get("tail_weights") else None
-        th = float(kw.get("tail_weight_holdout", 0.0))
-        ih = float(kw.get("internal_weight_holdout", 0.0))
-        bin_cols = list(item.info["bin_aliases"])
-        nb = len(bin_cols)
-        _OUT_OF_SET = object()
-
-        def score_batch(*series):
-            def val(s, i):
-                v = s.iloc[i]
-                return 0.0 if v is None or pd.isna(v) else float(v)
-            out = []
-            for i in range(len(series[0])):
-                counts = [val(series[j], i) for j in range(nb)]
-                below, above, nonnull = (val(series[nb], i),
-                                         val(series[nb + 1], i),
-                                         val(series[nb + 2], i))
-                if score_kind == "kl" and values is not None:
-                    observed = {c: n for c, n in zip(values, counts)}
-                    out_mass = nonnull - sum(counts)
-                    if out_mass > 0.5:
-                        # holdout == 0 (gated above): ANY out-of-set mass
-                        # scores inf regardless of its split across values,
-                        # so one synthetic entry holding the whole mass is
-                        # exact (object() sentinel: never collides with a
-                        # real category)
-                        observed[_OUT_OF_SET] = out_mass
-                    v, _ = sketches.kl_divergence_categorical(
-                        observed, nonnull, values, expected, 0.0)
-                elif score_kind == "kl":
-                    v, _ = sketches.kl_divergence(
-                        counts, expected, below, above, nonnull, th, ih,
-                        bins=bins, expected_tail_weights=tail_w)
-                elif score_kind == "ks":
-                    v = sketches.ks_statistic(counts, expected)
-                elif score_kind == "psi":
-                    v = sketches.psi(counts, expected)
-                elif score_kind == "chisq_p":
-                    v, _ = sketches.chisquare_p_value(counts, expected)
-                elif score_kind in ("ks_p", "ks_param_p"):
-                    v = sketches.ks_p_value(
-                        sketches.ks_statistic(counts, expected), sum(counts))
-                else:
-                    v = sketches.chisquare_statistic(counts, expected)
-                out.append(v)
-            return pd.Series(out, dtype="float64")
-
-        udf = F.pandas_udf(score_batch, "double")
-        in_cols = [F.col(c) for c in bin_cols]
-        in_cols.append(F.col(item.slots["below"]).cast("double")
-                       if "below" in item.slots else F.lit(0.0))
-        in_cols.append(F.col(item.slots["above"]).cast("double")
-                       if "above" in item.slots else F.lit(0.0))
-        in_cols.append(F.col(item.slots["nonnull"]).cast("double"))
-        scored = pid_src.withColumn("__score", udf(*in_cols))
-        v = F.col("__score")
-        finite = ~(F.isnan(v) | (v == float("inf")) | (v == float("-inf")))
-        threshold = kw.get("threshold")
-        if score_kind == "kl":
-            success = (F.lit(True) if threshold is None
-                       else F.coalesce(v <= float(threshold), F.lit(False)))
-            observed = F.when(finite, v)   # displayable rule (_kl_evr)
-        else:
-            t = float(threshold)
-            cmp = v > t if spec.extra.get("direction") == "greater" else v < t
-            # Spark orders NaN above every double (NaN > t is TRUE); python's
-            # nan > t is False — pin the python semantics
-            success = F.coalesce(
-                F.when(F.isnan(v), F.lit(False)).otherwise(cmp), F.lit(False))
-            observed = v
-        null_l = F.lit(None).cast("long")
-        return scored.select(
-            F.col("__pid").cast("string").alias("partition_id"),
-            *self._sink_lits(item), success.alias("success"),
-            null_l.alias("element_count"), null_l.alias("missing_count"),
-            null_l.alias("unexpected_count"),
-            observed.alias("observed_value")).select(*self._SINK_COLS)
+        names = ("expectation_type", "domain", "kind", "config_kwargs")
+        return [F.lit(v).alias(n) for n, v in zip(names, _sink_labels(item))]
 
     _SINK_SCHEMA = ("partition_id string, expectation_type string, "
                     "domain string, kind string, success boolean, "
@@ -434,23 +176,49 @@ class ValidationRun:
                   "success", "element_count", "missing_count",
                   "unexpected_count", "observed_value", "config_kwargs"]
 
+    def _write_sink_verdicts(self, items: list[CompiledItem], src: DataFrame,
+                             path: str) -> None:
+        """Score every partition row of ``src`` (stored rollup rows) for
+        ``items`` on executors with score_partition, the scorer collected
+        mode runs on the driver, and write the verdict rows to ``path`` in
+        one job. ``.rdd`` hands the scorer the same Python values
+        ``collect()`` does. A scoring error leaves out that row and comes
+        back through an accumulator, de-duplicated against task retries."""
+        sc = src.sparkSession.sparkContext
+        errors = sc.accumulator([], _ListParam())
+        score = score_partition  # resolved here; executors run this one
+        labels = [_sink_labels(it) for it in items]
+
+        def on_error(row, i, exc):
+            errors.add([(i, row["__pid_str"],
+                         *_scoring_error(row, items[i], exc))])
+
+        def verdict_rows(rows):
+            for row, i, (ok, el, miss, ux, ov) in _score_rows(
+                    items, (r.asDict() for r in rows), score, on_error):
+                etype, domain, kind, kwj = labels[i]
+                yield (row["__pid_str"], etype, domain, kind, ok, el, miss,
+                       ux, _sink_observed(ov), kwj)
+
+        pids = src.withColumn("__pid_str", F.col("__pid").cast("string"))
+        rdd = pids.rdd.mapPartitions(verdict_rows)
+        (src.sparkSession.createDataFrame(rdd, self._SINK_SCHEMA)
+         .write.mode("overwrite").parquet(path))
+        seen: dict = {}
+        for i, pid, err, tb in errors.value:
+            seen.setdefault((i, pid), (err, tb))
+        for err, tb in seen.values():
+            self._record_scoring_error(err, tb)
+
     def _fused_pass_to_sink(self, dp: DomainPlan, dfd: DataFrame,
                             didx: int) -> dict:
         """Per-partition fused pass for 100k+-partition tables: the wide
         rollup (partitions x slot-table width) is written to the sink as
-        parquet DISTRIBUTED and per-partition verdict rows are derived from
-        it with Catalyst expressions (map/agg/row_count/unique_proportion/
-        quantile/distinct_set kinds) or an Arrow-batched pandas UDF (drift
-        scores) — the driver reads back only the single global row (a pushed
-        `__grand = 1` filter on the tiny parquet). The residual
-        driver-bound items (exact-opt-in quantiles, auto-partition KL,
-        bootstrapped KS, categorical KL with a positive tail_weight_holdout)
-        collect a NARROW projection (that
-        item's slot columns only), never the full slot table. Returns the
-        global row."""
-        import json as _json
+        parquet DISTRIBUTED, and executors score its partition rows with the
+        collected path's scorer into one verdict file. The driver reads back
+        only the single global row (a pushed `__grand = 1` filter on the
+        tiny parquet). Returns the global row."""
         import os
-        from functools import reduce
         spark = dfd.sparkSession
         sink = self.partition_verdict_sink
         rollup_path = os.path.join(sink, f"rollup-domain-{didx}.parquet")
@@ -460,64 +228,10 @@ class ValidationRun:
         stored = spark.read.parquet(rollup_path)
         g = stored.filter(f"{_GRAND} = 1").collect()
         grow = g[0].asDict() if g else {a: None for a in dp.slot_table.exprs}
-        pid_src = stored.filter(f"{_GRAND} = 0")
-        frames, narrow = [], []
-        for item in dp.fused_items:
-            if item.spec.kind == "drift":
-                fr = self._sink_drift_frame(item, pid_src)
-                if fr is not None:
-                    frames.append(fr)
-                else:
-                    narrow.append(item)
-                continue
-            sel = self._sink_verdict_select(item)
-            if sel is not None:
-                try:
-                    # select() analyzes eagerly: a type that Catalyst can't
-                    # coerce (e.g. string value_set against a numeric
-                    # distinct_set slot) degrades to the narrow driver
-                    # fallback instead of failing the whole union write
-                    frames.append(
-                        pid_src.select(*sel).select(*self._SINK_COLS))
-                except Exception:  # noqa: BLE001 — analysis-time only
-                    narrow.append(item)
-            else:
-                narrow.append(item)
-        if frames:
-            out = reduce(lambda a, b: a.unionByName(b), frames)
-            out.write.mode("overwrite").parquet(
+        if dp.fused_items:
+            self._write_sink_verdicts(
+                dp.fused_items, stored.filter(f"{_GRAND} = 0"),
                 os.path.join(sink, f"verdicts-domain-{didx}.parquet"))
-        if narrow:
-            rows_out = []
-            for item in narrow:
-                cols = sorted(set(item.slots.values())
-                              | set(item.info.get("bin_aliases", [])))
-                for r in pid_src.select("__pid", *cols).collect():
-                    d = r.asDict()
-                    try:
-                        pevr = self._evr_from_row_quiet(item, d)
-                    except Exception as exc:  # noqa: BLE001 — recorded, not raised
-                        self._partition_scoring_error(d["__pid"], item, exc)
-                        continue
-                    if pevr is None:
-                        continue
-                    res = pevr.result or {}
-                    ov = res.get("observed_value")
-                    kw = item.kwargs
-                    rows_out.append((
-                        str(d["__pid"]), item.config.expectation_type,
-                        _domain(kw),
-                        item.spec.kind, bool(pevr.success),
-                        _opt_int(res.get("element_count")),
-                        _opt_int(res.get("missing_count")),
-                        _opt_int(res.get("unexpected_count")),
-                        float(ov) if isinstance(ov, (int, float))
-                        and not isinstance(ov, bool) else None,
-                        _json.dumps(kw, sort_keys=True, default=str)))
-            if rows_out:
-                (spark.createDataFrame(rows_out, self._SINK_SCHEMA)
-                 .write.mode("overwrite").parquet(os.path.join(
-                     sink, f"verdicts-domain-{didx}-driver.parquet")))
         return grow
 
     def _collect_samples(self, dfd: DataFrame, unexpected_cond: Column,
@@ -577,57 +291,6 @@ class ValidationRun:
                                    unexpected_index_list=index_list)
         return ExpectationValidationResult(success=success, expectation_config=item.config, result=result)
 
-    def _between_evr(self, item: CompiledItem, value: Any) -> ExpectationValidationResult:
-        """Verdict for an aggregate observed value against min/max bounds.
-
-        A DATE observed value checked against datetime bounds (the
-        dateutil-parsed ``parse_strings_as_datetimes`` strings) is compared
-        as that day's midnight; observed_value still reports the date. So
-        with a bound of '2024-01-05 00:00:00' a 2024-01-05 value fails under
-        ``strict_max`` or ``strict_min``, and a bound later that day counts
-        the whole date as before it."""
-        kw = item.kwargs
-        min_v, max_v = kw.get("min_value"), kw.get("max_value")
-        if kw.get("parse_strings_as_datetimes"):
-            # deprecated reference kwarg (expectation.py:1338-1360): string
-            # bounds parsed with dateutil; the observed datetime is rendered
-            # with output_strftime_format (or str) in the result
-            from dateutil.parser import parse as _parse
-            for name, b in (("min", min_v), ("max", max_v)):
-                if b is not None:
-                    try:
-                        parsed = _parse(b)
-                    except (TypeError, ValueError):
-                        continue
-                    if name == "min":
-                        min_v = parsed
-                    else:
-                        max_v = parsed
-        import datetime as _dt
-        cmp_value = value
-        if (isinstance(value, _dt.date)
-                and not isinstance(value, _dt.datetime)
-                and (isinstance(min_v, _dt.datetime)
-                     or isinstance(max_v, _dt.datetime))):
-            # DATE column vs dateutil-parsed bounds (always datetimes):
-            # python refuses date-vs-datetime comparison, so compare the
-            # day's midnight but keep the date for observed_value rendering
-            cmp_value = _dt.datetime.combine(value, _dt.time.min)
-        out = validate_metric_value_between(
-            cmp_value, min_v, max_v,
-            kw.get("strict_min", False), kw.get("strict_max", False))
-        if cmp_value is not value:
-            out["result"]["observed_value"] = value
-        if kw.get("parse_strings_as_datetimes") and out["result"].get(
-                "observed_value") is not None:
-            import datetime as _dt
-            ov = out["result"]["observed_value"]
-            if isinstance(ov, (_dt.datetime, _dt.date)):
-                fmt = kw.get("output_strftime_format")
-                out["result"]["observed_value"] = (
-                    ov.strftime(fmt) if fmt else str(ov))
-        return ExpectationValidationResult(
-            success=out["success"], expectation_config=item.config, result=out["result"])
 
     def _record_partition_verdict(self, pid: int, item: CompiledItem, success: bool,
                                   extra: dict) -> None:
@@ -646,38 +309,40 @@ class ValidationRun:
             **extra,
         })
 
-    def _partition_scoring_error(self, pid: Any, item: CompiledItem,
-                                 exc: Exception) -> None:
+    def _record_scoring_error(self, err: dict, tb: str) -> None:
         """A partition whose verdict could not be scored has no verdict row;
         record why in meta["partition_scoring_errors"] and the log."""
-        err = {"partition_id": _pid_value(pid),
-               "expectation_type": item.config.expectation_type,
-               "domain": _domain(item.kwargs),
-               "error": f"{type(exc).__name__}: {exc}"}
-        log.warning("partition verdict not scored: %s", err, exc_info=exc)
+        log.warning("partition verdict not scored: %s\n%s", err, tb)
         self.partition_scoring_errors.append(err)
 
-    def _record_count_verdicts(self, item: CompiledItem,
-                               pid_rows: list[dict] | None,
-                               unexpected_by_pid: dict) -> None:
-        """One verdict per partition of the domain rollup for a job item
-        that counts unexpected rows per partition (window, unique); a
-        partition missing from ``unexpected_by_pid`` has none."""
-        mostly = float(item.kwargs.get("mostly", 1.0))
-        for prow in pid_rows or []:
-            el = int(prow[item.slots["element"]] or 0)
-            nn = int(prow[item.slots["nonnull"]] or 0)
-            ux = unexpected_by_pid.get(prow["__pid"], 0)
+    def _record_scored_verdicts(self, item: CompiledItem,
+                                rows: list[dict]) -> None:
+        """Collected mode: score each rollup row for ``item`` with
+        score_partition and record its verdict."""
+        def on_error(row, _, exc):
+            self._record_scoring_error(*_scoring_error(row, item, exc))
+        for row, _, (ok, el, miss, ux, ov) in _score_rows(
+                [item], rows, score_partition, on_error):
             self._record_partition_verdict(
-                prow["__pid"], item, mostly_success(el, nn, ux, mostly),
+                row["__pid"], item, ok,
                 {"unexpected_count": ux, "element_count": el,
-                 "missing_count": el - nn, "observed_value": None})
+                 "missing_count": miss, "observed_value": _jsonable(ov)})
 
-    def _count_verdict_frame(self, item: CompiledItem, counts: DataFrame,
-                             didx: int) -> DataFrame:
-        """The sink twin of _record_count_verdicts: ``counts`` (``__pid``,
-        ``__ux``) joined null-safe to the stored domain rollup's
-        per-partition element/nonnull, as verdict rows."""
+    def _record_count_verdicts(self, item: CompiledItem,
+                               pid_rows: list[dict], counts: list) -> None:
+        """Collected verdicts for a job item that counts unexpected rows per
+        partition (window, unique): ``counts`` rows of ``__pid``/``__ux``
+        attached to the domain rollup's rows; a partition with no count row
+        has no unexpected rows."""
+        ux = {r["__pid"]: r["__ux"] for r in counts}
+        self._record_scored_verdicts(
+            item, [{**p, "__ux": ux.get(p["__pid"])} for p in pid_rows])
+
+    def _write_count_verdicts(self, item: CompiledItem, counts: DataFrame,
+                              didx: int, name: str) -> None:
+        """The sink form of _record_count_verdicts: ``counts`` joined
+        null-safe to the stored domain rollup's per-partition
+        element/nonnull, scored on executors into the sink file ``name``."""
         import os
         rollup = (counts.sparkSession.read.parquet(os.path.join(
             self.partition_verdict_sink, f"rollup-domain-{didx}.parquet"))
@@ -686,26 +351,15 @@ class ValidationRun:
         counts = counts.select(F.col("__pid").alias("__cpid"), "__ux")
         joined = rollup.join(
             counts, rollup["__pid"].eqNullSafe(counts["__cpid"]), "left")
-        mostly = float(item.kwargs.get("mostly", 1.0))
-        el = F.coalesce(F.col(item.slots["element"]), F.lit(0)).cast("long")
-        nn = F.coalesce(F.col(item.slots["nonnull"]), F.lit(0)).cast("long")
-        ux = F.coalesce(F.col("__ux"), F.lit(0)).cast("long")
-        success = ((el == 0) | (nn == 0)
-                   | ((nn - ux).cast("double")
-                      >= F.lit(mostly) * nn.cast("double")))
-        return joined.select(
-            F.col("__pid").cast("string").alias("partition_id"),
-            *self._sink_lits(item), success.alias("success"),
-            el.alias("element_count"), (el - nn).alias("missing_count"),
-            ux.alias("unexpected_count"),
-            F.lit(None).cast("double").alias("observed_value"),
-        ).select(*self._SINK_COLS)
+        self._write_sink_verdicts([item], joined.drop("__cpid"), os.path.join(
+            self.partition_verdict_sink, name))
 
     # ---------------------------------------------------------- fused evrs
 
-    def _evr_from_row(self, item: CompiledItem, row: dict) -> ExpectationValidationResult:
-        """Build the EVR for a fused item from one agg-result row. Used for the
-        global row; per-partition rows go through _partition_verdict_from_row."""
+    def _evr_from_row(self, item: CompiledItem, row: dict,
+                      dfd: DataFrame) -> ExpectationValidationResult:
+        """Build the EVR for a fused item from the domain's global agg row;
+        per-partition rows go through score_partition."""
         spec, kw = item.spec, item.kwargs
         if spec.kind == "map":
             element = int(row[item.slots["element"]] or 0)
@@ -717,17 +371,17 @@ class ValidationRun:
                 nn = self._nonnull_of(item)
                 expected = spec.condition(kw)
                 samples, index_list = self._collect_samples(
-                    item.info["dfd"], nn & ~expected, item)
+                    dfd, nn & ~expected, item)
             return self._map_evr(item, element, nonnull, unexpected, samples, index_list)
 
         if spec.kind == "agg":
-            return self._between_evr(item, row[item.slots["value"]])
+            return _between_evr(item, row[item.slots["value"]])
 
         if spec.kind == "agg_custom":
-            return self._agg_custom_evr(item, row)
+            return _agg_custom_evr(item, row, dfd)
 
         if spec.kind == "drift":
-            return self._drift_evr(item, row)
+            return _drift_evr(item, row, dfd)
 
         raise ValueError(f"unexpected fused kind {spec.kind}")
 
@@ -738,333 +392,6 @@ class ValidationRun:
         if spec.nonnull is not None:
             return spec.nonnull(kw)
         return F.col(kw["column"]).isNotNull()
-
-    def _agg_custom_evr(self, item: CompiledItem, row: dict) -> ExpectationValidationResult:
-        kw, handler = item.kwargs, item.spec.extra["handler"]
-        if handler == "row_count":
-            count = int(row[item.slots["value"]] or 0)
-            if item.spec.extra["mode"] == "equal":
-                success = count == int(kw["value"])
-                return ExpectationValidationResult(
-                    success=success, expectation_config=item.config,
-                    result={"observed_value": count})
-            return self._between_evr(item, count)
-        if handler == "quantiles":
-            if item.info.get("use_approx_quantile"):
-                values = item.info["dfd"].approxQuantile(
-                    item.kwargs["column"], item.info["quantiles"], 0.0)
-            else:
-                values = row[item.slots["value"]]
-                values = list(values) if values is not None else []
-            ranges = kw["quantile_ranges"]["value_ranges"]
-            successes = []
-            for v, (lo, hi) in zip(values, ranges):
-                ok = v is not None and (lo is None or v >= lo) and (hi is None or v <= hi)
-                successes.append(bool(ok))
-            return ExpectationValidationResult(
-                success=all(successes) and len(values) == len(ranges),
-                expectation_config=item.config,
-                result={"observed_value": {
-                    "quantiles": item.info["quantiles"], "values": values},
-                    "details": {"success_details": successes}})
-        if handler == "unique_proportion":
-            distinct = int(row[item.slots["distinct"]] or 0)
-            nonnull = int(row[item.slots["nonnull"]] or 0)
-            proportion = (distinct / nonnull) if nonnull else None
-            return self._between_evr(item, proportion)
-        if handler == "distinct_set":
-            observed = sorted(row[item.slots["value"]] or [])
-            mode = item.spec.extra["mode"]
-            oset = set(observed)
-            if kw.get("value_set") is None:
-                # null set = universal set (vacuously true subset/contains)
-                success = True if mode != "equal" else len(oset) == 0
-            else:
-                value_set = set(kw["value_set"])
-                success = {
-                    "subset": oset <= value_set,
-                    "superset": oset >= value_set,
-                    "equal": oset == value_set,
-                }[mode]
-            return ExpectationValidationResult(
-                success=bool(success), expectation_config=item.config,
-                result={"observed_value": observed})
-        raise ValueError(handler)
-
-    def _raw_sample_pool(self, item: CompiledItem, nonnull: int, *,
-                         cap: int, seed: int):
-        """Bounded uniform sample of the column's raw non-null values for
-        driver-side bootstrap scoring. Below the cap the pool is the whole
-        column; above it, a seeded fraction sample (slightly over-drawn,
-        then limited) — one extra narrow scan, pruned to the single column."""
-        import numpy as np
-        kw = item.kwargs
-        col = F.col(kw["column"]).cast("double")
-        nn = item.info["dfd"].filter(col.isNotNull()).select(col.alias("v"))
-        if nonnull > cap:
-            frac = min(1.0, cap * 1.2 / nonnull)
-            nn = nn.sample(False, frac, seed)
-        vals = np.array([r["v"] for r in nn.limit(cap).collect()], dtype=float)
-        # sort: collect order varies with partitioning, and rng.choice draws
-        # by position — sorting makes the bootstrap value deterministic for
-        # a given multiset (exactly reproducible below the cap)
-        return np.sort(vals)
-
-    def _drift_counts(self, item: CompiledItem, row: dict) -> tuple[list[float], float, float, float]:
-        counts = [float(row[a] or 0) for a in item.info["bin_aliases"]]
-        below = float(row[item.slots["below"]] or 0) if "below" in item.slots else 0.0
-        above = float(row[item.slots["above"]] or 0) if "above" in item.slots else 0.0
-        nonnull = float(row[item.slots["nonnull"]] or 0)
-        return counts, below, above, nonnull
-
-    def _drift_evr(self, item: CompiledItem, row: dict) -> ExpectationValidationResult:
-        kw = item.kwargs
-        counts, below, above, nonnull = self._drift_counts(item, row)
-        score_kind = item.spec.extra["score"]
-        expected = item.info["expected_weights"]
-        categorical = "values" in item.info
-        if score_kind == "kl":
-            return self._kl_evr(item, row, counts, below, above, nonnull, categorical)
-        if score_kind == "ks":
-            value, details = sketches.ks_statistic(counts, expected), {}
-        elif score_kind == "psi":
-            value, details = sketches.psi(counts, expected), {}
-        elif score_kind == "chisq_p":
-            value, details = sketches.chisquare_p_value(counts, expected)
-        elif score_kind == "ks_p" and kw.get("bootstrap"):
-            # reference-faithful mode (column_bootstrapped_ks_test_p_value
-            # .py:44-96): bootstrap raw samples against the partition CDF.
-            # The pool is a BOUNDED uniform sample of the column (cap
-            # default 100k) so driver memory stays flat at any scale — the
-            # bootstrap itself only draws samples*size values from it.
-            po = kw["partition_object"]
-            import math as _math
-            if any(_math.isinf(b) for b in po["bins"]):
-                raise ValueError("Partition endpoints must be finite.")
-            if sum(po.get("tail_weights", []) or []) > 0:
-                raise ValueError(
-                    "Partition cannot have tail weights -- endpoints must "
-                    "be finite.")
-            pool = self._raw_sample_pool(
-                item, int(nonnull), cap=int(kw.get("bootstrap_pool_cap", 100_000)),
-                seed=int(kw.get("bootstrap_seed", 42)))
-            value, details = sketches.bootstrap_ks_test(
-                pool, po["bins"], po["weights"],
-                p=float(kw.get("p", 0.05)),
-                bootstrap_samples=int(kw.get("bootstrap_samples") or 1000),
-                bootstrap_sample_size=kw.get("bootstrap_sample_size"),
-                seed=int(kw.get("bootstrap_seed", 42)))
-            details["ks_statistic_binned"] = sketches.ks_statistic(
-                counts, expected)
-        elif score_kind in ("ks_p", "ks_param_p"):
-            ks = sketches.ks_statistic(counts, expected)
-            n_eff = sum(counts)
-            value = sketches.ks_p_value(ks, n_eff)
-            details = {"ks_statistic": ks, "n_effective": n_eff,
-                       # semantic divergence from the reference, by design:
-                       # the reference (pandas-only) bootstraps RAW samples;
-                       # ours scores the KS asymptotic p on the BINNED sketch
-                       # (mergeable across partitions, bounded memory) — the
-                       # p-values differ, especially at small n. Pass
-                       # bootstrap=True for the reference-faithful raw-sample
-                       # bootstrap (bounded pool).
-                       "method": "asymptotic_ks_on_binned_sketch"}
-        else:
-            value, details = sketches.chisquare_statistic(counts, expected), {}
-        threshold = float(kw["threshold"])
-        if item.spec.extra.get("direction") == "greater":
-            success = value is not None and value > threshold
-        else:
-            success = value is not None and value < threshold
-        observed_partition = (
-            sketches.build_categorical_partition(item.info["values"], counts)
-            if categorical else sketches.build_partition_from_edges(item.info["bins"], counts))
-        return ExpectationValidationResult(
-            success=bool(success), expectation_config=item.config,
-            result={"observed_value": value,
-                    "details": {"observed_partition": observed_partition,
-                                "expected_partition": kw["partition_object"], **details}})
-
-    def _kl_evr(self, item: CompiledItem, row: dict, counts, below, above,
-                nonnull, categorical: bool) -> ExpectationValidationResult:
-        """expect_column_kl_divergence_to_be_less_than with the reference's
-        exact semantics (expect_column_kl_divergence_to_be_less_than.py:
-        315-630): scipy-entropy normalization, tail_weights / holdout rules,
-        +/-inf endpoints, categorical outer-union fill, observed_value None
-        on inf/nan, success = kl <= threshold (True when threshold is None).
-        """
-        kw = item.kwargs
-        po = kw.get("partition_object")
-        threshold = kw.get("threshold")
-        th = float(kw.get("tail_weight_holdout", 0.0))
-        ih = float(kw.get("internal_weight_holdout", 0.0))
-
-        if item.info.get("auto"):
-            return self._kl_auto_evr(item, nonnull, threshold, th, ih)
-
-        if categorical:
-            values = item.info["values"]
-            observed = {v: float(c) for v, c in zip(values, counts)}
-            seen_mass = sum(observed.values())
-            value, details = None, None
-            if nonnull - seen_mass > 0.5:
-                # values outside the expected set exist: one groupBy job
-                # resolves their counts (rare path; the fused pass already
-                # covered the expected values). The driver only ever sees the
-                # top `max_unexpected_values` rows — above that, the KL is
-                # computed from three JVM-side scalars (distinct count, total,
-                # sum c*ln c), exactly, with driver memory flat at any
-                # out-of-set cardinality.
-                cap = int(kw.get("max_unexpected_values", 1000))
-                col = F.col(kw["column"])
-                out = (item.info["dfd"].filter(col.isNotNull() & ~col.isin(values))
-                       .groupBy(col).agg(F.count(F.lit(1)).alias("__n")))
-                top = (out.orderBy(F.desc("__n"), col)
-                       .limit(cap + 1).collect())
-                if len(top) <= cap:
-                    for r in top:
-                        observed[r[kw["column"]]] = float(r["__n"])
-                else:
-                    cnt = F.col("__n").cast("double")
-                    srow = out.agg(
-                        F.count(F.lit(1)).alias("n_distinct"),
-                        F.sum(cnt).alias("total"),
-                        F.sum(cnt * F.log(cnt)).alias("clogc")).first()
-                    value = sketches.kl_divergence_categorical_scalars(
-                        observed, float(nonnull), values,
-                        item.info["expected_weights"], th,
-                        int(srow["n_distinct"]), float(srow["total"]),
-                        float(srow["clogc"]))
-                    shown = {r[kw["column"]]: float(r["__n"]) for r in top[:cap]}
-                    details = {
-                        "observed_partition": {
-                            "values": values, "weights": [
-                                observed.get(v, 0.0) / nonnull if nonnull else 0.0
-                                for v in values]},
-                        "expected_partition": {
-                            "values": values,
-                            "weights": item.info["expected_weights"]},
-                        "unexpected_values_truncated": {
-                            "distinct": int(srow["n_distinct"]),
-                            "total_count": int(srow["total"]),
-                            "top": {str(k): v for k, v in shown.items()},
-                            "note": f"out-of-set values exceed "
-                                    f"max_unexpected_values={cap}; KL computed "
-                                    "exactly from distributed scalars"},
-                    }
-            if value is None:
-                value, details = sketches.kl_divergence_categorical(
-                    observed, float(nonnull), values,
-                    item.info["expected_weights"], th)
-        else:
-            value, details = sketches.kl_divergence(
-                counts, item.info["expected_weights"], below, above, nonnull,
-                th, ih, bins=item.info.get("bins"),
-                expected_tail_weights=po.get("tail_weights"))
-
-        import math
-        displayable = not (math.isinf(value) or math.isnan(value))
-        observed_value = value if displayable else None
-        success = True if threshold is None else bool(value <= float(threshold))
-        if not categorical:
-            bins = item.info.get("bins") or []
-            shown_bins = [b for b in bins if not math.isinf(b)]
-            details = {
-                "observed_partition": {"bins": shown_bins,
-                                       "weights": details["observed_weights"],
-                                       "tail_weights": details["observed_tail_weights"]},
-                "expected_partition": {"bins": shown_bins,
-                                       "weights": details["expected_weights"],
-                                       "tail_weights": details["expected_tail_weights"]},
-            }
-        return ExpectationValidationResult(
-            success=success, expectation_config=item.config,
-            result={"observed_value": observed_value, "details": details})
-
-
-    def _kl_auto_evr(self, item: CompiledItem, nonnull, threshold, th, ih):
-        """partition_object=None: build the partition FROM this batch
-        (reference :338-356) — the observed distribution scored against a
-        partition of itself (KL ~ 0; the result's value is the returned
-        partition for later runs, matching the profiler role)."""
-        import math
-        kw = item.kwargs
-        dfd = item.info["dfd"]
-        col_name = kw["column"]
-        col = F.col(col_name)
-        if item.info["auto"] == "categorical":
-            # BOUNDED (r3): the driver only ever sees the top `max_categories`
-            # groups. Above the cap, KL is still exact — the auto path scores
-            # the batch against a partition of itself, and KL(p||p) == 0
-            # identically at any cardinality — so only the returned partition
-            # is truncated (kept to the top-mass values, annotated). Mirrors
-            # the bounded given-partition out-of-set path above and the
-            # profiler's approx_distinct <= max_categories guard.
-            cap = int(kw.get("max_categories", 1000))
-            grouped = (dfd.filter(col.isNotNull()).groupBy(col)
-                       .agg(F.count(F.lit(1)).alias("__n")))
-            rows = grouped.orderBy(F.desc("__n"), col).limit(cap + 1).collect()
-            if len(rows) > cap:
-                srow = grouped.agg(
-                    F.count(F.lit(1)).alias("n_distinct"),
-                    F.sum(F.col("__n").cast("double")).alias("total")).first()
-                rows = rows[:cap]
-                observed = {r[col_name]: float(r["__n"]) for r in rows}
-                values = sorted(observed, key=lambda v: (v is None, str(v)))
-                weights = ([observed[v] / nonnull for v in values]
-                           if nonnull else [])
-                value = 0.0
-                details = {
-                    "observed_partition": {"values": values, "weights": weights},
-                    "expected_partition": {"values": values, "weights": weights},
-                    "partition_truncated": {
-                        "distinct": int(srow["n_distinct"]),
-                        "total_count": int(srow["total"]),
-                        "max_categories": cap,
-                        "note": "auto partition bounded to the top max_categories "
-                                "values by count; KL(p||p) = 0 exactly at any "
-                                "cardinality, so observed_value is unaffected"},
-                }
-            else:
-                observed = {r[col_name]: float(r["__n"]) for r in rows}
-                values = sorted(observed, key=lambda v: (v is None, str(v)))
-                weights = ([observed[v] / nonnull for v in values]
-                           if nonnull else [])
-                value, details = sketches.kl_divergence_categorical(
-                    observed, float(nonnull), values, weights, th)
-        else:
-            qs = [i / 10 for i in range(11)]
-            edges = dfd.approxQuantile(col_name, qs, 0.0) if nonnull else []
-            bins = sorted(set(e for e in edges if e is not None))
-            if len(bins) < 2:
-                return ExpectationValidationResult(
-                    success=True, expectation_config=item.config,
-                    result={"observed_value": None,
-                            "details": {"note": "not enough data to partition"}})
-            exprs = []
-            for i in range(len(bins) - 1):
-                lo, hi = bins[i], bins[i + 1]
-                cond = (col >= lo) & ((col <= hi) if i == len(bins) - 2 else (col < hi))
-                exprs.append(F.coalesce(
-                    F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).alias(f"h{i}"))
-            hrow = dfd.agg(*exprs).first().asDict()
-            counts = [float(hrow[f"h{i}"]) for i in range(len(bins) - 1)]
-            weights = [c / nonnull for c in counts] if nonnull else []
-            value, details = sketches.kl_divergence(
-                counts, weights, 0.0, 0.0, nonnull, th, ih, bins=bins,
-                expected_tail_weights=None)
-            details = {
-                "observed_partition": {"bins": bins, "weights": details["observed_weights"],
-                                       "tail_weights": details["observed_tail_weights"]},
-                "expected_partition": {"bins": bins, "weights": details["expected_weights"],
-                                       "tail_weights": details["expected_tail_weights"]},
-            }
-        displayable = not (math.isinf(value) or math.isnan(value))
-        success = True if threshold is None else bool(value <= float(threshold))
-        return ExpectationValidationResult(
-            success=success, expectation_config=item.config,
-            result={"observed_value": value if displayable else None,
-                    "details": details if isinstance(details, dict) else {}})
 
 
     # ----------------------------------------------------------- job items
@@ -1141,16 +468,13 @@ class ValidationRun:
             stored = flagged.sparkSession.read.parquet(wpath)
             g = stored.filter(f"{_GRAND} = 1").collect()
             unexpected = int(g[0]["__ux"]) if g else 0
-            (self._count_verdict_frame(
-                item, stored.filter(f"{_GRAND} = 0"), didx)
-             .write.mode("overwrite").parquet(os.path.join(
-                 self.partition_verdict_sink,
-                 f"verdicts-domain-{didx}-w{jidx}.parquet")))
+            self._write_count_verdicts(
+                item, stored.filter(f"{_GRAND} = 0"), didx,
+                f"verdicts-domain-{didx}-w{jidx}.parquet")
         elif per_part:
             g, rows = _split_grand(_pid_rollup(flagged, ux_agg).collect())
             unexpected = int(g["__ux"]) if g else 0
-            self._record_count_verdicts(
-                item, pid_rows, {r["__pid"]: int(r["__ux"]) for r in rows})
+            self._record_count_verdicts(item, pid_rows, rows)
         else:
             unexpected = int(flagged.agg(ux_agg).first()["__ux"])
         samples: list = []
@@ -1282,11 +606,9 @@ class ValidationRun:
                                  f"urollup-domain-{didx}-u{jidx}.parquet")
             frame.write.mode("overwrite").parquet(upath)
             frame = dfd.sparkSession.read.parquet(upath)
-            (self._count_verdict_frame(
-                item, frame.filter(f"{_GRAND} = 0"), didx)
-             .write.mode("overwrite").parquet(os.path.join(
-                 self.partition_verdict_sink,
-                 f"verdicts-domain-{didx}-u{jidx}.parquet")))
+            self._write_count_verdicts(
+                item, frame.filter(f"{_GRAND} = 0"), didx,
+                f"verdicts-domain-{didx}-u{jidx}.parquet")
             frame = frame.filter(f"{_GRAND} IS NULL OR {_GRAND} = 1")
         rows = frame.collect()
         grand = next((r for r in rows if r[_GRAND] == 1), None)
@@ -1306,8 +628,7 @@ class ValidationRun:
                 "duplicate_groups": groups}
         if self.per_partition and not sink:
             self._record_count_verdicts(
-                item, pid_rows,
-                {r["__pid"]: int(r["__ux"]) for r in rows if r[_GRAND] == 0})
+                item, pid_rows, [r for r in rows if r[_GRAND] == 0])
         return evr
 
     def _run_most_common(self, item: CompiledItem, dfd: DataFrame, grow: dict) -> ExpectationValidationResult:
@@ -1544,7 +865,7 @@ class ValidationRun:
                 return ExpectationValidationResult(
                     success=n == int(kw["value"]), expectation_config=item.config,
                     result={"observed_value": n})
-            return self._between_evr(item, n)
+            return _between_evr(item, n)
         if handler in ("of_type", "in_type_list"):
             # reference short-circuits to a schema check on Spark
             # (expect_column_values_to_be_of_type.py:381-401)
@@ -1807,8 +1128,6 @@ class ValidationRun:
                         record(it.config, _reraise)
                     continue
                 dfd = dfd.filter(rc)
-            for it in dp.fused_items + dp.dependent_items + dp.job_items:
-                it.info["dfd"] = dfd
 
             grow: dict = {}
             pid_rows: list[dict] = []
@@ -1842,19 +1161,9 @@ class ValidationRun:
                     continue
 
             for item in dp.fused_items:
-                record(item.config, lambda it=item: self._evr_from_row(it, grow))
-                for prow in pid_rows:
-                    try:
-                        pevr = self._evr_from_row_quiet(item, prow)
-                        if pevr is not None:
-                            self._record_partition_verdict(
-                                prow["__pid"], item, pevr.success,
-                                {"unexpected_count": pevr.result.get("unexpected_count"),
-                                 "element_count": pevr.result.get("element_count"),
-                                 "missing_count": pevr.result.get("missing_count"),
-                                 "observed_value": _jsonable(pevr.result.get("observed_value"))})
-                    except Exception as exc:  # noqa: BLE001 — recorded, not raised
-                        self._partition_scoring_error(prow["__pid"], item, exc)
+                record(item.config,
+                       lambda it=item: self._evr_from_row(it, grow, dfd))
+                self._record_scored_verdicts(item, pid_rows)
 
             if dp.dependent_items:
                 try:
@@ -1884,82 +1193,506 @@ class ValidationRun:
             success=success, results=results, statistics=build_statistics(results),
             meta=meta)
 
-    def _evr_from_row_quiet(self, item: CompiledItem, row: dict) -> ExpectationValidationResult | None:
-        """Per-partition verdict from a rollup row — no sample collection.
 
-        Returns None when the item's verdict is NOT a pure function of the
-        rollup row (raw-sample bootstrap, auto-built partitions, exact
-        opt-in quantiles, positive-holdout categorical KL with out-of-set
-        mass): scoring those per partition would both attribute a
-        GLOBAL-data value to every partition label and run one driver job
-        per partition. Such items simply have no per-partition rows."""
-        spec, kw = item.spec, item.kwargs
-        if spec.kind == "map":
-            element = int(row[item.slots["element"]] or 0)
-            nonnull = int(row[item.slots["nonnull"]] or 0)
-            unexpected = int(row[item.slots["unexpected"]] or 0)
-            return self._map_evr_no_samples(item, element, nonnull, unexpected)
-        if spec.kind == "drift":
-            if kw.get("bootstrap") or item.info.get("auto"):
-                return None
-            if "values" in item.info and spec.extra["score"] == "kl":
-                return self._categorical_kl_row_verdict(item, row)
-        if (spec.kind == "agg_custom"
-                and spec.extra.get("handler") == "quantiles"
-                and item.info.get("use_approx_quantile")):
+# ---------------------------------------------------------- verdict scoring
+#
+# The global EVR and every per-partition verdict are scored by the functions
+# below from one agg/rollup row (a dict). Only the modes that are not a
+# function of the row (bootstrap KS, auto-built KL partitions, exact-opt-in
+# quantiles, out-of-set categorical KL) take the domain's DataFrame, for
+# their own jobs.
+
+
+def score_partition(item: CompiledItem, row: dict) -> tuple | None:
+    """One partition's verdict for a fused or count item, from its rollup
+    row: ``(success, element_count, missing_count, unexpected_count,
+    observed_value)``. A count item (window, unique) reads its unexpected
+    count from ``row["__ux"]``. Touches no DataFrame, so collected mode
+    calls it on the driver and sink mode on executors.
+
+    Returns None when the verdict is NOT a pure function of the row (raw
+    sample bootstrap KS, auto-built KL partitions, exact-opt-in quantiles,
+    positive-holdout categorical KL with out-of-set mass): scoring those
+    per partition would attribute a GLOBAL value to every partition label
+    and run one job per partition. Such items have no per-partition rows."""
+    spec, kw = item.spec, item.kwargs
+    if spec.kind in ("map", "map_window", "map_unique"):
+        el = int(row[item.slots["element"]] or 0)
+        nn = int(row[item.slots["nonnull"]] or 0)
+        ux = int(row[item.slots.get("unexpected", "__ux")] or 0)
+        return (mostly_success(el, nn, ux, kw.get("mostly", 1.0)),
+                el, el - nn, ux, None)
+    if spec.kind == "drift":
+        if kw.get("bootstrap") or item.info.get("auto"):
             return None
-        if spec.kind in ("agg", "agg_custom", "drift"):
-            rf_save = dict(self.rf)
-            try:
-                self.rf["result_format"] = "BOOLEAN_ONLY"
-                if spec.kind == "agg":
-                    return self._between_evr(item, row[item.slots["value"]])
-                if spec.kind == "agg_custom":
-                    return self._agg_custom_evr(item, row)
-                return self._drift_evr(item, row)
-            finally:
-                self.rf = rf_save
+        if "values" in item.info and spec.extra["score"] == "kl":
+            # categorical KL: the global EVR resolves out-of-set values with
+            # its own job. A partition row only knows their total mass; with
+            # the default holdout of 0 any such mass scores inf however it
+            # splits, so one synthetic entry holding it is exact. A positive
+            # holdout is split per distinct out-of-set value: no verdict.
+            counts, _, _, nonnull = _drift_counts(item, row)
+            observed = dict(zip(item.info["values"], counts))
+            th = float(kw.get("tail_weight_holdout", 0.0))
+            if nonnull - sum(counts) > 0.5:
+                if th > 0:
+                    return None
+                observed[object()] = nonnull - sum(counts)
+            value, _ = sketches.kl_divergence_categorical(
+                observed, nonnull, item.info["values"],
+                item.info["expected_weights"], th)
+            threshold = kw.get("threshold")
+            success = threshold is None or bool(value <= float(threshold))
+            return (success, None, None, None,
+                    value if math.isfinite(value) else None)
+        evr = _drift_evr(item, row)
+    elif spec.kind == "agg":
+        evr = _between_evr(item, row[item.slots["value"]])
+    elif spec.kind == "agg_custom" and not item.info.get("use_approx_quantile"):
+        evr = _agg_custom_evr(item, row)
+    else:
         return None
+    return (bool(evr.success), None, None, None,
+            evr.result.get("observed_value"))
 
-    def _categorical_kl_row_verdict(self, item: CompiledItem, row: dict
-                                    ) -> ExpectationValidationResult | None:
-        """Row-local categorical KL — the collected-path twin of the sink
-        scorer's categorical branch. With the default holdout of 0 any
-        out-of-set mass is inf however it splits (one synthetic entry is
-        exact); a positive holdout with out-of-set mass needs its own
-        (value, partition) job, so no per-partition verdict is emitted
-        (the _kl_evr global path would otherwise attribute whole-table
-        out-of-set counts to this partition AND run a groupBy per pid)."""
-        import math
-        kw = item.kwargs
-        counts, _, _, nonnull = self._drift_counts(item, row)
-        th = float(kw.get("tail_weight_holdout", 0.0))
+
+def _score_rows(items: list[CompiledItem], rows, score, on_error):
+    """``(row, item index, verdict)`` for every rollup row and item that has
+    a verdict. A scorer exception calls ``on_error(row, item index, exc)``
+    and leaves that verdict out."""
+    for row in rows:
+        for i, item in enumerate(items):
+            try:
+                verdict = score(item, row)
+            except Exception as exc:  # noqa: BLE001 — recorded, not raised
+                on_error(row, i, exc)
+                continue
+            if verdict is not None:
+                yield row, i, verdict
+
+
+def _scoring_error(row: dict, item: CompiledItem,
+                   exc: Exception) -> tuple[dict, str]:
+    """A scoring exception as its meta["partition_scoring_errors"] entry and
+    its traceback (call inside the ``except``)."""
+    return ({"partition_id": _pid_value(row["__pid"]),
+             "expectation_type": item.config.expectation_type,
+             "domain": _domain(item.kwargs),
+             "error": f"{type(exc).__name__}: {exc}"},
+            traceback.format_exc())
+
+
+def _sink_labels(item: CompiledItem) -> tuple[str, str, str, str]:
+    """An item's (expectation_type, domain, kind, config_kwargs) sink
+    columns."""
+    return (item.config.expectation_type, _domain(item.kwargs),
+            item.spec.kind,
+            json.dumps(item.kwargs, sort_keys=True, default=str))
+
+
+def _sink_observed(v: Any) -> float | None:
+    """An observed value in the sink's double column: numbers only."""
+    if isinstance(v, (int, float, Decimal)) and not isinstance(v, bool):
+        return float(v)
+    return None
+
+
+class _ListParam(AccumulatorParam):
+    """Accumulates lists by concatenation."""
+
+    def zero(self, value: list) -> list:
+        return []
+
+    def addInPlace(self, a: list, b: list) -> list:
+        a.extend(b)
+        return a
+
+
+def _between_evr(item: CompiledItem, value: Any) -> ExpectationValidationResult:
+    """Verdict for an aggregate observed value against min/max bounds.
+
+    A DATE observed value checked against datetime bounds (the
+    dateutil-parsed ``parse_strings_as_datetimes`` strings) is compared
+    as that day's midnight; observed_value still reports the date. So
+    with a bound of '2024-01-05 00:00:00' a 2024-01-05 value fails under
+    ``strict_max`` or ``strict_min``, and a bound later that day counts
+    the whole date as before it."""
+    kw = item.kwargs
+    min_v, max_v = kw.get("min_value"), kw.get("max_value")
+    if kw.get("parse_strings_as_datetimes"):
+        # deprecated reference kwarg (expectation.py:1338-1360): string
+        # bounds parsed with dateutil; the observed datetime is rendered
+        # with output_strftime_format (or str) in the result
+        from dateutil.parser import parse as _parse
+        for name, b in (("min", min_v), ("max", max_v)):
+            if b is not None:
+                try:
+                    parsed = _parse(b)
+                except (TypeError, ValueError):
+                    continue
+                if name == "min":
+                    min_v = parsed
+                else:
+                    max_v = parsed
+    import datetime as _dt
+    cmp_value = value
+    if (isinstance(value, _dt.date)
+            and not isinstance(value, _dt.datetime)
+            and (isinstance(min_v, _dt.datetime)
+                 or isinstance(max_v, _dt.datetime))):
+        # DATE column vs dateutil-parsed bounds (always datetimes):
+        # python refuses date-vs-datetime comparison, so compare the
+        # day's midnight but keep the date for observed_value rendering
+        cmp_value = _dt.datetime.combine(value, _dt.time.min)
+    out = validate_metric_value_between(
+        cmp_value, min_v, max_v,
+        kw.get("strict_min", False), kw.get("strict_max", False))
+    if cmp_value is not value:
+        out["result"]["observed_value"] = value
+    if kw.get("parse_strings_as_datetimes") and out["result"].get(
+            "observed_value") is not None:
+        import datetime as _dt
+        ov = out["result"]["observed_value"]
+        if isinstance(ov, (_dt.datetime, _dt.date)):
+            fmt = kw.get("output_strftime_format")
+            out["result"]["observed_value"] = (
+                ov.strftime(fmt) if fmt else str(ov))
+    return ExpectationValidationResult(
+        success=out["success"], expectation_config=item.config, result=out["result"])
+
+
+def _agg_custom_evr(item: CompiledItem, row: dict,
+                    dfd: DataFrame | None = None) -> ExpectationValidationResult:
+    kw, handler = item.kwargs, item.spec.extra["handler"]
+    if handler == "row_count":
+        count = int(row[item.slots["value"]] or 0)
+        if item.spec.extra["mode"] == "equal":
+            success = count == int(kw["value"])
+            return ExpectationValidationResult(
+                success=success, expectation_config=item.config,
+                result={"observed_value": count})
+        return _between_evr(item, count)
+    if handler == "quantiles":
+        if item.info.get("use_approx_quantile"):
+            values = dfd.approxQuantile(
+                item.kwargs["column"], item.info["quantiles"], 0.0)
+        else:
+            values = row[item.slots["value"]]
+            values = list(values) if values is not None else []
+        ranges = kw["quantile_ranges"]["value_ranges"]
+        successes = []
+        for v, (lo, hi) in zip(values, ranges):
+            ok = v is not None and (lo is None or v >= lo) and (hi is None or v <= hi)
+            successes.append(bool(ok))
+        return ExpectationValidationResult(
+            success=all(successes) and len(values) == len(ranges),
+            expectation_config=item.config,
+            result={"observed_value": {
+                "quantiles": item.info["quantiles"], "values": values},
+                "details": {"success_details": successes}})
+    if handler == "unique_proportion":
+        distinct = int(row[item.slots["distinct"]] or 0)
+        nonnull = int(row[item.slots["nonnull"]] or 0)
+        proportion = (distinct / nonnull) if nonnull else None
+        return _between_evr(item, proportion)
+    if handler == "distinct_set":
+        observed = sorted(row[item.slots["value"]] or [])
+        mode = item.spec.extra["mode"]
+        oset = set(observed)
+        if kw.get("value_set") is None:
+            # null set = universal set (vacuously true subset/contains)
+            success = True if mode != "equal" else len(oset) == 0
+        else:
+            value_set = set(kw["value_set"])
+            success = {
+                "subset": oset <= value_set,
+                "superset": oset >= value_set,
+                "equal": oset == value_set,
+            }[mode]
+        return ExpectationValidationResult(
+            success=bool(success), expectation_config=item.config,
+            result={"observed_value": observed})
+    raise ValueError(handler)
+
+
+def _raw_sample_pool(item: CompiledItem, dfd: DataFrame, nonnull: int, *,
+                     cap: int, seed: int):
+    """Bounded uniform sample of the column's raw non-null values for
+    driver-side bootstrap scoring. Below the cap the pool is the whole
+    column; above it, a seeded fraction sample (slightly over-drawn,
+    then limited) — one extra narrow scan, pruned to the single column."""
+    import numpy as np
+    kw = item.kwargs
+    col = F.col(kw["column"]).cast("double")
+    nn = dfd.filter(col.isNotNull()).select(col.alias("v"))
+    if nonnull > cap:
+        frac = min(1.0, cap * 1.2 / nonnull)
+        nn = nn.sample(False, frac, seed)
+    vals = np.array([r["v"] for r in nn.limit(cap).collect()], dtype=float)
+    # sort: collect order varies with partitioning, and rng.choice draws
+    # by position — sorting makes the bootstrap value deterministic for
+    # a given multiset (exactly reproducible below the cap)
+    return np.sort(vals)
+
+
+def _drift_counts(item: CompiledItem, row: dict) -> tuple[list[float], float, float, float]:
+    counts = [float(row[a] or 0) for a in item.info["bin_aliases"]]
+    below = float(row[item.slots["below"]] or 0) if "below" in item.slots else 0.0
+    above = float(row[item.slots["above"]] or 0) if "above" in item.slots else 0.0
+    nonnull = float(row[item.slots["nonnull"]] or 0)
+    return counts, below, above, nonnull
+
+
+def _drift_evr(item: CompiledItem, row: dict,
+               dfd: DataFrame | None = None) -> ExpectationValidationResult:
+    kw = item.kwargs
+    counts, below, above, nonnull = _drift_counts(item, row)
+    score_kind = item.spec.extra["score"]
+    expected = item.info["expected_weights"]
+    categorical = "values" in item.info
+    if score_kind == "kl":
+        return _kl_evr(item, dfd, counts, below, above, nonnull, categorical)
+    if score_kind == "ks":
+        value, details = sketches.ks_statistic(counts, expected), {}
+    elif score_kind == "psi":
+        value, details = sketches.psi(counts, expected), {}
+    elif score_kind == "chisq_p":
+        value, details = sketches.chisquare_p_value(counts, expected)
+    elif score_kind == "ks_p" and kw.get("bootstrap"):
+        # reference-faithful mode (column_bootstrapped_ks_test_p_value
+        # .py:44-96): bootstrap raw samples against the partition CDF.
+        # The pool is a BOUNDED uniform sample of the column (cap
+        # default 100k) so driver memory stays flat at any scale — the
+        # bootstrap itself only draws samples*size values from it.
+        po = kw["partition_object"]
+        import math as _math
+        if any(_math.isinf(b) for b in po["bins"]):
+            raise ValueError("Partition endpoints must be finite.")
+        if sum(po.get("tail_weights", []) or []) > 0:
+            raise ValueError(
+                "Partition cannot have tail weights -- endpoints must "
+                "be finite.")
+        pool = _raw_sample_pool(
+            item, dfd, int(nonnull),
+            cap=int(kw.get("bootstrap_pool_cap", 100_000)),
+            seed=int(kw.get("bootstrap_seed", 42)))
+        value, details = sketches.bootstrap_ks_test(
+            pool, po["bins"], po["weights"],
+            p=float(kw.get("p", 0.05)),
+            bootstrap_samples=int(kw.get("bootstrap_samples") or 1000),
+            bootstrap_sample_size=kw.get("bootstrap_sample_size"),
+            seed=int(kw.get("bootstrap_seed", 42)))
+        details["ks_statistic_binned"] = sketches.ks_statistic(
+            counts, expected)
+    elif score_kind in ("ks_p", "ks_param_p"):
+        ks = sketches.ks_statistic(counts, expected)
+        n_eff = sum(counts)
+        value = sketches.ks_p_value(ks, n_eff)
+        details = {"ks_statistic": ks, "n_effective": n_eff,
+                   # semantic divergence from the reference, by design:
+                   # the reference (pandas-only) bootstraps RAW samples;
+                   # ours scores the KS asymptotic p on the BINNED sketch
+                   # (mergeable across partitions, bounded memory) — the
+                   # p-values differ, especially at small n. Pass
+                   # bootstrap=True for the reference-faithful raw-sample
+                   # bootstrap (bounded pool).
+                   "method": "asymptotic_ks_on_binned_sketch"}
+    else:
+        value, details = sketches.chisquare_statistic(counts, expected), {}
+    threshold = float(kw["threshold"])
+    if item.spec.extra.get("direction") == "greater":
+        success = value is not None and value > threshold
+    else:
+        success = value is not None and value < threshold
+    observed_partition = (
+        sketches.build_categorical_partition(item.info["values"], counts)
+        if categorical else sketches.build_partition_from_edges(item.info["bins"], counts))
+    return ExpectationValidationResult(
+        success=bool(success), expectation_config=item.config,
+        result={"observed_value": value,
+                "details": {"observed_partition": observed_partition,
+                            "expected_partition": kw["partition_object"], **details}})
+
+
+def _kl_evr(item: CompiledItem, dfd: DataFrame | None, counts, below, above,
+            nonnull, categorical: bool) -> ExpectationValidationResult:
+    """expect_column_kl_divergence_to_be_less_than with the reference's
+    exact semantics (expect_column_kl_divergence_to_be_less_than.py:
+    315-630): scipy-entropy normalization, tail_weights / holdout rules,
+    +/-inf endpoints, categorical outer-union fill, observed_value None
+    on inf/nan, success = kl <= threshold (True when threshold is None).
+    """
+    kw = item.kwargs
+    po = kw.get("partition_object")
+    threshold = kw.get("threshold")
+    th = float(kw.get("tail_weight_holdout", 0.0))
+    ih = float(kw.get("internal_weight_holdout", 0.0))
+
+    if item.info.get("auto"):
+        return _kl_auto_evr(item, dfd, nonnull, threshold, th, ih)
+
+    if categorical:
         values = item.info["values"]
         observed = {v: float(c) for v, c in zip(values, counts)}
-        out_mass = nonnull - sum(observed.values())
-        if out_mass > 0.5:
-            if th > 0:
-                return None
-            observed[object()] = out_mass
-        value, _ = sketches.kl_divergence_categorical(
-            observed, float(nonnull), values,
-            item.info["expected_weights"], th)
-        threshold = kw.get("threshold")
-        success = (True if threshold is None
-                   else bool(value <= float(threshold)))
-        displayable = not (math.isinf(value) or math.isnan(value))
-        return ExpectationValidationResult(
-            success=success, expectation_config=item.config,
-            result={"observed_value": value if displayable else None})
+        seen_mass = sum(observed.values())
+        value, details = None, None
+        if nonnull - seen_mass > 0.5:
+            # values outside the expected set exist: one groupBy job
+            # resolves their counts (rare path; the fused pass already
+            # covered the expected values). The driver only ever sees the
+            # top `max_unexpected_values` rows — above that, the KL is
+            # computed from three JVM-side scalars (distinct count, total,
+            # sum c*ln c), exactly, with driver memory flat at any
+            # out-of-set cardinality.
+            cap = int(kw.get("max_unexpected_values", 1000))
+            col = F.col(kw["column"])
+            out = (dfd.filter(col.isNotNull() & ~col.isin(values))
+                   .groupBy(col).agg(F.count(F.lit(1)).alias("__n")))
+            top = (out.orderBy(F.desc("__n"), col)
+                   .limit(cap + 1).collect())
+            if len(top) <= cap:
+                for r in top:
+                    observed[r[kw["column"]]] = float(r["__n"])
+            else:
+                cnt = F.col("__n").cast("double")
+                srow = out.agg(
+                    F.count(F.lit(1)).alias("n_distinct"),
+                    F.sum(cnt).alias("total"),
+                    F.sum(cnt * F.log(cnt)).alias("clogc")).first()
+                value = sketches.kl_divergence_categorical_scalars(
+                    observed, float(nonnull), values,
+                    item.info["expected_weights"], th,
+                    int(srow["n_distinct"]), float(srow["total"]),
+                    float(srow["clogc"]))
+                shown = {r[kw["column"]]: float(r["__n"]) for r in top[:cap]}
+                details = {
+                    "observed_partition": {
+                        "values": values, "weights": [
+                            observed.get(v, 0.0) / nonnull if nonnull else 0.0
+                            for v in values]},
+                    "expected_partition": {
+                        "values": values,
+                        "weights": item.info["expected_weights"]},
+                    "unexpected_values_truncated": {
+                        "distinct": int(srow["n_distinct"]),
+                        "total_count": int(srow["total"]),
+                        "top": {str(k): v for k, v in shown.items()},
+                        "note": f"out-of-set values exceed "
+                                f"max_unexpected_values={cap}; KL computed "
+                                "exactly from distributed scalars"},
+                }
+        if value is None:
+            value, details = sketches.kl_divergence_categorical(
+                observed, float(nonnull), values,
+                item.info["expected_weights"], th)
+    else:
+        value, details = sketches.kl_divergence(
+            counts, item.info["expected_weights"], below, above, nonnull,
+            th, ih, bins=item.info.get("bins"),
+            expected_tail_weights=po.get("tail_weights"))
 
-    def _map_evr_no_samples(self, item: CompiledItem, element: int, nonnull: int,
-                            unexpected: int) -> ExpectationValidationResult:
-        mostly = item.kwargs.get("mostly", 1.0)
-        success = mostly_success(element, nonnull, unexpected, mostly)
-        return ExpectationValidationResult(
-            success=success, expectation_config=item.config,
-            result={"element_count": element, "unexpected_count": unexpected,
-                    "missing_count": element - nonnull})
+    import math
+    displayable = not (math.isinf(value) or math.isnan(value))
+    observed_value = value if displayable else None
+    success = True if threshold is None else bool(value <= float(threshold))
+    if not categorical:
+        bins = item.info.get("bins") or []
+        shown_bins = [b for b in bins if not math.isinf(b)]
+        details = {
+            "observed_partition": {"bins": shown_bins,
+                                   "weights": details["observed_weights"],
+                                   "tail_weights": details["observed_tail_weights"]},
+            "expected_partition": {"bins": shown_bins,
+                                   "weights": details["expected_weights"],
+                                   "tail_weights": details["expected_tail_weights"]},
+        }
+    return ExpectationValidationResult(
+        success=success, expectation_config=item.config,
+        result={"observed_value": observed_value, "details": details})
+
+
+def _kl_auto_evr(item: CompiledItem, dfd: DataFrame, nonnull, threshold, th, ih):
+    """partition_object=None: build the partition FROM this batch
+    (reference :338-356) — the observed distribution scored against a
+    partition of itself (KL ~ 0; the result's value is the returned
+    partition for later runs, matching the profiler role)."""
+    import math
+    kw = item.kwargs
+    col_name = kw["column"]
+    col = F.col(col_name)
+    if item.info["auto"] == "categorical":
+        # BOUNDED (r3): the driver only ever sees the top `max_categories`
+        # groups. Above the cap, KL is still exact — the auto path scores
+        # the batch against a partition of itself, and KL(p||p) == 0
+        # identically at any cardinality — so only the returned partition
+        # is truncated (kept to the top-mass values, annotated). Mirrors
+        # the bounded given-partition out-of-set path above and the
+        # profiler's approx_distinct <= max_categories guard.
+        cap = int(kw.get("max_categories", 1000))
+        grouped = (dfd.filter(col.isNotNull()).groupBy(col)
+                   .agg(F.count(F.lit(1)).alias("__n")))
+        rows = grouped.orderBy(F.desc("__n"), col).limit(cap + 1).collect()
+        if len(rows) > cap:
+            srow = grouped.agg(
+                F.count(F.lit(1)).alias("n_distinct"),
+                F.sum(F.col("__n").cast("double")).alias("total")).first()
+            rows = rows[:cap]
+            observed = {r[col_name]: float(r["__n"]) for r in rows}
+            values = sorted(observed, key=lambda v: (v is None, str(v)))
+            weights = ([observed[v] / nonnull for v in values]
+                       if nonnull else [])
+            value = 0.0
+            details = {
+                "observed_partition": {"values": values, "weights": weights},
+                "expected_partition": {"values": values, "weights": weights},
+                "partition_truncated": {
+                    "distinct": int(srow["n_distinct"]),
+                    "total_count": int(srow["total"]),
+                    "max_categories": cap,
+                    "note": "auto partition bounded to the top max_categories "
+                            "values by count; KL(p||p) = 0 exactly at any "
+                            "cardinality, so observed_value is unaffected"},
+            }
+        else:
+            observed = {r[col_name]: float(r["__n"]) for r in rows}
+            values = sorted(observed, key=lambda v: (v is None, str(v)))
+            weights = ([observed[v] / nonnull for v in values]
+                       if nonnull else [])
+            value, details = sketches.kl_divergence_categorical(
+                observed, float(nonnull), values, weights, th)
+    else:
+        qs = [i / 10 for i in range(11)]
+        edges = dfd.approxQuantile(col_name, qs, 0.0) if nonnull else []
+        bins = sorted(set(e for e in edges if e is not None))
+        if len(bins) < 2:
+            return ExpectationValidationResult(
+                success=True, expectation_config=item.config,
+                result={"observed_value": None,
+                        "details": {"note": "not enough data to partition"}})
+        exprs = []
+        for i in range(len(bins) - 1):
+            lo, hi = bins[i], bins[i + 1]
+            cond = (col >= lo) & ((col <= hi) if i == len(bins) - 2 else (col < hi))
+            exprs.append(F.coalesce(
+                F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).alias(f"h{i}"))
+        hrow = dfd.agg(*exprs).first().asDict()
+        counts = [float(hrow[f"h{i}"]) for i in range(len(bins) - 1)]
+        weights = [c / nonnull for c in counts] if nonnull else []
+        value, details = sketches.kl_divergence(
+            counts, weights, 0.0, 0.0, nonnull, th, ih, bins=bins,
+            expected_tail_weights=None)
+        details = {
+            "observed_partition": {"bins": bins, "weights": details["observed_weights"],
+                                   "tail_weights": details["observed_tail_weights"]},
+            "expected_partition": {"bins": bins, "weights": details["expected_weights"],
+                                   "tail_weights": details["expected_tail_weights"]},
+        }
+    displayable = not (math.isinf(value) or math.isnan(value))
+    success = True if threshold is None else bool(value <= float(threshold))
+    return ExpectationValidationResult(
+        success=success, expectation_config=item.config,
+        result={"observed_value": value if displayable else None,
+                "details": details if isinstance(details, dict) else {}})
 
 
 def _jsonable(v: Any) -> Any:
@@ -1971,15 +1704,12 @@ def _jsonable(v: Any) -> Any:
         return str(v)
 
 
-def _opt_int(v: Any) -> int | None:
-    return None if v is None else int(v)
-
-
 def read_partition_verdicts(spark, sink_path: str) -> DataFrame:
     """All per-partition verdict rows a `partition_verdict_sink` run wrote
-    (distributed derivation + the driver-derived narrow items + the z-score
-    pass), as one DataFrame — the scale-safe replacement for
-    result.meta['partition_verdicts'] when partitions number 100k+."""
+    (one file per domain's fused items, per window/unique item and per
+    z-score pass, each scored on executors), as one DataFrame — the
+    scale-safe replacement for result.meta['partition_verdicts'] when
+    partitions number 100k+."""
     import os
     return spark.read.parquet(os.path.join(sink_path, "verdicts-*.parquet"))
 

@@ -171,8 +171,8 @@ def _wide_suite():
             .add("expect_column_quantile_values_to_be_between", column="x",
                  quantile_ranges={"quantiles": [0.5],
                                   "value_ranges": [[0.0, 49.0]]})
-            # r5: distinct_set rides the Catalyst sink path (array_except on
-            # the stored collect_set slot). v=0 only ever lands in bucket 0
+            # distinct_set is scored from the stored collect_set slot. v=0
+            # only ever lands in bucket 0
             # and v=1 only in bucket 1 (1000k+j ≡ j mod 8), so EVERY
             # per-partition verdict fails while the global one passes —
             # catches a path that conflates the two.
@@ -183,8 +183,8 @@ def _wide_suite():
             # every bucket, attributed to the row's own input partition)
             .add("expect_column_values_to_be_increasing", column="x",
                  group_by="bucket", order_by="id", mostly=0.5)
-            # r5 late: categorical KL rides the Arrow sink path when
-            # tail_weight_holdout == 0. Every bucket sees only 2 of the 3
+            # categorical KL with tail_weight_holdout == 0 is scored from
+            # the rollup row alone. Every bucket sees only 2 of the 3
             # expected values (KL ~= 0.347 > 0.2) while the GLOBAL mix
             # matches exactly (KL = 0) — global passes, every partition
             # fails.
@@ -216,7 +216,7 @@ def test_unique_and_drift_sink_rows_are_distributed(spark, tmp_path):
     assert [r.success for r in collected.results] == \
         [r.success for r in sunk.results]
 
-    # every kind rode the distributed path: no narrow driver fallback file
+    # every kind was scored on executors: no driver-written verdict file
     assert not glob.glob(f"{sink_dir}/*-driver.parquet")
 
     got = _norm_sink(read_partition_verdicts(spark, sink_dir))
@@ -389,28 +389,88 @@ def test_null_partition_value_is_not_the_grand_total(spark, tmp_path):
             r.result["unexpected_count"], etype
 
 
+def test_sink_verdicts_match_collected_at_the_edges(spark, tmp_path):
+    """Sink rows equal the collected verdicts in every field where an
+    expression-level re-implementation drifts from the Python semantics:
+    a `mostly` ratio exactly on its threshold (45 of 100 unexpected with
+    mostly=0.55, where 55.0 >= 0.55 * 100 is False in floating point), for
+    a fused map item and a uniqueness item, a NaN mean/max under a
+    min-only bound (NaN sorts above every double in Spark; the Python
+    comparison, like the global EVR, fails it), and a null partition value
+    under string bounds (null in the sink, not the string "None")."""
+    rows = [(None if p == 2 else str(p), int(i < 45),
+             p * 1000 + (i // 3 if i < 45 else i),
+             float("nan") if (p, i) == (1, 0) else float(i), f"s{i}")
+            for p in range(3) for i in range(100)]
+    df = spark.createDataFrame(
+        rows, "part string, m int, u long, x double, s string")
+    suite = (ExpectationSuite("edges")
+             .add("expect_column_values_to_be_in_set", column="m",
+                  value_set=[0], mostly=0.55)
+             .add("expect_column_values_to_be_unique", column="u",
+                  mostly=0.55)
+             .add("expect_column_mean_to_be_between", column="x",
+                  min_value=0)
+             .add("expect_column_max_to_be_between", column="x",
+                  min_value=0)
+             .add("expect_column_max_to_be_between", column="s",
+                  min_value="a", max_value="z"))
+    collected = validate(df, suite, per_partition=True, partition_col="part")
+    sink_dir = str(tmp_path / "sink")
+    validate(df, suite, per_partition=True, partition_col="part",
+             partition_verdict_sink=sink_dir)
+
+    def observed(v):
+        # the sink's observed_value column holds numbers only
+        if not isinstance(v, float):
+            return None
+        return "nan" if math.isnan(v) else v
+
+    got = {(r["partition_id"], r["expectation_type"], r["domain"]):
+           (r["success"], r["element_count"], r["missing_count"],
+            r["unexpected_count"], observed(r["observed_value"]))
+           for r in read_partition_verdicts(spark, sink_dir).collect()}
+    want = {(v["partition_id"], v["expectation_type"], v["domain"]):
+            (v["success"], v["element_count"], v["missing_count"],
+             v["unexpected_count"], observed(v["observed_value"]))
+            for v in collected.meta["partition_verdicts"]}
+    assert got == want
+    for p in ("0", "1", None):
+        assert want[(p, "expect_column_values_to_be_in_set", "m")] == \
+            (True, 100, 0, 45, None), p
+        assert want[(p, "expect_column_values_to_be_unique", "u")] == \
+            (True, 100, 0, 45, None), p
+        assert want[(p, "expect_column_max_to_be_between", "s")][0] is True
+    for etype in ("expect_column_mean_to_be_between",
+                  "expect_column_max_to_be_between"):
+        assert want[("0", etype, "x")][0] is True
+        assert want[("1", etype, "x")][0] is False
+        assert want[("1", etype, "x")][4] == "nan"
+
+
 @pytest.mark.parametrize("sink", [False, True])
 def test_partition_scoring_error_is_recorded(spark, tmp_path, monkeypatch,
                                              caplog, sink):
     """A partition whose verdict raises while being scored is reported in
     meta["partition_scoring_errors"] and the "sparkcheck" log, and only that
     partition's row is missing; the other partitions and the global EVR
-    are unaffected. String bounds keep the max item off the Catalyst sink
-    path, so sink mode scores it through the narrow collected fallback."""
-    from sparkcheck.runner import ValidationRun
+    are unaffected. Sink mode scores on executors: the error comes back to
+    the driver through an accumulator. The patched scorer is a nested
+    function, so it is shipped to executors by value."""
+    from sparkcheck import runner
     df = spark.createDataFrame(
         [(i % 3, f"s{i % 7}") for i in range(60)], "p int, s string")
     suite = ExpectationSuite("err").add(
         "expect_column_max_to_be_between", column="s",
         min_value="a", max_value="z")
-    inner = ValidationRun._evr_from_row_quiet
+    inner = runner.score_partition
 
-    def flaky(self, item, row):
+    def flaky(item, row):
         if row["__pid"] == 1:
             raise RuntimeError("boom")
-        return inner(self, item, row)
+        return inner(item, row)
 
-    monkeypatch.setattr(ValidationRun, "_evr_from_row_quiet", flaky)
+    monkeypatch.setattr(runner, "score_partition", flaky)
     kw = {"partition_verdict_sink": str(tmp_path / "sink")} if sink else {}
     with caplog.at_level("WARNING", logger="sparkcheck"):
         res = validate(df, suite, per_partition=True, partition_col="p", **kw)
