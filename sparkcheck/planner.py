@@ -21,7 +21,7 @@ Domains: expectations sharing the same ``row_condition`` share one fused pass
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -38,11 +38,13 @@ class SlotTable:
     exprs: dict[str, Column] = field(default_factory=dict)  # alias -> expr
     keys: dict[str, str] = field(default_factory=dict)      # metric key -> alias
 
-    def add(self, key: str, expr: Column) -> str:
+    def add(self, key: str, build: Callable[[], Column]) -> str:
+        """The slot alias of ``key``; ``build`` makes its expression, and
+        runs only for a new key (every Column built costs py4j calls)."""
         if key in self.keys:
             return self.keys[key]
         alias = f"m{len(self.exprs)}"
-        self.exprs[alias] = expr
+        self.exprs[alias] = build()
         self.keys[key] = alias
         return alias
 
@@ -69,6 +71,10 @@ class DomainPlan:
     fused_items: list[CompiledItem] = field(default_factory=list)     # map / agg / agg_custom / drift
     dependent_items: list[CompiledItem] = field(default_factory=list)  # z-score (needs pass-1 values)
     job_items: list[CompiledItem] = field(default_factory=list)        # window / unique / value / referential / audio
+    # a map item's "unexpected" slot alias -> the row condition it counts,
+    # reused by the violation sampler. Kept here, not on CompiledItem: sink
+    # mode pickles items to executors, and a Column does not pickle.
+    unexpected: dict[str, Column] = field(default_factory=dict)
 
 
 @dataclass
@@ -85,13 +91,34 @@ def _nonnull_pred(spec: ExpectationSpec, kw: dict) -> Column:
     return F.col(kw["column"]).isNotNull()
 
 
+def _job_nonnull(spec: ExpectationSpec, kw: dict) -> Column:
+    """The domain filter of a job item's nonnull slot."""
+    if spec.extra.get("compound") or "column_list" in kw:
+        return C.multicolumn_domain_filter(
+            {**kw, "ignore_row_if": kw.get("ignore_row_if", "all_values_are_missing")})
+    if "column" in kw:
+        return F.col(kw["column"]).isNotNull()
+    return F.lit(True)
+
+
 def _count_if(cond: Column) -> Column:
     return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
 
 
-def _add_common_map_slots(dp: DomainPlan, item: CompiledItem, nn: Column, nn_key: str) -> None:
-    item.slots["element"] = dp.slot_table.add("table.row_count", F.count(F.lit(1)))
-    item.slots["nonnull"] = dp.slot_table.add(f"nonnull::{nn_key}", _count_if(nn))
+def _nonnull_slot(st: SlotTable, column: str) -> str:
+    return st.add(f"nonnull::col:{column}",
+                  lambda: _count_if(F.col(column).isNotNull()))
+
+
+def _row_count() -> Column:
+    return F.count(F.lit(1))
+
+
+def _add_common_map_slots(dp: DomainPlan, item: CompiledItem,
+                          nn: Callable[[], Column], nn_key: str) -> None:
+    item.slots["element"] = dp.slot_table.add("table.row_count", _row_count)
+    item.slots["nonnull"] = dp.slot_table.add(
+        f"nonnull::{nn_key}", lambda: _count_if(nn()))
 
 
 def _nn_key(spec: ExpectationSpec, kw: dict) -> str:
@@ -126,19 +153,21 @@ def compile_suite(suite_expectations: list[ExpectationConfiguration],
 
         if spec.kind == "map":
             nn = _nonnull_pred(spec, kw)
-            expected = spec.condition(kw)
-            _add_common_map_slots(dp, item, nn, _nn_key(spec, kw))
+            _add_common_map_slots(dp, item, lambda: nn, _nn_key(spec, kw))
+            unexpected = nn & ~spec.condition(kw)
             item.slots["unexpected"] = dp.slot_table.add(
-                f"unexp::{config.id}", _count_if(nn & ~expected))
+                f"unexp::{config.id}", lambda: _count_if(unexpected))
+            dp.unexpected.setdefault(item.slots["unexpected"], unexpected)
             dp.fused_items.append(item)
 
         elif spec.kind == "map_dependent":  # z-score: needs mean/std first
-            col = F.col(kw["column"])
-            nn = col.isNotNull()
-            _add_common_map_slots(dp, item, nn, _nn_key(spec, kw))
-            item.slots["mean"] = dp.slot_table.add(f"agg::mean::{kw['column']}", F.avg(col))
+            c = kw["column"]
+            _add_common_map_slots(dp, item, lambda: F.col(c).isNotNull(),
+                                  _nn_key(spec, kw))
+            item.slots["mean"] = dp.slot_table.add(
+                f"agg::mean::{c}", lambda: F.avg(c))
             item.slots["stddev"] = dp.slot_table.add(
-                f"agg::stddev::{kw['column']}", F.stddev_samp(col))
+                f"agg::stddev::{c}", lambda: F.stddev_samp(c))
             dp.dependent_items.append(item)
 
         elif spec.kind == "audio":
@@ -152,16 +181,10 @@ def compile_suite(suite_expectations: list[ExpectationConfiguration],
             # these need their own job, but element/nonnull counts still come
             # from the fused pass (except pure other-table checks)
             if spec.extra.get("handler") == "row_count_other_table":
-                item.slots["value"] = dp.slot_table.add("table.row_count", F.count(F.lit(1)))
+                item.slots["value"] = dp.slot_table.add("table.row_count", _row_count)
             else:
-                if spec.extra.get("compound") or "column_list" in kw:
-                    nn = C.multicolumn_domain_filter(
-                        {**kw, "ignore_row_if": kw.get("ignore_row_if", "all_values_are_missing")})
-                elif "column" in kw:
-                    nn = F.col(kw["column"]).isNotNull()
-                else:
-                    nn = F.lit(True)
-                _add_common_map_slots(dp, item, nn, _nn_key(spec, kw))
+                _add_common_map_slots(dp, item, lambda: _job_nonnull(spec, kw),
+                                      _nn_key(spec, kw))
                 if spec.kind == "map_unique" and unique_strategy in ("approx", "auto"):
                     # HLL++ prescreen (north_star: approx_count_distinct with
                     # exact fallback). Not free: HLL++ is an imperative
@@ -178,13 +201,15 @@ def compile_suite(suite_expectations: list[ExpectationConfiguration],
                               if spec.extra.get("compound") else F.col(kw["column"]))
                     item.slots["approx_distinct"] = dp.slot_table.add(
                         f"hll::{kwargs_id(kw)}",
-                        F.approx_count_distinct(F.when(nn, target),
-                                                float(kw.get("rsd", 0.05))))
+                        lambda: F.approx_count_distinct(
+                            F.when(_job_nonnull(spec, kw), target),
+                            float(kw.get("rsd", 0.05))))
             dp.job_items.append(item)
 
         elif spec.kind == "agg":
             item.slots["value"] = dp.slot_table.add(
-                f"agg::{config.expectation_type}::{kwargs_id(kw)}", spec.agg(kw))
+                f"agg::{config.expectation_type}::{kwargs_id(kw)}",
+                lambda: spec.agg(kw))
             dp.fused_items.append(item)
 
         elif spec.kind == "agg_custom":
@@ -205,9 +230,9 @@ def _compile_agg_custom(dp: DomainPlan, item: CompiledItem) -> None:
     kw, handler = item.kwargs, item.spec.extra["handler"]
     st = dp.slot_table
     if handler == "row_count":
-        item.slots["value"] = st.add("table.row_count", F.count(F.lit(1)))
+        item.slots["value"] = st.add("table.row_count", _row_count)
     elif handler == "quantiles":
-        col = F.col(kw["column"])
+        col = kw["column"]
         qr = kw["quantile_ranges"]
         quantiles = [float(q) for q in qr["quantiles"]]
         for pair in qr.get("value_ranges", []):
@@ -221,8 +246,9 @@ def _compile_agg_custom(dp: DomainPlan, item: CompiledItem) -> None:
             # aggregation buffers every value of the column per group — fine
             # up to ~10^8 rows per executor, unusable at 10^12. At scale use
             # the default sketch path or pass allow_relative_error.
-            expr = F.percentile(col, F.array(*[F.lit(q) for q in quantiles]))
-            item.slots["value"] = st.add(f"quantiles::{kwargs_id(kw)}", expr)
+            item.slots["value"] = st.add(
+                f"quantiles::{kwargs_id(kw)}", lambda: F.percentile(
+                    col, F.array(*[F.lit(q) for q in quantiles])))
         elif kw.get("exact") is True or (err is not False and err == 0):
             # reference-exact semantics: df.approxQuantile(.., 0.0) returns
             # the same order statistics with the same rank convention
@@ -246,27 +272,30 @@ def _compile_agg_custom(dp: DomainPlan, item: CompiledItem) -> None:
             # it (documented memory bound).
             accuracy = (10_000 if err is False
                         else max(1, int(1.0 / float(err))))
-            expr = F.percentile_approx(
-                col, F.array(*[F.lit(q) for q in quantiles]), F.lit(accuracy))
-            item.slots["value"] = st.add(f"quantiles::{kwargs_id(kw)}", expr)
+            item.slots["value"] = st.add(
+                f"quantiles::{kwargs_id(kw)}", lambda: F.percentile_approx(
+                    col, F.array(*[F.lit(q) for q in quantiles]),
+                    F.lit(accuracy)))
         item.info["quantiles"] = quantiles
     elif handler == "unique_proportion":
-        col = F.col(kw["column"])
+        col = kw["column"]
         if kw.get("approximate"):
             # HLL++ estimate / nonnull — mergeable across partitions AND
             # across incremental snapshots (same opt-in semantics as
             # expect_column_unique_value_count_to_be_between)
             rsd = float(kw.get("rsd", 0.05))
             item.slots["distinct"] = st.add(
-                f"agg::approxCountDistinct::{kw['column']}::{rsd}",
-                F.approx_count_distinct(col, rsd))
+                f"agg::approxCountDistinct::{col}::{rsd}",
+                lambda: F.approx_count_distinct(col, rsd))
         else:
-            item.slots["distinct"] = st.add(f"agg::countDistinct::{kw['column']}", F.count_distinct(col))
-        item.slots["nonnull"] = st.add(f"nonnull::col:{kw['column']}", _count_if(col.isNotNull()))
+            item.slots["distinct"] = st.add(
+                f"agg::countDistinct::{col}", lambda: F.count_distinct(col))
+        item.slots["nonnull"] = _nonnull_slot(st, col)
     elif handler == "distinct_set":
-        col = F.col(kw["column"])
+        col = kw["column"]
         item.slots["value"] = st.add(
-            f"agg::distinct_set::{kw['column']}", F.array_sort(F.collect_set(col)))
+            f"agg::distinct_set::{col}",
+            lambda: F.array_sort(F.collect_set(col)))
     else:
         raise ValueError(f"unknown agg_custom handler {handler}")
 
@@ -280,7 +309,6 @@ def _compile_drift(dp: DomainPlan, item: CompiledItem) -> None:
     bucket keeps the whole drift check inside the single fused pass.
     """
     kw = item.kwargs
-    col = F.col(kw["column"])
     st = dp.slot_table
     po = kw.get("partition_object")
     if po is None:
@@ -291,31 +319,32 @@ def _compile_drift(dp: DomainPlan, item: CompiledItem) -> None:
         # value_counts — expect_column_kl_divergence_to_be_less_than.py:
         # 338-356); resolved by the runner as its own small jobs
         item.info["auto"] = "continuous" if kw.get("bucketize_data", True) else "categorical"
-        item.slots["nonnull"] = st.add(
-            f"nonnull::col:{kw['column']}", _count_if(col.isNotNull()))
+        item.slots["nonnull"] = _nonnull_slot(st, kw["column"])
         item.info["expected_weights"] = []
         item.info["bin_aliases"] = []
         return
-    item.slots["nonnull"] = st.add(f"nonnull::col:{kw['column']}", _count_if(col.isNotNull()))
+    item.slots["nonnull"] = _nonnull_slot(st, kw["column"])
+    col = F.col(kw["column"])
     base = kwargs_id({"c": kw["column"], "po": po})
     if "bins" in po:
         bins = [float(b) for b in po["bins"]]
         aliases = []
         for i in range(len(bins) - 1):
             lo, hi = bins[i], bins[i + 1]
-            if i == len(bins) - 2:
-                cond = (col >= lo) & (col <= hi)  # last bin closed (GE histogram)
-            else:
-                cond = (col >= lo) & (col < hi)
-            aliases.append(st.add(f"hist::{base}::{i}", _count_if(cond)))
-        item.slots["below"] = st.add(f"hist::{base}::below", _count_if(col < bins[0]))
-        item.slots["above"] = st.add(f"hist::{base}::above", _count_if(col > bins[-1]))
+            last = i == len(bins) - 2  # last bin closed (GE histogram)
+            aliases.append(st.add(f"hist::{base}::{i}", lambda: _count_if(
+                (col >= lo) & ((col <= hi) if last else (col < hi)))))
+        item.slots["below"] = st.add(
+            f"hist::{base}::below", lambda: _count_if(col < bins[0]))
+        item.slots["above"] = st.add(
+            f"hist::{base}::above", lambda: _count_if(col > bins[-1]))
         item.info["bin_aliases"] = aliases
         item.info["bins"] = bins
     else:
         values = po["values"]
         aliases = [
-            st.add(f"cat::{base}::{i}", _count_if(col.eqNullSafe(F.lit(v))))
+            st.add(f"cat::{base}::{i}",
+                   lambda: _count_if(col.eqNullSafe(F.lit(v))))
             for i, v in enumerate(values)
         ]
         item.info["bin_aliases"] = aliases

@@ -9,11 +9,14 @@ Job structure (vs the reference, SURVEY.md §4):
   map_metric_provider.py:2344-2490).
 - pass 2 (optional): dependent conditions (z-score) whose expressions need
   pass-1 values (mean/stddev) — one fused agg for all of them together.
+- violation samples: ONE rank-limited action per domain for its failing map
+  items (and one for its failing z-score items) — each row exploded into the
+  items it violates, first k per item by scan position — where the reference
+  runs one filter + limit job per item (map_metric_provider.py:2372-2415).
 - extra jobs only where semantics require them: window conditions
   (increasing/decreasing), uniqueness dup-groups (groupBy instead of the
   reference's whole-table window — column_values_unique.py:83-87), referential
-  anti-joins, audio-invariant joins, and violation samples for failed
-  expectations (filter + limit, like map_metric_provider.py:2372-2415).
+  anti-joins and audio-invariant joins.
 
 Scale notes: the fused pass is a single scan with map-side partial
 aggregation; `bytes`-typed columns are never read unless an audio expectation
@@ -234,10 +237,41 @@ class ValidationRun:
                 os.path.join(sink, f"verdicts-domain-{didx}.parquet"))
         return grow
 
-    def _collect_samples(self, dfd: DataFrame, unexpected_cond: Column,
-                         item: CompiledItem) -> tuple[list, list | None]:
-        """Violation samples, plus — when the result format names
-        `unexpected_index_column_names` — a keyed index entry per sample.
+    def _samples(self, dfd: DataFrame,
+                 wanted: list[tuple[CompiledItem, Column]]) -> dict:
+        """id(item) -> ``(samples, index_list)`` for every ``(item,
+        unexpected condition)`` in ``wanted``, from one Spark action
+        (_collect_samples); nothing under BOOLEAN_ONLY. If that action
+        raises, each wanted item maps to its exception EVR instead (it
+        re-raises without catch_exceptions), the rule the fused pass
+        follows; items not in ``wanted`` are unaffected."""
+        if not wanted or self.rf["result_format"] == "BOOLEAN_ONLY":
+            return {}
+        try:
+            return self._collect_samples(dfd, wanted)
+        except Exception as exc:  # noqa: BLE001 — attributed to the sampled items
+            if not self.catch_exceptions:
+                raise
+            tb = traceback.format_exc()
+            return {id(it): _exception_evr(it.config, exc, tb)
+                    for it, _ in wanted}
+
+    def _collect_samples(self, dfd: DataFrame,
+                         wanted: list[tuple[CompiledItem, Column]]) -> dict:
+        """The first k violation samples of every wanted item, plus — when
+        the result format names `unexpected_index_column_names` — a keyed
+        index entry per sample, from ONE scan and ONE Spark action.
+
+        Each row is tagged with its scan position (``__mid``: partition,
+        then position in it) and exploded into one row per item whose
+        condition it violates (clean rows explode to nothing, and every
+        condition is evaluated once per row); ``row_number()`` per item in
+        ``__mid`` order keeps the first k. Spark plans that as a
+        WindowGroupLimit on both sides of the exchange, so the shuffle holds
+        at most partitions x items x k rows however many rows violate, and
+        the first k in scan order are the rows ``filter().limit(k)`` takes:
+        GE's "first N" (map_metric_provider.py:2372-2415 runs one such job
+        per item instead).
 
         Spark has no stable row index, so the reference's pandas-only
         `unexpected_index_list` (positional indices, expectation.py:
@@ -245,31 +279,50 @@ class ValidationRun:
         does: the caller names business-key column(s) (e.g. clip_id) and
         each entry is a dict of those key values + the domain column's
         unexpected value. Same limit/caps as the sample list."""
-        if self.rf["result_format"] == "BOOLEAN_ONLY":
-            return [], None
-        kw = item.kwargs
-        value = item.spec.sample_value(kw) if item.spec.sample_value else F.col(kw["column"])
-        idx_cols = self.rf.get("unexpected_index_column_names") or None
-        sel = [value.alias("v")]
-        if idx_cols:
-            sel += [F.col(c).alias(f"__idx_{i}") for i, c in enumerate(idx_cols)]
-        rows = (
-            dfd.filter(unexpected_cond)
-            .select(*sel)
-            .limit(self._sample_limit())
-            .collect()
-        )
-        samples = [self._sample_py(r["v"], kw) for r in rows]
-        if not idx_cols:
-            return samples, None
-        domain = kw.get("column")
-        index_list = []
-        for r, s in zip(rows, samples):
-            entry = {c: r[f"__idx_{i}"] for i, c in enumerate(idx_cols)}
-            if domain and domain not in entry:
-                entry[domain] = s
-            index_list.append(entry)
-        return samples, index_list
+        k = self._sample_limit()
+        idx_cols = self.rf.get("unexpected_index_column_names") or []
+        rows: list = []
+        if k > 0:
+            values = [(it.spec.sample_value(it.kwargs) if it.spec.sample_value
+                       else F.col(it.kwargs["column"])).alias(f"__v{i}")
+                      for i, (it, _) in enumerate(wanted)]
+            violated = F.array_compact(F.array(
+                *[F.when(cond, F.lit(i)) for i, (_, cond) in enumerate(wanted)]))
+            first = Window.partitionBy("__item").orderBy("__mid")
+            ranked = (dfd.select(
+                          F.explode(violated).alias("__item"),
+                          F.monotonically_increasing_id().alias("__mid"),
+                          *values, *[F.col(c).alias(f"__idx_{j}")
+                                     for j, c in enumerate(idx_cols)])
+                      .withColumn("__rank", F.row_number().over(first))
+                      .filter(F.col("__rank") <= k))
+            # Spark plans WindowGroupLimit only up to this k (1000 by
+            # default); above it (a COMPLETE unexpected_list_limit) every
+            # violating row would be shuffled, so the action raises it
+            from .metrics.audio import _scoped_conf
+            spark = dfd.sparkSession
+            group_limit = "spark.sql.optimizer.windowGroupLimitThreshold"
+            raise_to = k if k > int(spark.conf.get(group_limit)) else None
+            with _scoped_conf(spark, group_limit, raise_to):
+                rows = ranked.collect()
+        by_item: dict[int, list] = {i: [] for i in range(len(wanted))}
+        for r in sorted(rows, key=lambda r: (r["__item"], r["__rank"])):
+            by_item[r["__item"]].append(r)
+        out = {}
+        for i, (item, _) in enumerate(wanted):
+            kw = item.kwargs
+            samples = [self._sample_py(r[f"__v{i}"], kw) for r in by_item[i]]
+            index_list = None
+            if idx_cols:
+                domain = kw.get("column")
+                index_list = []
+                for r, s in zip(by_item[i], samples):
+                    entry = {c: r[f"__idx_{j}"] for j, c in enumerate(idx_cols)}
+                    if domain and domain not in entry:
+                        entry[domain] = s
+                    index_list.append(entry)
+            out[id(item)] = (samples, index_list)
+        return out
 
     @staticmethod
     def _sample_py(v, kw: dict):
@@ -290,6 +343,18 @@ class ValidationRun:
         result = format_map_output(self.rf, success, element, nonnull, unexpected, samples,
                                    unexpected_index_list=index_list)
         return ExpectationValidationResult(success=success, expectation_config=item.config, result=result)
+
+    def _sampled_map_evr(self, item: CompiledItem, grow: dict, unexpected: int,
+                         sampled: dict) -> ExpectationValidationResult:
+        """A map item's EVR: element/nonnull from the fused row, its
+        unexpected count, and its samples (or exception EVR) in
+        ``sampled``."""
+        got = sampled.get(id(item), ([], None))
+        if isinstance(got, ExpectationValidationResult):
+            return got
+        return self._map_evr(item, int(grow[item.slots["element"]] or 0),
+                             int(grow[item.slots["nonnull"]] or 0),
+                             unexpected, *got)
 
 
     def _record_partition_verdict(self, pid: int, item: CompiledItem, success: bool,
@@ -356,23 +421,15 @@ class ValidationRun:
 
     # ---------------------------------------------------------- fused evrs
 
-    def _evr_from_row(self, item: CompiledItem, row: dict,
-                      dfd: DataFrame) -> ExpectationValidationResult:
-        """Build the EVR for a fused item from the domain's global agg row;
+    def _evr_from_row(self, item: CompiledItem, row: dict, dfd: DataFrame,
+                      sampled: dict) -> ExpectationValidationResult:
+        """Build the EVR for a fused item from the domain's global agg row
+        and, for a map item, its entry in ``sampled`` (see _samples);
         per-partition rows go through score_partition."""
-        spec, kw = item.spec, item.kwargs
+        spec = item.spec
         if spec.kind == "map":
-            element = int(row[item.slots["element"]] or 0)
-            nonnull = int(row[item.slots["nonnull"]] or 0)
-            unexpected = int(row[item.slots["unexpected"]] or 0)
-            samples: list = []
-            index_list = None
-            if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
-                nn = self._nonnull_of(item)
-                expected = spec.condition(kw)
-                samples, index_list = self._collect_samples(
-                    dfd, nn & ~expected, item)
-            return self._map_evr(item, element, nonnull, unexpected, samples, index_list)
+            return self._sampled_map_evr(
+                item, row, int(row[item.slots["unexpected"]] or 0), sampled)
 
         if spec.kind == "agg":
             return _between_evr(item, row[item.slots["value"]])
@@ -384,14 +441,6 @@ class ValidationRun:
             return _drift_evr(item, row, dfd)
 
         raise ValueError(f"unexpected fused kind {spec.kind}")
-
-    def _nonnull_of(self, item: CompiledItem) -> Column:
-        spec, kw = item.spec, item.kwargs
-        if not spec.filter_nulls:
-            return F.lit(True)
-        if spec.nonnull is not None:
-            return spec.nonnull(kw)
-        return F.col(kw["column"]).isNotNull()
 
 
     # ----------------------------------------------------------- job items
@@ -760,7 +809,7 @@ class ValidationRun:
                              didx: int = 0) -> list[tuple[CompiledItem, ExpectationValidationResult]]:
         """Z-score conditions: second fused pass using pass-1 mean/stddev."""
         exprs = []
-        conds: dict[str, Column] = {}
+        conds: list[Column] = []
         for i, item in enumerate(items):
             kw = item.kwargs
             mean = grow[item.slots["mean"]]
@@ -768,7 +817,7 @@ class ValidationRun:
             expected = C.z_score_under_threshold(kw, mean, std)
             nn = F.col(kw["column"]).isNotNull()
             cond = nn & ~expected
-            conds[f"z{i}"] = cond
+            conds.append(cond)
             exprs.append(F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).alias(f"z{i}"))
         if self.per_partition and self.partition_verdict_sink is not None:
             # sink mode (r4 #6): rollup written distributed; only the global
@@ -811,18 +860,11 @@ class ValidationRun:
                         r["__pid"], item, True, {"unexpected_count": int(r[f"z{i}"] or 0)})
         else:
             zrow = dfd.agg(*exprs).first().asDict() if exprs else {}
-        out = []
-        for i, item in enumerate(items):
-            element = int(grow[item.slots["element"]] or 0)
-            nonnull = int(grow[item.slots["nonnull"]] or 0)
-            unexpected = int(zrow.get(f"z{i}", 0) or 0)
-            samples: list = []
-            index_list = None
-            if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
-                samples, index_list = self._collect_samples(dfd, conds[f"z{i}"], item)
-            evr = self._map_evr(item, element, nonnull, unexpected, samples, index_list)
-            out.append((item, evr))
-        return out
+        unexpected = [int(zrow.get(f"z{i}", 0) or 0) for i in range(len(items))]
+        sampled = self._samples(dfd, [(item, conds[i]) for i, item in
+                                      enumerate(items) if unexpected[i]])
+        return [(item, self._sampled_map_evr(item, grow, ux, sampled))
+                for item, ux in zip(items, unexpected)]
 
     # -------------------------------------------------------------- schema
 
@@ -1055,39 +1097,22 @@ class ValidationRun:
                     f"evaluation parameter(s) not supplied: {unresolved}")
                 if not self.catch_exceptions:
                     raise exc
-                evrs[id(config)] = ExpectationValidationResult(
-                    success=False, expectation_config=config, result={},
-                    exception_info={
-                        "raised_exception": True,
-                        "exception_message": f"KeyError: {exc}",
-                        "exception_traceback": None,
-                    })
+                evrs[id(config)] = _exception_evr(config, exc)
                 continue
             missing = self._missing_columns(config)
             if missing:
                 exc = KeyError(f"column(s) not found in table: {missing}")
                 if not self.catch_exceptions:
                     raise exc
-                evrs[id(config)] = ExpectationValidationResult(
-                    success=False, expectation_config=config, result={},
-                    exception_info={
-                        "raised_exception": True,
-                        "exception_message": f"KeyError: {exc}",
-                        "exception_traceback": None,
-                    })
+                evrs[id(config)] = _exception_evr(config, exc)
                 continue
             try:
                 self._validate_config(config)
             except Exception as exc:  # noqa: BLE001 — config errors become EVRs
                 if not self.catch_exceptions:
                     raise
-                evrs[id(config)] = ExpectationValidationResult(
-                    success=False, expectation_config=config, result={},
-                    exception_info={
-                        "raised_exception": True,
-                        "exception_message": f"{type(exc).__name__}: {exc}",
-                        "exception_traceback": traceback.format_exc(),
-                    })
+                evrs[id(config)] = _exception_evr(
+                    config, exc, traceback.format_exc())
                 continue
             plannable.append(config)
         plan = compile_suite(plannable, self.unique_strategy)
@@ -1098,13 +1123,8 @@ class ValidationRun:
             except Exception as e:  # noqa: BLE001
                 if not self.catch_exceptions:
                     raise
-                evrs[id(config)] = ExpectationValidationResult(
-                    success=False, expectation_config=config, result={},
-                    exception_info={
-                        "raised_exception": True,
-                        "exception_message": f"{type(e).__name__}: {e}",
-                        "exception_traceback": traceback.format_exc(),
-                    })
+                evrs[id(config)] = _exception_evr(
+                    config, e, traceback.format_exc())
 
         for item in plan.schema_items:
             record(item.config, lambda it=item: self._run_schema_item(it))
@@ -1151,18 +1171,16 @@ class ValidationRun:
                         raise
                     tb = traceback.format_exc()
                     for it in dp.fused_items + dp.dependent_items + dp.job_items:
-                        evrs[id(it.config)] = ExpectationValidationResult(
-                            success=False, expectation_config=it.config, result={},
-                            exception_info={
-                                "raised_exception": True,
-                                "exception_message": f"{type(exc).__name__}: {exc}",
-                                "exception_traceback": tb,
-                            })
+                        evrs[id(it.config)] = _exception_evr(it.config, exc, tb)
                     continue
 
+            sampled = self._samples(dfd, [
+                (it, dp.unexpected[it.slots["unexpected"]])
+                for it in dp.fused_items if it.spec.kind == "map"
+                and int(grow[it.slots["unexpected"]] or 0)])
             for item in dp.fused_items:
                 record(item.config,
-                       lambda it=item: self._evr_from_row(it, grow, dfd))
+                       lambda it=item: self._evr_from_row(it, grow, dfd, sampled))
                 self._record_scored_verdicts(item, pid_rows)
 
             if dp.dependent_items:
@@ -1173,8 +1191,9 @@ class ValidationRun:
                 except Exception as e:  # noqa: BLE001
                     if not self.catch_exceptions:
                         raise
+                    tb = traceback.format_exc()
                     for item in dp.dependent_items:
-                        record(item.config, lambda exc=e: (_ for _ in ()).throw(exc))
+                        evrs[id(item.config)] = _exception_evr(item.config, e, tb)
 
             for jidx, item in enumerate(dp.job_items):
                 record(item.config,
@@ -1693,6 +1712,18 @@ def _kl_auto_evr(item: CompiledItem, dfd: DataFrame, nonnull, threshold, th, ih)
         success=success, expectation_config=item.config,
         result={"observed_value": value if displayable else None,
                 "details": details if isinstance(details, dict) else {}})
+
+
+def _exception_evr(config: ExpectationConfiguration, exc: BaseException,
+                   tb: str | None = None) -> ExpectationValidationResult:
+    """The failed EVR that carries ``exc`` (catch_exceptions)."""
+    return ExpectationValidationResult(
+        success=False, expectation_config=config, result={},
+        exception_info={
+            "raised_exception": True,
+            "exception_message": f"{type(exc).__name__}: {exc}",
+            "exception_traceback": tb,
+        })
 
 
 def _jsonable(v: Any) -> Any:

@@ -17,3 +17,13 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name lost correctness evidence in the summary even without ``-rs``:
+    a skip that says none of the reference corpus ran."""
+    for rep in terminalreporter.stats.get("skipped", []):
+        reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else ""
+        if "0 of the corpus cases ran" in reason:
+            terminalreporter.write_line(f"SKIPPED {rep.nodeid}: {reason}",
+                                        yellow=True)

@@ -21,6 +21,11 @@ def clips_path(spark, tmp_path_factory):
 
 def _executed_plan(df) -> str:
     df.collect()
+    return _executed_plan_text(df)
+
+
+def _executed_plan_text(df) -> str:
+    """The executed plan of ``df``, once an action has run it."""
     txt = df._jdf.queryExecution().executedPlan().toString()
     # AQE prints Final + Initial plans; keep only the final one
     return txt.split("== Initial Plan ==")[0]
@@ -441,3 +446,117 @@ def test_fused_pass_stays_whole_stage_codegen(spark, clips_path, strategy):
                 if "Aggregate" in line]
         assert aggs and all(re.search(r"\*\(\d+\) HashAggregate", line)
                             for line in aggs), "\n".join(aggs)
+
+
+def _sampler_jobs(spark, df, monkeypatch, suite, **validate_kw):
+    """(Spark jobs launched inside the violation sampler of one validate(),
+    the items it sampled per call, the executed plans of its actions, the
+    result)."""
+    import uuid
+
+    import pyspark.sql.classic.dataframe as CD
+
+    from sparkcheck import validate
+    from sparkcheck.runner import ValidationRun
+
+    sc = spark.sparkContext
+    group = f"sample-budget-{uuid.uuid4().hex}"
+    inner, collect = ValidationRun._samples, CD.DataFrame.collect
+    wanted_sizes, plans = [], []
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(_executed_plan_text(self))
+        return rows
+
+    def tagged(self, dfd, wanted):
+        wanted_sizes.append(len(wanted))
+        sc.setJobGroup(group, group)
+        monkeypatch.setattr(CD.DataFrame, "collect", spy)
+        try:
+            return inner(self, dfd, wanted)
+        finally:
+            monkeypatch.setattr(CD.DataFrame, "collect", collect)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(ValidationRun, "_samples", tagged)
+    res = validate(df, suite, **validate_kw)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return (len(sc.statusTracker().getJobIdsForGroup(group)), wanted_sizes,
+            plans, res)
+
+
+@pytest.mark.parametrize("case", ["failing", "complete_large_k",
+                                  "boolean_only", "all_passing"])
+@pytest.mark.parametrize("per_partition", [False, True])
+def test_sample_job_budget(spark, clips_path, monkeypatch, case,
+                           per_partition):
+    """The failing map items of a domain get their violation samples from
+    ONE Spark action (a shuffle stage plus the result stage under adaptive
+    execution), rank-limited per item by a WindowGroupLimit on both sides of
+    the exchange; a per-item filter + limit would take 2 jobs per item.
+    That holds for a COMPLETE limit above Spark's default WindowGroupLimit
+    threshold too, and the session conf is restored after. BOOLEAN_ONLY
+    and a suite with no violations launch none."""
+    from sparkcheck import ExpectationSuite
+    group_limit = "spark.sql.optimizer.windowGroupLimitThreshold"
+    before = spark.conf.get(group_limit, None)
+    suite = _contract_shaped_suite()
+    if case == "all_passing":
+        suite = (ExpectationSuite("clean")
+                 .add("expect_column_values_to_be_between", column="dur_ms",
+                      min_value=0, max_value=10**9)
+                 .add("expect_column_values_to_not_be_null", column="codec"))
+    rf = {"boolean_only": "BOOLEAN_ONLY",
+          "complete_large_k": {"result_format": "COMPLETE",
+                               "unexpected_list_limit": 5000}}.get(
+        case, "SUMMARY")
+    jobs, wanted, plans, res = _sampler_jobs(
+        spark, spark.read.parquet(clips_path), monkeypatch, suite,
+        result_format=rf, per_partition=per_partition)
+    assert spark.conf.get(group_limit, None) == before
+    if case in ("boolean_only", "all_passing"):
+        assert jobs == 0 and not plans, (jobs, plans)
+        return
+    failing = [r for r in res.results
+               if r.expectation_config.expectation_type != "expect_column_values_to_be_unique"
+               and r.result.get("unexpected_count")]
+    assert wanted == [4] == [len(failing)], (wanted, failing)
+    assert all(r.result["partial_unexpected_list"] for r in failing)
+    if case == "complete_large_k":  # every violation fits under the limit
+        assert all(len(r.result["unexpected_list"])
+                   == r.result["unexpected_count"] for r in failing)
+    assert 1 <= jobs <= 2, jobs
+    (plan,) = plans
+    assert plan.count("WindowGroupLimit") == 2, plan
+    assert "Partial" in plan and "Final" in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+
+
+def test_compile_suite_py4j_round_trips(spark):
+    """Compiling the contract-shaped suite builds each distinct slot once:
+    a slot shared by several items (the row count, a column's nonnull
+    count) is not rebuilt and thrown away. Counted as py4j commands,
+    leaving out the object releases Python's garbage collector sends at
+    its own times."""
+    from py4j.clientserver import ClientServerConnection
+
+    configs = _contract_shaped_suite().expectations
+    compile_suite(configs)  # warm the JVM-side caches first
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *a, **kw):
+        if not command.startswith("m\nd\n"):  # memory release
+            sent.append(command)
+        return send(self, command, *a, **kw)
+
+    ClientServerConnection.send_command = counting
+    try:
+        plan = compile_suite(configs)
+    finally:
+        ClientServerConnection.send_command = send
+    (dp,) = plan.domains.values()
+    assert len(dp.slot_table.exprs) == 19
+    assert len(sent) == 1066, len(sent)
