@@ -25,7 +25,7 @@ from __future__ import annotations
 import io
 import threading
 import wave
-from contextlib import ExitStack, contextmanager
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -260,7 +260,14 @@ def hash_prescreen_join(dfd: DataFrame, ref: DataFrame, key: str,
     prescreen into a false-failure (payload match) or a full decode (SNR).
     Asymmetric use therefore requires the stored column to be
     ``xxhash64(bytes)`` (null iff the payload is null), which is the
-    documented ingest contract."""
+    documented ingest contract.
+
+    The probe side is repartitioned by key before the join. A sort-merge
+    join needs that exchange anyway; when the reference is small enough to
+    broadcast, it keeps the probe side from being a bare scan, which each
+    branch of a one-action sampler plan (counts + first-k keys) would run
+    again, hashing every payload twice. Spark reuses an exchange across
+    branches, so the payloads are read and hashed once."""
     asym = bool(hash_col) != bool(ref_hash_col)
 
     def _side(src, a, b, stored):
@@ -272,7 +279,7 @@ def hash_prescreen_join(dfd: DataFrame, ref: DataFrame, key: str,
         h2 = h1 if asym else F.when(nn, F.crc32(F.col(bytes_col)))
         return src.select(F.col(key).alias("__k"), h1.alias(a), h2.alias(b))
 
-    return (_side(dfd, "__h1", "__h2", hash_col)
+    return (_side(dfd, "__h1", "__h2", hash_col).repartition("__k")
             .join(_side(ref, "__rh1", "__rh2", ref_hash_col), "__k", "left")
             .select("__k", F.col("__h1").isNotNull().alias("__nn"),
                     F.col("__rh1").isNotNull().alias("__has_ref"),
@@ -402,12 +409,30 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
     bits — collision odds ~2^-96 per pair, a documented tradeoff; byte-different encodings of
     the same audio fall through to the decode path and score correctly.)
 
-    ``hash_prescreen=False`` forces the full decode compare over every pair
-    (snr_scores) — for re-encoded corpora where bytes always differ.
+    The default path runs two Spark actions and persists nothing:
+    - prescreen: one action over the hash join (the run's sampler) returns
+      the counts, up to ``max_pushdown_keys + 1`` mismatch keys and the
+      first k missing-reference keys; Spark reuses the join's exchanges
+      across the action's branches, so each input is scanned once;
+    - decode (at most ``max_pushdown_keys`` mismatches): the mismatch keys
+      reach both parquet scans as a pushed In filter and one ``collect()``
+      of (key, snr) rows gives the bad-SNR count, the mean SNR and the
+      first k bad keys on the driver.
+    Beyond the cap no key list is in hand: the decode plans the prescreen
+    join again (JVM hashing only, one more hash scan of both tables) and
+    broadcasts its mismatch keys into semi-joins, and the counts and first
+    k come from one sampler action over an exchange of the (key, snr) rows.
+    That extra scan, paid only past the cap, is the price of never caching a
+    row per input clip.
 
-    Counts AND violation samples come from persisted projections of the
-    cheap passes, so the binary column never enters the fused suite pass.
-    Assumes the reference table has unique join keys (the golden twin).
+    ``hash_prescreen=False`` forces the full decode compare over every pair
+    (snr_scores) — for re-encoded corpora where bytes always differ. Its
+    counts and samples come from a persisted projection of the decode,
+    which is a Python map: two actions over it, or two branches of one
+    action with no exchange between, would each run the decode.
+
+    The binary column never enters the fused suite pass. Assumes the
+    reference table has unique join keys (the golden twin).
     """
     from pyspark import StorageLevel
 
@@ -464,117 +489,106 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
     # hash at ingest skip the binary scan entirely — the prescreen becomes a
     # narrow-column join (at 100 TB the hash pass reads ~16 B/row instead of
     # the audio). The stored hash must be null iff the payload is null.
+    spark = dfd.sparkSession
     hash_col = kw.get("hash_column")
     ref_hash_col = kw.get("ref_hash_column", hash_col)
     hj = hash_prescreen_join(dfd, ref, key, bytes_col, hash_col, ref_hash_col)
-    hj = hj.persist(StorageLevel.MEMORY_AND_DISK)
-    n_mismatch = 0
-    mean_mismatch_snr = None
+    nn = F.col("__nn")
+    mismatch = nn & F.col("__has_ref") & ~F.coalesce(F.col("__same"), F.lit(False))
+    no_ref_row = nn & ~F.col("__has_ref")
+    cap = int(kw.get("max_pushdown_keys", 250))
+    k = run._sample_limit()
     scan_rows = kw.get("payload_batch_rows", 256)
-    try:
-        # the first action materializes the prescreen; bound the columnar
-        # batches by bytes only when the hashes are computed from the binary
-        # column (stored-hash tables scan no binary here)
-        with payload_batch_guard(
-                dfd.sparkSession,
-                None if (hash_col and ref_hash_col) else scan_rows):
-            agg = hj.agg(
-                F.count(F.lit(1)).alias("element"),
-                F.coalesce(F.sum(F.when(F.col("__nn"), 1).otherwise(0)), F.lit(0)).alias("nonnull"),
-                F.coalesce(F.sum(F.when(F.col("__nn") & ~F.col("__has_ref"), 1).otherwise(0)), F.lit(0)).alias("no_ref"),
-                F.coalesce(F.sum(F.when(
-                    F.col("__nn") & F.col("__has_ref") & ~F.coalesce(F.col("__same"), F.lit(False)),
-                    1).otherwise(0)), F.lit(0)).alias("mismatch")).first()
-        element, nonnull = int(agg["element"]), int(agg["nonnull"])
-        no_ref, n_mismatch = int(agg["no_ref"]), int(agg["mismatch"])
+    # the prescreen action: counts, up to cap + 1 mismatch keys (enough to
+    # tell whether they fit the pushdown) and the first k missing-reference
+    # keys; bound the columnar batches by bytes only when the hashes are
+    # computed from the binary column (stored-hash tables scan no binary)
+    with payload_batch_guard(
+            spark, None if (hash_col and ref_hash_col) else scan_rows):
+        (mkeys, no_ref_keys), agg = run._collect_samples(
+            hj, [(F.col("__k"), mismatch, cap + 1),
+                 (F.col("__k"), no_ref_row, k)],
+            aggs=[F.count(F.lit(1)).alias("element"),
+                  F.count_if(nn).alias("nonnull"),
+                  F.count_if(no_ref_row).alias("no_ref"),
+                  F.count_if(mismatch).alias("mismatch")])
+    element, nonnull = int(agg["element"]), int(agg["nonnull"])
+    no_ref, n_mismatch = int(agg["no_ref"]), int(agg["mismatch"])
 
-        bad_snr = 0
-        snr_bad_keys: list = []
-        if n_mismatch:
-            mkeys = (hj.filter(F.col("__nn") & F.col("__has_ref")
-                               & ~F.coalesce(F.col("__same"), F.lit(False)))
-                     .select(F.col("__k").alias(key)))
-            with ExitStack() as stack:
-                if n_mismatch <= int(kw.get("max_pushdown_keys", 250)):
-                    # small violation set: materialize the keys and filter
-                    # with isin — the predicate reaches the parquet scan
-                    # (PushedFilters) so row-group stats skip almost all
-                    # binary data, instead of two full-table rescans feeding
-                    # a semi-join.
-                    #
-                    # CRITICAL conf: Spark only translates In to a parquet
-                    # in-filter up to spark.sql.parquet.pushdown.
-                    # inFilterThreshold values (default 10); above that it
-                    # degrades to a min..max range filter, which on a
-                    # key-sorted table spans everything — the scan silently
-                    # reads the FULL binary column (measured: 30s vs <1s on
-                    # a cold 19 GB table). Raise the threshold to cover the
-                    # key set for the decode actions; the ExitStack restores
-                    # it even if plan construction below throws.
-                    # The max_pushdown_keys default (250) doubles as the
-                    # safety bound: parquet represents a pushed In as a
-                    # NESTED Or tree, and ~1000 values overflow the executor
-                    # thread stack (observed StackOverflowError) — beyond
-                    # the cap the broadcast semi-join below is both safe and
-                    # scalable.
-                    keys = [r[key] for r in mkeys.collect()]
-                    stack.enter_context(_scoped_in_filter_threshold(
-                        dfd.sparkSession, len(keys)))
-                    sub = dfd.filter(F.col(key).isin(keys))
-                    sub_ref = ref.filter(F.col(key).isin(keys))
-                else:
-                    # decode only the mismatched pairs; the key set comes
-                    # from the persisted prescreen so the explicit broadcast
-                    # is cheap and keeps the big binary side from shuffling
-                    # for the join
-                    sub = dfd.join(F.broadcast(mkeys), key, "left_semi")
-                    sub_ref = ref.join(F.broadcast(mkeys), key, "left_semi")
-                # size the decode to the violation set: with n_mismatch rows
-                # the default 2x-parallelism repartition spawns dozens of
-                # mostly-empty Arrow python workers (measured: ~13s fixed
-                # overhead decoding 150 clips at 32 partitions). ~64 clips
-                # per decode task keeps workers busy without over-spawning;
-                # never above parallelism.
-                sc = dfd.sparkSession.sparkContext
-                auto_parts = max(1, min(int(sc.defaultParallelism),
-                                        (n_mismatch + 63) // 64))
-                scored = snr_scores(
-                    sub, sub_ref, join_key=key, bytes_col=bytes_col,
-                    codec_col=codec_col,
-                    strict_codecs=kw.get("strict_codecs", False),
-                    num_partitions=kw.get("num_partitions") or auto_parts)
-                proj = scored.select(
-                    F.col(key).alias("__k"),
-                    (F.col("__snr_db") < min_snr).alias("__bad"),
-                    "__snr_db")
-                proj = proj.persist(StorageLevel.MEMORY_AND_DISK)
-                stack.callback(proj.unpersist)
-                # the sample collect stays INSIDE the batch guards: if the
-                # persisted block was evicted it recomputes the decode scan,
-                # which must not run at the default 4096-row binary batches
-                # (ADVICE r3 #1)
-                with payload_batch_guard(dfd.sparkSession, scan_rows), \
-                     arrow_batch_guard(dfd.sparkSession,
-                                       kw.get("arrow_batch_rows", 256)):
-                    a2 = proj.agg(
-                        F.coalesce(F.sum(F.when(F.col("__bad"), 1).otherwise(0)), F.lit(0)).alias("u"),
-                        F.avg("__snr_db").alias("mean_snr")).first()
-                    bad_snr = int(a2["u"])
-                    mean_mismatch_snr = a2["mean_snr"]
-                    if bad_snr and run.rf["result_format"] != "BOOLEAN_ONLY":
-                        snr_bad_keys = [r["__k"] for r in
-                                        proj.filter("__bad").select("__k")
-                                        .limit(run._sample_limit()).collect()]
+    bad_snr = 0
+    snr_bad_keys: list = []
+    mean_mismatch_snr = None
+    if n_mismatch:
+        # size the decode to the violation set: with n_mismatch rows the
+        # default 2x-parallelism repartition spawns dozens of mostly-empty
+        # Arrow python workers (measured: ~13s fixed overhead decoding 150
+        # clips at 32 partitions). ~64 clips per decode task keeps workers
+        # busy without over-spawning; never above parallelism.
+        auto_parts = max(1, min(int(spark.sparkContext.defaultParallelism),
+                                (n_mismatch + 63) // 64))
+        parts = kw.get("num_partitions") or auto_parts
 
-        unexpected = no_ref + bad_snr
-        samples = list(snr_bad_keys)
-        if unexpected and run.rf["result_format"] != "BOOLEAN_ONLY" and len(samples) < run._sample_limit():
-            k_more = run._sample_limit() - len(samples)
-            samples += [r["__k"] for r in
-                        hj.filter(F.col("__nn") & ~F.col("__has_ref"))
-                        .select("__k").limit(k_more).collect()]
-    finally:
-        hj.unpersist()
+        def decode(sub, sub_ref):
+            return snr_scores(
+                sub, sub_ref, join_key=key, bytes_col=bytes_col,
+                codec_col=codec_col,
+                strict_codecs=kw.get("strict_codecs", False),
+                num_partitions=parts).select(key, "__snr_db")
+
+        with payload_batch_guard(spark, scan_rows), \
+             arrow_batch_guard(spark, kw.get("arrow_batch_rows", 256)):
+            if n_mismatch <= cap:
+                # small violation set: filter with isin on the keys in hand
+                # — the predicate reaches the parquet scan (PushedFilters)
+                # so row-group stats skip almost all binary data, instead of
+                # two full-table rescans feeding a semi-join.
+                #
+                # CRITICAL conf: Spark only translates In to a parquet
+                # in-filter up to spark.sql.parquet.pushdown.
+                # inFilterThreshold values (default 10); above that it
+                # degrades to a min..max range filter, which on a
+                # key-sorted table spans everything — the scan silently
+                # reads the FULL binary column (measured: 30s vs <1s on a
+                # cold 19 GB table). Raise the threshold to cover the key
+                # set for the decode action; the guard restores it even if
+                # plan construction below throws.
+                # The max_pushdown_keys default (250) doubles as the safety
+                # bound: parquet represents a pushed In as a NESTED Or
+                # tree, and ~1000 values overflow the executor thread stack
+                # (observed StackOverflowError) — beyond the cap the
+                # broadcast semi-join below is both safe and scalable.
+                with _scoped_in_filter_threshold(spark, len(mkeys)):
+                    # at most cap rows: score them on the driver, in collect
+                    # order (the first k bad keys are filter().limit(k)'s)
+                    rows = decode(dfd.filter(F.col(key).isin(mkeys)),
+                                  ref.filter(F.col(key).isin(mkeys))).collect()
+                snrs = [r["__snr_db"] for r in rows]
+                bad = [r[key] for r in rows if r["__snr_db"] < min_snr]
+                bad_snr, snr_bad_keys = len(bad), bad[:k]
+                if snrs:
+                    mean_mismatch_snr = sum(snrs) / len(snrs)
+            else:
+                # the key set is the prescreen join's mismatch rows, planned
+                # again inside the decode (JVM hashing only) and broadcast
+                # so the big binary side never shuffles for the semi-join.
+                # An exchange over the narrow (key, snr) rows feeds both
+                # branches of the sampler's action, so the decode runs once;
+                # the key count keeps the aggregate branch reading the key
+                # too (pruned to snr alone it would plan its own exchange,
+                # and its own decode, under it)
+                mk = hj.filter(mismatch).select(F.col("__k").alias(key))
+                scored = decode(dfd.join(F.broadcast(mk), key, "left_semi"),
+                                ref.join(F.broadcast(mk), key, "left_semi"))
+                bad_row = F.col("__snr_db") < min_snr
+                (snr_bad_keys,), a2 = run._collect_samples(
+                    scored.repartition(parts), [(F.col(key), bad_row, k)],
+                    aggs=[F.count_if(bad_row).alias("u"),
+                          F.avg("__snr_db").alias("mean_snr"),
+                          F.count(key).alias("decoded")])
+                bad_snr, mean_mismatch_snr = int(a2["u"]), a2["mean_snr"]
+
+    unexpected = no_ref + bad_snr
+    samples = snr_bad_keys + no_ref_keys[:k - len(snr_bad_keys)]
     evr = run._map_evr(item, element, nonnull, unexpected, samples)
     if evr.result:
         evr.result["details"] = {
@@ -585,20 +599,20 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
     return evr
 
 
-
 def run_payload_item(run, item, dfd: DataFrame, grow: dict):
     """Engine hook: expect_audio_payload_to_match_reference — byte identity
     of the payload vs the reference twin, verified by hash equality
     (xxhash64+crc32, 96 combined bits; or a stored `hash_column`). A
     prescreen-ONLY invariant: never decodes, never shuffles audio — with
     `hash_column=` both scans are (key, 8-byte hash), zero binary read.
+    Counts and the first k bad keys come from one Spark action over the
+    prescreen join (the run's one sampler), nothing is persisted.
 
     unexpected = rows with a non-null payload whose reference row is
     missing OR whose payload hash differs. This is the engine's
     linearly-scalable integrity fast path (BASELINE.md reports its N→4N
     efficiency); byte-different re-encodings of identical audio need the
     SNR expectation instead."""
-    from pyspark import StorageLevel
     kw = item.kwargs
     key = kw.get("join_key", "clip_id")
     bytes_col = kw.get("bytes_column", "bytes")
@@ -606,27 +620,20 @@ def run_payload_item(run, item, dfd: DataFrame, grow: dict):
     hash_col = kw.get("hash_column")
     ref_hash_col = kw.get("ref_hash_column", hash_col)
     hj = hash_prescreen_join(dfd, ref, key, bytes_col, hash_col, ref_hash_col)
-    bad = F.col("__nn") & (~F.col("__has_ref")
-                           | ~F.coalesce(F.col("__same"), F.lit(False)))
-    hj = hj.withColumn("__bad", bad).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        with payload_batch_guard(
-                dfd.sparkSession,
-                None if (hash_col and ref_hash_col)
-                else kw.get("payload_batch_rows", 256)):
-            agg = hj.agg(
-                F.count(F.lit(1)).alias("element"),
-                F.coalesce(F.sum(F.col("__nn").cast("int")), F.lit(0)).alias("nonnull"),
-                F.coalesce(F.sum(F.col("__bad").cast("int")), F.lit(0)).alias("u")).first()
-        element, nonnull = int(agg["element"]), int(agg["nonnull"])
-        unexpected = int(agg["u"])
-        samples: list = []
-        if unexpected and run.rf["result_format"] != "BOOLEAN_ONLY":
-            samples = [r["__k"] for r in hj.filter("__bad").select("__k")
-                       .limit(run._sample_limit()).collect()]
-    finally:
-        hj.unpersist()
-    evr = run._map_evr(item, element, nonnull, unexpected, samples)
+    nn = F.col("__nn")
+    bad = nn & (~F.col("__has_ref") | ~F.coalesce(F.col("__same"), F.lit(False)))
+    k = run._sample_limit()
+    with payload_batch_guard(
+            dfd.sparkSession,
+            None if (hash_col and ref_hash_col)
+            else kw.get("payload_batch_rows", 256)):
+        (samples,), agg = run._collect_samples(
+            hj, [(F.col("__k"), bad, k)],
+            aggs=[F.count(F.lit(1)).alias("element"),
+                  F.count_if(nn).alias("nonnull"),
+                  F.count_if(bad).alias("u")])
+    evr = run._map_evr(item, int(agg["element"]), int(agg["nonnull"]),
+                       int(agg["u"]), samples)
     if evr.result:
         evr.result["details"] = {"strategy": "payload_hash_match",
                                  "hash_column": hash_col}

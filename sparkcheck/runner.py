@@ -160,6 +160,10 @@ class ValidationRun:
         return F.spark_partition_id()
 
     def _sample_limit(self) -> int:
+        """How many violation samples an item reports: none under
+        BOOLEAN_ONLY."""
+        if self.rf["result_format"] == "BOOLEAN_ONLY":
+            return 0
         if self.rf["result_format"] == "COMPLETE":
             return self.rf["unexpected_list_limit"]
         return self.rf["partial_unexpected_count"]
@@ -244,34 +248,7 @@ class ValidationRun:
         (_collect_samples); nothing under BOOLEAN_ONLY. If that action
         raises, each wanted item maps to its exception EVR instead (it
         re-raises without catch_exceptions), the rule the fused pass
-        follows; items not in ``wanted`` are unaffected."""
-        if not wanted or self.rf["result_format"] == "BOOLEAN_ONLY":
-            return {}
-        try:
-            return self._collect_samples(dfd, wanted)
-        except Exception as exc:  # noqa: BLE001 — attributed to the sampled items
-            if not self.catch_exceptions:
-                raise
-            tb = traceback.format_exc()
-            return {id(it): _exception_evr(it.config, exc, tb)
-                    for it, _ in wanted}
-
-    def _collect_samples(self, dfd: DataFrame,
-                         wanted: list[tuple[CompiledItem, Column]]) -> dict:
-        """The first k violation samples of every wanted item, plus — when
-        the result format names `unexpected_index_column_names` — a keyed
-        index entry per sample, from ONE scan and ONE Spark action.
-
-        Each row is tagged with its scan position (``__mid``: partition,
-        then position in it) and exploded into one row per item whose
-        condition it violates (clean rows explode to nothing, and every
-        condition is evaluated once per row); ``row_number()`` per item in
-        ``__mid`` order keeps the first k. Spark plans that as a
-        WindowGroupLimit on both sides of the exchange, so the shuffle holds
-        at most partitions x items x k rows however many rows violate, and
-        the first k in scan order are the rows ``filter().limit(k)`` takes:
-        GE's "first N" (map_metric_provider.py:2372-2415 runs one such job
-        per item instead).
+        follows; items not in ``wanted`` are unaffected.
 
         Spark has no stable row index, so the reference's pandas-only
         `unexpected_index_list` (positional indices, expectation.py:
@@ -279,50 +256,113 @@ class ValidationRun:
         does: the caller names business-key column(s) (e.g. clip_id) and
         each entry is a dict of those key values + the domain column's
         unexpected value. Same limit/caps as the sample list."""
-        k = self._sample_limit()
-        idx_cols = self.rf.get("unexpected_index_column_names") or []
-        rows: list = []
-        if k > 0:
-            values = [(it.spec.sample_value(it.kwargs) if it.spec.sample_value
-                       else F.col(it.kwargs["column"])).alias(f"__v{i}")
-                      for i, (it, _) in enumerate(wanted)]
-            violated = F.array_compact(F.array(
-                *[F.when(cond, F.lit(i)) for i, (_, cond) in enumerate(wanted)]))
-            first = Window.partitionBy("__item").orderBy("__mid")
-            ranked = (dfd.select(
-                          F.explode(violated).alias("__item"),
-                          F.monotonically_increasing_id().alias("__mid"),
-                          *values, *[F.col(c).alias(f"__idx_{j}")
-                                     for j, c in enumerate(idx_cols)])
-                      .withColumn("__rank", F.row_number().over(first))
-                      .filter(F.col("__rank") <= k))
-            # Spark plans WindowGroupLimit only up to this k (1000 by
-            # default); above it (a COMPLETE unexpected_list_limit) every
-            # violating row would be shuffled, so the action raises it
-            from .metrics.audio import _scoped_conf
-            spark = dfd.sparkSession
-            group_limit = "spark.sql.optimizer.windowGroupLimitThreshold"
-            raise_to = k if k > int(spark.conf.get(group_limit)) else None
-            with _scoped_conf(spark, group_limit, raise_to):
-                rows = ranked.collect()
-        by_item: dict[int, list] = {i: [] for i in range(len(wanted))}
-        for r in sorted(rows, key=lambda r: (r["__item"], r["__rank"])):
-            by_item[r["__item"]].append(r)
+        if not wanted or self.rf["result_format"] == "BOOLEAN_ONLY":
+            return {}
+        try:
+            k = self._sample_limit()
+            idx_cols = self.rf.get("unexpected_index_column_names") or []
+            entries = []
+            for it, cond in wanted:
+                v = (it.spec.sample_value(it.kwargs) if it.spec.sample_value
+                     else F.col(it.kwargs["column"]))
+                if idx_cols:  # the index values ride along in one struct
+                    v = F.struct(v.alias("v"), *[F.col(c).alias(f"i{j}")
+                                                 for j, c in enumerate(idx_cols)])
+                entries.append((v, cond, k))
+            firsts, _ = self._collect_samples(dfd, entries)
+        except Exception as exc:  # noqa: BLE001 — attributed to the sampled items
+            if not self.catch_exceptions:
+                raise
+            tb = traceback.format_exc()
+            return {id(it): _exception_evr(it.config, exc, tb)
+                    for it, _ in wanted}
         out = {}
-        for i, (item, _) in enumerate(wanted):
+        for (item, _), values in zip(wanted, firsts):
             kw = item.kwargs
-            samples = [self._sample_py(r[f"__v{i}"], kw) for r in by_item[i]]
-            index_list = None
-            if idx_cols:
-                domain = kw.get("column")
-                index_list = []
-                for r, s in zip(by_item[i], samples):
-                    entry = {c: r[f"__idx_{j}"] for j, c in enumerate(idx_cols)}
-                    if domain and domain not in entry:
-                        entry[domain] = s
-                    index_list.append(entry)
+            if not idx_cols:
+                out[id(item)] = ([self._sample_py(v, kw) for v in values], None)
+                continue
+            samples = [self._sample_py(v["v"], kw) for v in values]
+            domain = kw.get("column")
+            index_list = []
+            for v, s in zip(values, samples):
+                entry = {c: v[f"i{j}"] for j, c in enumerate(idx_cols)}
+                if domain and domain not in entry:
+                    entry[domain] = s
+                index_list.append(entry)
             out[id(item)] = (samples, index_list)
         return out
+
+    def _collect_samples(self, dfd: DataFrame,
+                         wanted: list[tuple[Column, Column, int]],
+                         aggs: list[Column] = ()) -> tuple[list[list], dict | None]:
+        """For every ``(value, condition, limit)`` entry in ``wanted``, the
+        values of the first ``limit`` rows of ``dfd`` that meet the
+        condition; plus, when ``aggs`` (aliased one-row aggregate Columns)
+        are given, their row as a dict — all from ONE scan and ONE Spark
+        action. Returns ``(value lists in entry order, agg dict or None)``.
+
+        Each row is tagged with its scan position (``__mid``: partition,
+        then position in it) and exploded into one row per entry whose
+        condition it meets (other rows explode to nothing, and every
+        condition is evaluated once per row); ``row_number()`` per entry in
+        ``__mid`` order keeps the first ``limit``. Spark plans that as a
+        WindowGroupLimit on both sides of the exchange, so the shuffle holds
+        at most partitions x entries x limit rows however many rows match,
+        and the first rows in scan order are the ones ``filter().limit()``
+        takes: GE's "first N" (map_metric_provider.py:2372-2415 runs one
+        such job per item instead). The aggregate row joins the ranked rows
+        through ``unionByName``. The two branches share ``dfd``'s plan, and
+        Spark reuses its exchanges, so what sits below an exchange runs
+        once; what sits above the last one (a scan on the probe side of a
+        broadcast join, a Python map) runs once per branch, so callers
+        with ``aggs`` put an exchange over such work. Entries with a limit
+        of 0 are left out; with none left and no ``aggs`` no action runs."""
+        live = [i for i, (_, _, lim) in enumerate(wanted) if lim > 0]
+        firsts: list[list] = [[] for _ in wanted]
+        if not live and not aggs:
+            return firsts, None
+        parts = []
+        top = max((wanted[i][2] for i in live), default=0)
+        if live:
+            violated = F.array_compact(F.array(
+                *[F.when(wanted[i][1], F.lit(i)) for i in live]))
+            first = Window.partitionBy("__item").orderBy("__mid")
+            # the literal bound is the one Spark turns into the group limit
+            keep = F.col("__rank") <= top
+            if len({wanted[i][2] for i in live}) > 1:  # trim smaller limits
+                limits = F.array(*[F.lit(lim) for _, _, lim in wanted])
+                keep &= F.col("__rank") <= F.element_at(limits, F.col("__item") + 1)
+            parts.append(
+                dfd.select(F.explode(violated).alias("__item"),
+                           F.monotonically_increasing_id().alias("__mid"),
+                           *[wanted[i][0].alias(f"__v{i}") for i in live])
+                .withColumn("__rank", F.row_number().over(first))
+                .filter(keep))
+        if aggs:
+            parts.append(dfd.agg(*aggs))
+        plan = parts[0]
+        if len(parts) == 2:
+            plan = plan.unionByName(parts[1], allowMissingColumns=True)
+        # Spark plans WindowGroupLimit only up to a limit of 1000 by
+        # default; above it (a COMPLETE unexpected_list_limit) every
+        # matching row would be shuffled, so the action raises it
+        from .metrics.audio import _scoped_conf
+        spark = dfd.sparkSession
+        group_limit = "spark.sql.optimizer.windowGroupLimitThreshold"
+        raise_to = top if top > int(spark.conf.get(group_limit)) else None
+        with _scoped_conf(spark, group_limit, raise_to):
+            rows = plan.collect()
+        agg = None
+        ranked = []
+        for r in rows:
+            if live and r["__item"] is not None:
+                ranked.append(r)
+            else:
+                agg = {c: r[c] for c in parts[-1].columns}
+        for r in sorted(ranked, key=lambda r: (r["__item"], r["__rank"])):
+            firsts[r["__item"]].append(r[f"__v{r['__item']}"])
+        return firsts, agg
 
     @staticmethod
     def _sample_py(v, kw: dict):
@@ -640,8 +680,7 @@ class ValidationRun:
             frame = keys.agg(F.sum("__cnt").alias("__ux"),
                              F.count(F.lit(1)).alias("__groups"),
                              F.lit(1).alias(_GRAND))
-        k = (0 if self.rf["result_format"] == "BOOLEAN_ONLY"
-             else self._sample_limit())
+        k = self._sample_limit()
         if k:
             frame = frame.unionByName(
                 keys.orderBy(F.desc("__cnt"), *cols).limit(k).select(
@@ -793,14 +832,20 @@ class ValidationRun:
         col = kw["column"]
         other = self.tables[kw["other_table"]]
         ref = other.select(F.col(kw.get("other_column", col)).alias(col)).distinct()
-        orphans = dfd.filter(F.col(col).isNotNull()).join(ref, on=col, how="left_anti")
-        unexpected = orphans.count()
+        k = self._sample_limit()
+        probe = dfd.select(col).filter(F.col(col).isNotNull())
+        if k:
+            # the orphan count and the first k orphans come from two
+            # branches of one action; an exchange on the probe side keeps a
+            # broadcast anti-join from scanning the input once per branch
+            probe = probe.repartition(col)
+        orphans = probe.join(ref, on=col, how="left_anti")
+        (samples,), agg = self._collect_samples(
+            orphans, [(F.col(col), F.lit(True), k)],
+            aggs=[F.count(F.lit(1)).alias("orphans")])
         element = int(grow[item.slots["element"]] or 0)
         nonnull = int(grow[item.slots["nonnull"]] or 0)
-        samples: list = []
-        if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
-            samples = [r[col] for r in orphans.select(col).limit(self._sample_limit()).collect()]
-        return self._map_evr(item, element, nonnull, int(unexpected), samples)
+        return self._map_evr(item, element, nonnull, int(agg["orphans"]), samples)
 
     # ------------------------------------------------------ dependent pass
 

@@ -19,6 +19,21 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def audio_pair(spark, tmp_path_factory):
+    """A small byte-carrying clip table and its clean reference twin, as
+    parquet (so key filters reach the scan): 2,000 clips in 4 files, with 2
+    corrupted payloads (hash mismatches) and 3 clips without a reference
+    row (a null, a malformed and an orphan clip_id)."""
+    from sparkcheck.io import generate_audio_clips
+    root = tmp_path_factory.mktemp("audio_pair")
+    for name, clean in (("dirty", False), ("ref", True)):
+        generate_audio_clips(spark, 2000, clean=clean, num_partitions=4) \
+            .write.parquet(str(root / name))
+    return (spark.read.parquet(str(root / "dirty")),
+            spark.read.parquet(str(root / "ref")))
+
+
 def pytest_terminal_summary(terminalreporter):
     """Name lost correctness evidence in the summary even without ``-rs``:
     a skip that says none of the reference corpus ran."""

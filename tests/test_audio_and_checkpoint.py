@@ -398,6 +398,86 @@ class TestAudioFeatures:
         assert len(a.result["partial_unexpected_list"]) > 0 \
             or a.result["unexpected_count"] == 0
 
+    def test_snr_branches_agree(self, spark, audio_pair, monkeypatch):
+        """One fixture, four SNR paths: the isin-pushdown decode (default),
+        the broadcast semi-join past the key cap (max_pushdown_keys=1 < the
+        fixture's 2 mismatches), a stored hash column and the full decode
+        agree on the verdict and counts, and the three prescreen paths on
+        the details. Samples list the bad-SNR keys first, then the
+        missing-reference keys in the order filter().limit(k) over the
+        prescreen join gives them. BOOLEAN_ONLY collects no sample row: the
+        prescreen returns the count row and the mismatch keys only."""
+        from collections import Counter
+
+        import pyspark.sql.classic.dataframe as CD
+        from pyspark.sql import functions as F
+
+        import sparkcheck.metrics.audio as audio
+        dirty, ref = audio_pair
+
+        def hashed(df):
+            return df.withColumn("payload_h", F.when(
+                F.col("bytes").isNotNull(), F.xxhash64("bytes")))
+
+        def run(d, r, rf="SUMMARY", **kw):
+            suite = ExpectationSuite("snr").add(
+                "expect_audio_snr_vs_reference_to_be_above",
+                reference_table="ref", min_snr_db=30.0, **kw)
+            return validate(d, suite, tables={"ref": r},
+                            result_format=rf).results[0]
+
+        runs = {"pushdown": run(dirty, ref),
+                "beyond_cap": run(dirty, ref, max_pushdown_keys=1),
+                "stored_hash": run(hashed(dirty), hashed(ref),
+                                   hash_column="payload_h"),
+                "full_decode": run(dirty, ref, hash_prescreen=False)}
+        base = runs["pushdown"].result
+        assert base["unexpected_count"] == 5  # 2 corrupted + 3 without ref
+        for name, evr in runs.items():
+            assert (evr.result["element_count"], evr.result["unexpected_count"],
+                    evr.success) == (2000, 5, False), name
+        first = base["details"]
+        assert (first["hash_mismatch_count"], first["missing_reference_count"]) == (2, 3)
+        for name in ("beyond_cap", "stored_hash"):
+            d = runs[name].result["details"]
+            assert d["hash_mismatch_count"] == 2, name
+            assert d["missing_reference_count"] == 3, name
+            assert d["mean_mismatch_snr_db"] == pytest.approx(
+                first["mean_mismatch_snr_db"], abs=1e-9), name
+        samples = base["partial_unexpected_list"]
+        assert Counter(samples) == Counter(
+            runs["beyond_cap"].result["partial_unexpected_list"])
+        hj = audio.hash_prescreen_join(dirty, ref, "clip_id", "bytes", None, None)
+        mismatched = {r["__k"] for r in hj.filter(
+            F.col("__nn") & F.col("__has_ref")
+            & ~F.coalesce(F.col("__same"), F.lit(False))).collect()}
+        no_ref = [r["__k"] for r in hj.filter(F.col("__nn") & ~F.col("__has_ref"))
+                  .select("__k").limit(20).collect()]
+        assert set(samples[:2]) == mismatched and len(mismatched) == 2
+        assert samples[2:] == no_ref and len(no_ref) == 3
+
+        collect, collected = CD.DataFrame.collect, []
+        run_snr_item = audio.run_snr_item
+
+        def counted(self):
+            rows = collect(self)
+            collected.append(len(rows))
+            return rows
+
+        def traced(*a, **kw):
+            monkeypatch.setattr(CD.DataFrame, "collect", counted)
+            try:
+                return run_snr_item(*a, **kw)
+            finally:
+                monkeypatch.setattr(CD.DataFrame, "collect", collect)
+
+        monkeypatch.setattr(audio, "run_snr_item", traced)
+        evr = run(dirty, ref, rf="BOOLEAN_ONLY")
+        assert evr.success is False
+        assert "partial_unexpected_list" not in (evr.result or {})
+        # the count row + 2 mismatch keys, then the 2 decoded pairs
+        assert collected == [1 + 2, 2], collected
+
 
 class TestColumnModeCheckpoint:
     def test_column_groups_resume_and_partition_verdicts(self, spark, tmp_path):

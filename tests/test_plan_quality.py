@@ -534,6 +534,109 @@ def test_sample_job_budget(spark, clips_path, monkeypatch, case,
     assert plan.count("FileScan parquet") == 1, plan
 
 
+def _op_jobs(spark, fn):
+    """(Spark jobs launched while ``fn()`` runs, its value)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"op-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+_AUDIO_ITEMS = {
+    "snr": ("expect_audio_snr_vs_reference_to_be_above",
+            {"reference_table": "ref", "min_snr_db": 30.0}),
+    "payload": ("expect_audio_payload_to_match_reference",
+                {"reference_table": "ref"}),
+    "in_table": ("expect_column_values_to_be_in_table",
+                 {"column": "clip_id", "other_table": "ref",
+                  "other_column": "clip_id"}),
+}
+
+
+@pytest.mark.parametrize("case,budget,before", [
+    ("snr", 9, 13), ("payload", 5, 6), ("in_table", 8, 10)])
+def test_audio_job_budget(spark, audio_pair, case, budget, before):
+    """Jobs per validate() of one failing item on the 2,000-clip pair
+    (this session's conf). The hash-prescreen SNR item runs one prescreen
+    action and one decode action, the payload item and the referential
+    anti-join one action each for counts and samples together. ``before``
+    is the count of the engine that persisted the prescreen join and ran
+    an aggregate, a key collect and per-class ``limit()`` jobs after it (and
+    planned the anti-join twice, for ``count()`` and for ``limit()``),
+    measured on the same fixture and conf."""
+    from sparkcheck import ExpectationSuite, validate
+    dirty, ref = audio_pair
+    etype, kw = _AUDIO_ITEMS[case]
+    jobs, res = _op_jobs(spark, lambda: validate(
+        dirty, ExpectationSuite(case).add(etype, **kw), tables={"ref": ref}))
+    (evr,) = res.results
+    assert not evr.exception_info.get("raised_exception"), evr.exception_info
+    assert evr.result["unexpected_count"] and evr.result["partial_unexpected_list"]
+    assert jobs == budget < before, jobs
+
+
+def test_snr_prescreen_and_decode_in_two_actions(spark, audio_pair,
+                                                 monkeypatch):
+    """The default SNR path persists nothing and runs two actions: the
+    prescreen, whose branches (counts, mismatch keys, missing-reference
+    samples) read the hash join's exchanges once (ReusedExchange), and the
+    decode, whose mismatch keys reach both parquet scans as an In filter
+    under a raised inFilterThreshold that is restored after."""
+    import pyspark.sql.classic.dataframe as CD
+
+    import sparkcheck.metrics.audio as audio
+    from sparkcheck import ExpectationSuite, validate
+    th_key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    before = spark.conf.get(th_key, None)
+    dirty, ref = audio_pair
+    collect, persist, cache = (CD.DataFrame.collect, CD.DataFrame.persist,
+                               CD.DataFrame.cache)
+    plans, persisted = [], []
+
+    def spy(self):
+        rows = collect(self)
+        plans.append(_executed_plan_text(self))
+        return rows
+
+    def counting(real):
+        def call(self, *a, **kw):
+            persisted.append(self)
+            return real(self, *a, **kw)
+        return call
+
+    run_snr_item = audio.run_snr_item
+
+    def traced(*a, **kw):
+        monkeypatch.setattr(CD.DataFrame, "collect", spy)
+        try:
+            return run_snr_item(*a, **kw)
+        finally:
+            monkeypatch.setattr(CD.DataFrame, "collect", collect)
+
+    monkeypatch.setattr(audio, "run_snr_item", traced)
+    monkeypatch.setattr(CD.DataFrame, "persist", counting(persist))
+    monkeypatch.setattr(CD.DataFrame, "cache", counting(cache))
+    etype, kw = _AUDIO_ITEMS["snr"]
+    res = validate(dirty, ExpectationSuite("snr").add(etype, **kw),
+                   tables={"ref": ref})
+    d = res.results[0].result["details"]
+    assert d["hash_mismatch_count"] == 2 and d["missing_reference_count"] == 3
+    assert not persisted
+    prescreen, decode = plans
+    assert "ReusedExchange" in prescreen, prescreen
+    assert prescreen.count("FileScan parquet") == 2, prescreen
+    assert "WindowGroupLimit" in prescreen, prescreen
+    assert decode.count("PushedFilters: [In(clip_id") == 2, decode
+    assert spark.conf.get(th_key, None) == before
+
+
 def test_compile_suite_py4j_round_trips(spark):
     """Compiling the contract-shaped suite builds each distinct slot once:
     a slot shared by several items (the row count, a column's nonnull
