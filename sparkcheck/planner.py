@@ -168,6 +168,9 @@ def compile_suite(suite_expectations: list[ExpectationConfiguration],
                 f"agg::mean::{c}", lambda: F.avg(c))
             item.slots["stddev"] = dp.slot_table.add(
                 f"agg::stddev::{c}", lambda: F.stddev_samp(c))
+            # the column of its unexpected count in the z-score pass (not a
+            # fused slot)
+            item.slots["unexpected"] = f"z{len(dp.dependent_items)}"
             dp.dependent_items.append(item)
 
         elif spec.kind == "audio":

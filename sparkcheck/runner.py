@@ -30,7 +30,9 @@ from __future__ import annotations
 import json
 import logging
 import math
+import os
 import traceback
+from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any
 
@@ -71,11 +73,22 @@ def _pid_rollup(df: DataFrame, *aggs: Column) -> DataFrame:
     return df.rollup("__pid").agg(*aggs, F.grouping("__pid").alias(_GRAND))
 
 
-def _split_grand(rows: list) -> tuple[Any, list]:
-    """Collected rollup rows -> (the grand-total row or None, the
-    partition rows)."""
-    grand = [r for r in rows if r[_GRAND]]
-    return (grand[0] if grand else None), [r for r in rows if not r[_GRAND]]
+# kinds whose rollup carries only an unexpected count per partition; their
+# element/nonnull come from the domain's fused rollup
+_UX_ONLY_KINDS = ("map_window", "map_unique")
+
+
+@dataclass
+class _DomainRollup:
+    """The fused rollup of the domain being run, as its count items read
+    it: its partition rows in collected mode (in sink mode its stored
+    ``rollup-<site>.parquet``). Sink files are named after their site,
+    ``rollup-<site>.parquet`` and ``verdicts-<site>.parquet``: the fused
+    pass's site is ``domain-<d>``, the domain's n-th later site (the z-score
+    pass, then each window and uniqueness item) ``domain-<d>-<n>``."""
+    site: str
+    parts: list[dict] = field(default_factory=list)
+    sites: int = 0  # later sites of the domain resolved so far
 
 
 def _pid_value(pid: Any) -> Any:
@@ -134,19 +147,18 @@ class ValidationRun:
         self.per_partition = per_partition
         self.partition_col = partition_col
         self.unique_strategy = unique_strategy
-        # VERDICT r3 #6: with per_partition=True the rollup produces one row
-        # per partition x the full slot-table width; collect()ing that is
-        # fine at thousands of partitions but a driver-memory edge at 100k+
-        # Iceberg partitions. Set `partition_verdict_sink` (a directory) to
-        # write the rollup rows AND the derived per-partition verdict rows
-        # as parquet DISTRIBUTED — the driver only ever reads the single
-        # global row back. Read results with read_partition_verdicts().
+        # with per_partition the rollup has one row per partition x the
+        # slot-table width: fine to collect at thousands of partitions, a
+        # driver-memory edge at 100k+. With `partition_verdict_sink` (a
+        # directory) _resolve writes the rollup and verdict rows as parquet
+        # on executors instead; read_partition_verdicts() reads them.
         self.partition_verdict_sink = partition_verdict_sink
         if partition_verdict_sink is not None and not per_partition:
             raise ValueError(
                 "partition_verdict_sink requires per_partition=True")
         self.partition_verdicts: list[dict] = []
         self.partition_scoring_errors: list[dict] = []
+        self._domain_rollup: _DomainRollup | None = None
 
     # ------------------------------------------------------------- helpers
 
@@ -168,20 +180,84 @@ class ValidationRun:
             return self.rf["unexpected_list_limit"]
         return self.rf["partial_unexpected_count"]
 
-    # ------------------------------------- distributed verdict sink (r4)
+    # ------------------------------------------------------------ rollups
 
-    def _sink_lits(self, item: CompiledItem) -> list[Column]:
-        names = ("expectation_type", "domain", "kind", "config_kwargs")
-        return [F.lit(v).alias(n) for n, v in zip(names, _sink_labels(item))]
+    def _rollup(self, df: DataFrame, *aggs: Column) -> DataFrame:
+        """``aggs`` over ``df`` as a frame for _resolve: rolled up by
+        partition with per_partition, else one global row."""
+        if self.per_partition:
+            return _pid_rollup(df.withColumn("__pid", self._pid_expr()), *aggs)
+        return df.agg(*aggs, F.lit(1).alias(_GRAND))
+
+    def _resolve(self, frame: DataFrame, items: list[CompiledItem], *,
+                 fused: bool = False) -> DataFrame:
+        """The rows of a rolled-up ``frame`` (``__grand`` 1 on the global
+        row, 0 on each partition row, null on extra rows such as uniqueness
+        samples) that the caller collects and hands to _split: the frame
+        itself, except in sink mode, which scores the partition rows for
+        ``items`` on executors into the sink's ``verdicts-<site>.parquet``
+        and leaves the global and extra rows of the stored rollup. The
+        caller runs the collect, so the job's call site (what the Spark UI
+        and event log show) is the rollup site's own line.
+
+        The ``fused`` pass of a domain resolves first; its partition rows
+        (``rollup-domain-<d>.parquet`` in sink mode) are the domain
+        rollup. A count item (window, unique) rolls up only its unexpected
+        count, and its partitions are the domain rollup's, with their
+        element/nonnull: a null-safe join to the stored domain rollup here
+        in sink mode, a merge of dicts in _split otherwise. A partition
+        without a count row has no unexpected rows."""
+        if self.partition_verdict_sink is None:
+            return frame
+        dom = self._domain_rollup
+        if not fused:
+            dom.sites += 1
+        site = dom.site if fused else f"{dom.site}-{dom.sites}"
+
+        def path(kind: str, site: str) -> str:
+            return os.path.join(self.partition_verdict_sink,
+                                f"{kind}-{site}.parquet")
+        read = frame.sparkSession.read.parquet
+        frame.write.mode("overwrite").parquet(path("rollup", site))
+        stored = read(path("rollup", site))
+        parts = stored.filter(f"{_GRAND} = 0")
+        if items and items[0].spec.kind in _UX_ONLY_KINDS:
+            slots = dict.fromkeys(it.slots[r] for it in items
+                                  for r in ("element", "nonnull"))
+            domain = (read(path("rollup", dom.site))
+                      .filter(f"{_GRAND} = 0").select("__pid", *slots))
+            counts = parts.select(F.col("__pid").alias("__cpid"), "__ux")
+            parts = domain.join(counts, domain["__pid"].eqNullSafe(
+                counts["__cpid"]), "left").drop("__cpid")
+        if items:
+            self._write_sink_verdicts(items, parts, path("verdicts", site))
+        return stored.filter(f"{_GRAND} IS NULL OR {_GRAND} = 1")
+
+    def _split(self, rows: list, items: list[CompiledItem], *,
+               fused: bool = False) -> tuple[dict | None, list[dict]]:
+        """The collected rows of a _resolve frame -> (the global row or
+        None, the extra rows), as dicts. Partition rows are left only in
+        collected mode: each is scored for ``items`` on the driver with
+        score_partition."""
+        rows = [r.asDict() for r in rows]
+        parts = [r for r in rows if r[_GRAND] == 0]
+        dom = self._domain_rollup
+        if fused:
+            dom.parts = parts
+        elif items and items[0].spec.kind in _UX_ONLY_KINDS:
+            by_pid = {r["__pid"]: r for r in parts}
+            parts = [{**p, "__ux": by_pid.get(p["__pid"], {}).get("__ux")}
+                     for p in dom.parts]
+        for item in items:
+            self._record_scored_verdicts(item, parts)
+        grand = next((r for r in rows if r[_GRAND] == 1), None)
+        return grand, [r for r in rows if r[_GRAND] is None]
 
     _SINK_SCHEMA = ("partition_id string, expectation_type string, "
                     "domain string, kind string, success boolean, "
                     "element_count long, missing_count long, "
                     "unexpected_count long, observed_value double, "
                     "config_kwargs string")
-    _SINK_COLS = ["partition_id", "expectation_type", "domain", "kind",
-                  "success", "element_count", "missing_count",
-                  "unexpected_count", "observed_value", "config_kwargs"]
 
     def _write_sink_verdicts(self, items: list[CompiledItem], src: DataFrame,
                              path: str) -> None:
@@ -194,7 +270,10 @@ class ValidationRun:
         sc = src.sparkSession.sparkContext
         errors = sc.accumulator([], _ListParam())
         score = score_partition  # resolved here; executors run this one
-        labels = [_sink_labels(it) for it in items]
+        # each item's (expectation_type, domain, kind, config_kwargs) columns
+        labels = [(it.config.expectation_type, _domain(it.kwargs), it.spec.kind,
+                   json.dumps(it.kwargs, sort_keys=True, default=str))
+                  for it in items]
 
         def on_error(row, i, exc):
             errors.add([(i, row["__pid_str"],
@@ -216,30 +295,6 @@ class ValidationRun:
             seen.setdefault((i, pid), (err, tb))
         for err, tb in seen.values():
             self._record_scoring_error(err, tb)
-
-    def _fused_pass_to_sink(self, dp: DomainPlan, dfd: DataFrame,
-                            didx: int) -> dict:
-        """Per-partition fused pass for 100k+-partition tables: the wide
-        rollup (partitions x slot-table width) is written to the sink as
-        parquet DISTRIBUTED, and executors score its partition rows with the
-        collected path's scorer into one verdict file. The driver reads back
-        only the single global row (a pushed `__grand = 1` filter on the
-        tiny parquet). Returns the global row."""
-        import os
-        spark = dfd.sparkSession
-        sink = self.partition_verdict_sink
-        rollup_path = os.path.join(sink, f"rollup-domain-{didx}.parquet")
-        (_pid_rollup(dfd.withColumn("__pid", self._pid_expr()),
-                     *dp.slot_table.agg_list)
-            .write.mode("overwrite").parquet(rollup_path))
-        stored = spark.read.parquet(rollup_path)
-        g = stored.filter(f"{_GRAND} = 1").collect()
-        grow = g[0].asDict() if g else {a: None for a in dp.slot_table.exprs}
-        if dp.fused_items:
-            self._write_sink_verdicts(
-                dp.fused_items, stored.filter(f"{_GRAND} = 0"),
-                os.path.join(sink, f"verdicts-domain-{didx}.parquet"))
-        return grow
 
     def _samples(self, dfd: DataFrame,
                  wanted: list[tuple[CompiledItem, Column]]) -> dict:
@@ -396,24 +451,6 @@ class ValidationRun:
                              int(grow[item.slots["nonnull"]] or 0),
                              unexpected, *got)
 
-
-    def _record_partition_verdict(self, pid: int, item: CompiledItem, success: bool,
-                                  extra: dict) -> None:
-        # pid is the physical partition id (int) or, with partition_col, the
-        # partition's column value (any scalar type)
-        self.partition_verdicts.append({
-            "partition_id": _pid_value(pid),
-            "expectation_type": item.config.expectation_type,
-            "domain": _domain(item.kwargs),
-            "success": bool(success),
-            # full kwargs so consumers (checkpoint single-pass) can identify
-            # the exact CONFIG — (type, domain) alone collides when a suite
-            # checks the same column twice with different bounds
-            "config_kwargs": dict(item.kwargs),
-            "kind": item.spec.kind,
-            **extra,
-        })
-
     def _record_scoring_error(self, err: dict, tb: str) -> None:
         """A partition whose verdict could not be scored has no verdict row;
         record why in meta["partition_scoring_errors"] and the log."""
@@ -428,36 +465,21 @@ class ValidationRun:
             self._record_scoring_error(*_scoring_error(row, item, exc))
         for row, _, (ok, el, miss, ux, ov) in _score_rows(
                 [item], rows, score_partition, on_error):
-            self._record_partition_verdict(
-                row["__pid"], item, ok,
-                {"unexpected_count": ux, "element_count": el,
-                 "missing_count": miss, "observed_value": _jsonable(ov)})
-
-    def _record_count_verdicts(self, item: CompiledItem,
-                               pid_rows: list[dict], counts: list) -> None:
-        """Collected verdicts for a job item that counts unexpected rows per
-        partition (window, unique): ``counts`` rows of ``__pid``/``__ux``
-        attached to the domain rollup's rows; a partition with no count row
-        has no unexpected rows."""
-        ux = {r["__pid"]: r["__ux"] for r in counts}
-        self._record_scored_verdicts(
-            item, [{**p, "__ux": ux.get(p["__pid"])} for p in pid_rows])
-
-    def _write_count_verdicts(self, item: CompiledItem, counts: DataFrame,
-                              didx: int, name: str) -> None:
-        """The sink form of _record_count_verdicts: ``counts`` joined
-        null-safe to the stored domain rollup's per-partition
-        element/nonnull, scored on executors into the sink file ``name``."""
-        import os
-        rollup = (counts.sparkSession.read.parquet(os.path.join(
-            self.partition_verdict_sink, f"rollup-domain-{didx}.parquet"))
-            .filter(f"{_GRAND} = 0")
-            .select("__pid", item.slots["element"], item.slots["nonnull"]))
-        counts = counts.select(F.col("__pid").alias("__cpid"), "__ux")
-        joined = rollup.join(
-            counts, rollup["__pid"].eqNullSafe(counts["__cpid"]), "left")
-        self._write_sink_verdicts([item], joined.drop("__cpid"), os.path.join(
-            self.partition_verdict_sink, name))
+            self.partition_verdicts.append({
+                # the physical partition id (int) or, with partition_col,
+                # the partition's column value (any scalar type)
+                "partition_id": _pid_value(row["__pid"]),
+                "expectation_type": item.config.expectation_type,
+                "domain": _domain(item.kwargs),
+                "success": bool(ok),
+                # full kwargs so consumers (checkpoint single-pass) can
+                # identify the exact CONFIG — (type, domain) alone collides
+                # when a suite checks the same column twice with different
+                # bounds
+                "config_kwargs": dict(item.kwargs),
+                "kind": item.spec.kind,
+                "unexpected_count": ux, "element_count": el,
+                "missing_count": miss, "observed_value": _jsonable(ov)})
 
     # ---------------------------------------------------------- fused evrs
 
@@ -482,22 +504,15 @@ class ValidationRun:
 
         raise ValueError(f"unexpected fused kind {spec.kind}")
 
-
     # ----------------------------------------------------------- job items
 
-    def _run_job_item(self, item: CompiledItem, dfd: DataFrame, grow: dict,
-                      pid_rows: list[dict] | None = None,
-                      didx: int = 0,
-                      jidx: int = 0) -> ExpectationValidationResult:
+    def _run_job_item(self, item: CompiledItem, dfd: DataFrame,
+                      grow: dict) -> ExpectationValidationResult:
         handler_kind = item.spec.kind
         if handler_kind == "map_window":
-            return self._run_window_item(item, dfd, grow,
-                                         pid_rows=pid_rows, didx=didx,
-                                         jidx=jidx)
+            return self._run_window_item(item, dfd, grow)
         if handler_kind == "map_unique":
-            return self._run_unique_item(item, dfd, grow,
-                                         pid_rows=pid_rows, didx=didx,
-                                         jidx=jidx)
+            return self._run_unique_item(item, dfd, grow)
         if handler_kind == "value":
             if item.spec.extra.get("handler") == "cramers_phi":
                 return self._run_cramers_phi(item, dfd, grow)
@@ -513,18 +528,21 @@ class ValidationRun:
             return audio_metrics.run_snr_item(self, item, dfd, grow)
         raise ValueError(handler_kind)
 
-    def _run_window_item(self, item: CompiledItem, dfd: DataFrame, grow: dict,
-                         pid_rows: list[dict] | None = None,
-                         didx: int = 0,
-                         jidx: int = 0) -> ExpectationValidationResult:
-        # Reference runs window conditions as their own job too
-        # (map_metric_provider.py:2344-2369). A global-ordered window cannot
-        # be fused; per-partition verdicts (r5) attribute each
-        # order-violating ROW to its own input partition — a boundary
-        # violation (first value below the previous partition's last) counts
-        # against the partition holding the offending row. The pid is tagged
-        # BEFORE the window shuffle so it reflects input lineage, same as
-        # the fused rollup's.
+    def _run_window_item(self, item: CompiledItem, dfd: DataFrame,
+                         grow: dict) -> ExpectationValidationResult:
+        """Window conditions (increasing/decreasing) run as their own job,
+        as in the reference (map_metric_provider.py:2344-2369): a
+        global-ordered window cannot be fused. Per-partition verdicts
+        attribute each order-violating ROW to its own input partition — a
+        boundary violation (first value below the previous partition's
+        last) counts against the partition holding the offending row. The
+        pid is tagged BEFORE the window shuffle so it reflects input
+        lineage, same as the fused rollup's. The unexpected count comes
+        first, in one action; only a failing item then samples its first k
+        violating rows, with a ``limit()`` over the window that stops once
+        it has them (the run's sampler would rank the whole window output,
+        and riding in the count's action it would sort the window twice).
+        """
         kw = item.kwargs
         per_part = self.per_partition
         if per_part:
@@ -533,39 +551,17 @@ class ValidationRun:
         # the previous NON-null value — interspersed nulls don't mask
         # regressions): sparkdf_execution_engine.py:592-629
         dfd = dfd.filter(F.col(kw["column"]).isNotNull())
-        nn = F.lit(True)
         expected = item.spec.condition(kw)
-        sel = [F.col(kw["column"]),
-               (nn & ~expected).alias("__unexpected"), nn.alias("__nn")]
-        if per_part:
-            sel.append(F.col("__pid"))
-        flagged = dfd.select(*sel)
+        flagged = dfd.select(F.col(kw["column"]),
+                             (~expected).alias("__unexpected"),
+                             *(["__pid"] if per_part else []))
         ux_agg = F.coalesce(
             F.sum(F.when(F.col("__unexpected"), 1).otherwise(0)),
             F.lit(0)).alias("__ux")
-        element = int(grow[item.slots["element"]] or 0)
-        nonnull = int(grow[item.slots["nonnull"]] or 0)
-        if per_part and self.partition_verdict_sink is not None:
-            # one pass: rollup by pid written distributed, global row read
-            # back via a pushed __grand = 1 filter; per-partition verdicts
-            # derived executor-side against the stored domain rollup's
-            # element/nonnull
-            import os
-            wpath = os.path.join(self.partition_verdict_sink,
-                                 f"wrollup-domain-{didx}-w{jidx}.parquet")
-            _pid_rollup(flagged, ux_agg).write.mode("overwrite").parquet(wpath)
-            stored = flagged.sparkSession.read.parquet(wpath)
-            g = stored.filter(f"{_GRAND} = 1").collect()
-            unexpected = int(g[0]["__ux"]) if g else 0
-            self._write_count_verdicts(
-                item, stored.filter(f"{_GRAND} = 0"), didx,
-                f"verdicts-domain-{didx}-w{jidx}.parquet")
-        elif per_part:
-            g, rows = _split_grand(_pid_rollup(flagged, ux_agg).collect())
-            unexpected = int(g["__ux"]) if g else 0
-            self._record_count_verdicts(item, pid_rows, rows)
-        else:
-            unexpected = int(flagged.agg(ux_agg).first()["__ux"])
+        frame = (_pid_rollup(flagged, ux_agg) if per_part
+                 else flagged.agg(ux_agg, F.lit(1).alias(_GRAND)))
+        g, _ = self._split(self._resolve(frame, [item]).collect(), [item])
+        unexpected = int(g["__ux"]) if g else 0
         samples: list = []
         if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
             samples = [
@@ -573,12 +569,12 @@ class ValidationRun:
                 for r in flagged.filter("__unexpected").select(kw["column"])
                 .limit(self._sample_limit()).collect()
             ]
-        return self._map_evr(item, element, nonnull, unexpected, samples)
+        return self._map_evr(item, int(grow[item.slots["element"]] or 0),
+                             int(grow[item.slots["nonnull"]] or 0),
+                             unexpected, samples)
 
-    def _run_unique_item(self, item: CompiledItem, dfd: DataFrame, grow: dict,
-                         pid_rows: list[dict] | None = None,
-                         didx: int = 0,
-                         jidx: int = 0) -> ExpectationValidationResult:
+    def _run_unique_item(self, item: CompiledItem, dfd: DataFrame,
+                         grow: dict) -> ExpectationValidationResult:
         """Uniqueness via groupBy dup-groups — marks every row of a duplicated
         value unexpected, exactly like the reference's window form
         (column_values_unique.py:83-87), but with a key-partitioned shuffle
@@ -604,10 +600,8 @@ class ValidationRun:
         the grand-total row holds the global values and every other row is
         that partition's count of rows in a GLOBAL duplicate group (they sum
         to the global unexpected_count). Without it the plan is a plain
-        groupBy(key). In sink mode the frame is written to the sink, the
-        driver reads back only the grand-total and sample rows, and the
-        per-partition rows are joined to the stored domain rollup and
-        written as verdicts by executors. The approx/clean-prescreen
+        groupBy(key). _resolve and _split turn the partition rows into
+        verdicts. The approx/clean-prescreen
         strategies skip per-partition verdicts: an HLL sketch cannot
         attribute cross-partition duplicates.
         """
@@ -687,23 +681,11 @@ class ValidationRun:
                     *cols, "__cnt",
                     F.monotonically_increasing_id().alias("__rank")),
                 allowMissingColumns=True)
-        sink = self.per_partition and self.partition_verdict_sink is not None
-        if sink:
-            import os
-            upath = os.path.join(self.partition_verdict_sink,
-                                 f"urollup-domain-{didx}-u{jidx}.parquet")
-            frame.write.mode("overwrite").parquet(upath)
-            frame = dfd.sparkSession.read.parquet(upath)
-            self._write_count_verdicts(
-                item, frame.filter(f"{_GRAND} = 0"), didx,
-                f"verdicts-domain-{didx}-u{jidx}.parquet")
-            frame = frame.filter(f"{_GRAND} IS NULL OR {_GRAND} = 1")
-        rows = frame.collect()
-        grand = next((r for r in rows if r[_GRAND] == 1), None)
+        grand, extras = self._split(
+            self._resolve(frame, [item]).collect(), [item])
         unexpected = int(grand["__ux"] or 0) if grand else 0
         samples: list = []
-        for r in sorted((r for r in rows if r[_GRAND] is None),
-                        key=lambda r: r["__rank"]):
+        for r in sorted(extras, key=lambda r: r["__rank"]):
             val = r[cols[0]] if not compound else {c: r[c] for c in cols}
             samples.extend([val] * min(int(r["__cnt"]), k - len(samples)))
             if len(samples) >= k:
@@ -714,9 +696,6 @@ class ValidationRun:
             evr.result["details"] = {
                 **details, "distinct_count": nonnull - unexpected + groups,
                 "duplicate_groups": groups}
-        if self.per_partition and not sink:
-            self._record_count_verdicts(
-                item, pid_rows, [r for r in rows if r[_GRAND] == 0])
         return evr
 
     def _run_most_common(self, item: CompiledItem, dfd: DataFrame, grow: dict) -> ExpectationValidationResult:
@@ -849,63 +828,32 @@ class ValidationRun:
 
     # ------------------------------------------------------ dependent pass
 
-    def _run_dependent_items(self, items: list[CompiledItem], dfd: DataFrame,
-                             grow: dict, pid_rows: list[dict],
-                             didx: int = 0) -> list[tuple[CompiledItem, ExpectationValidationResult]]:
-        """Z-score conditions: second fused pass using pass-1 mean/stddev."""
-        exprs = []
+    def _run_dependent_items(self, dp: DomainPlan, dfd: DataFrame,
+                             grow: dict) -> list[tuple[CompiledItem, ExpectationValidationResult]]:
+        """Z-score conditions: second fused pass using pass-1 mean/stddev,
+        each item counting its unexpected rows into its ``unexpected``
+        column. With per_partition the items' element/nonnull slots ride in
+        the same pass, so each of its partition rows scores that
+        partition's verdicts."""
+        items = dp.dependent_items
+        aggs: dict[str, Column] = {}
         conds: list[Column] = []
-        for i, item in enumerate(items):
+        for item in items:
             kw = item.kwargs
             mean = grow[item.slots["mean"]]
             std = grow[item.slots["stddev"]]
             expected = C.z_score_under_threshold(kw, mean, std)
-            nn = F.col(kw["column"]).isNotNull()
-            cond = nn & ~expected
+            cond = F.col(kw["column"]).isNotNull() & ~expected
             conds.append(cond)
-            exprs.append(F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).alias(f"z{i}"))
-        if self.per_partition and self.partition_verdict_sink is not None:
-            # sink mode (r4 #6): rollup written distributed; only the global
-            # row is read back; per-partition z verdicts derived in Spark
-            import os
-            from functools import reduce
-            spark = dfd.sparkSession
-            zpath = os.path.join(self.partition_verdict_sink,
-                                 f"zrollup-domain-{didx}.parquet")
-            (_pid_rollup(dfd.withColumn("__pid", self._pid_expr()), *exprs)
-                .write.mode("overwrite").parquet(zpath))
-            stored = spark.read.parquet(zpath)
-            zg = stored.filter(f"{_GRAND} = 1").collect()
-            zrow = zg[0].asDict() if zg else {f"z{i}": 0 for i in range(len(items))}
-            pid_src = stored.filter(f"{_GRAND} = 0")
-            null_l = F.lit(None).cast("long")
-            parts = [pid_src.select(
-                F.col("__pid").cast("string").alias("partition_id"),
-                *self._sink_lits(item),
-                F.lit(True).alias("success"),
-                null_l.alias("element_count"),
-                null_l.alias("missing_count"),
-                F.coalesce(F.col(f"z{i}"), F.lit(0)).cast("long")
-                .alias("unexpected_count"),
-                F.lit(None).cast("double").alias("observed_value"))
-                .select(*self._SINK_COLS)
-                for i, item in enumerate(items)]
-            if parts:
-                reduce(lambda a, b: a.unionByName(b), parts).write.mode(
-                    "overwrite").parquet(os.path.join(
-                        self.partition_verdict_sink,
-                        f"verdicts-domain-{didx}-z.parquet"))
-        elif self.per_partition:
-            g, rows = _split_grand(_pid_rollup(
-                dfd.withColumn("__pid", self._pid_expr()), *exprs).collect())
-            zrow = g.asDict() if g else {f"z{i}": 0 for i in range(len(items))}
-            for r in rows:
-                for i, item in enumerate(items):
-                    self._record_partition_verdict(
-                        r["__pid"], item, True, {"unexpected_count": int(r[f"z{i}"] or 0)})
-        else:
-            zrow = dfd.agg(*exprs).first().asDict() if exprs else {}
-        unexpected = [int(zrow.get(f"z{i}", 0) or 0) for i in range(len(items))]
+            if self.per_partition:
+                for role in ("element", "nonnull"):
+                    aggs[item.slots[role]] = dp.slot_table.exprs[item.slots[role]]
+            aggs[item.slots["unexpected"]] = F.coalesce(
+                F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
+        frame = self._rollup(dfd, *[e.alias(a) for a, e in aggs.items()])
+        zrow, _ = self._split(self._resolve(frame, items).collect(), items)
+        unexpected = [int((zrow or {}).get(it.slots["unexpected"]) or 0)
+                      for it in items]
         sampled = self._samples(dfd, [(item, conds[i]) for i, item in
                                       enumerate(items) if unexpected[i]])
         return [(item, self._sampled_map_evr(item, grow, ux, sampled))
@@ -1194,23 +1142,16 @@ class ValidationRun:
                     continue
                 dfd = dfd.filter(rc)
 
+            self._domain_rollup = _DomainRollup(f"domain-{didx}")
             grow: dict = {}
-            pid_rows: list[dict] = []
             if dp.slot_table.exprs:
-                agg_list = dp.slot_table.agg_list
                 try:
-                    if self.per_partition and self.partition_verdict_sink is not None:
-                        # 100k+-partition mode: verdict rows go to the sink
-                        # distributed; nothing wide is collected (r4 #6)
-                        grow = self._fused_pass_to_sink(dp, dfd, didx)
-                    elif self.per_partition:
-                        g, pid_rows = _split_grand([r.asDict() for r in _pid_rollup(
-                            dfd.withColumn("__pid", self._pid_expr()),
-                            *agg_list).collect()])
-                        grow = g or {a: None for a in dp.slot_table.exprs}
-                    else:
-                        first = dfd.agg(*agg_list).first()
-                        grow = first.asDict() if first is not None else {a: None for a in dp.slot_table.exprs}
+                    frame = self._resolve(
+                        self._rollup(dfd, *dp.slot_table.agg_list),
+                        dp.fused_items, fused=True)
+                    g, _ = self._split(frame.collect(), dp.fused_items,
+                                       fused=True)
+                    grow = g or {a: None for a in dp.slot_table.exprs}
                 except Exception as exc:  # noqa: BLE001 — fused pass failed: attribute to every item
                     if not self.catch_exceptions:
                         raise
@@ -1226,12 +1167,11 @@ class ValidationRun:
             for item in dp.fused_items:
                 record(item.config,
                        lambda it=item: self._evr_from_row(it, grow, dfd, sampled))
-                self._record_scored_verdicts(item, pid_rows)
 
             if dp.dependent_items:
                 try:
                     for item, evr in self._run_dependent_items(
-                            dp.dependent_items, dfd, grow, pid_rows, didx):
+                            dp, dfd, grow):
                         evrs[id(item.config)] = evr
                 except Exception as e:  # noqa: BLE001
                     if not self.catch_exceptions:
@@ -1240,11 +1180,9 @@ class ValidationRun:
                     for item in dp.dependent_items:
                         evrs[id(item.config)] = _exception_evr(item.config, e, tb)
 
-            for jidx, item in enumerate(dp.job_items):
+            for item in dp.job_items:
                 record(item.config,
-                       lambda it=item, j=jidx: self._run_job_item(
-                           it, dfd, grow, pid_rows=pid_rows, didx=didx,
-                           jidx=j))
+                       lambda it=item: self._run_job_item(it, dfd, grow))
 
         results = []
         for config in suite.expectations:
@@ -1268,11 +1206,12 @@ class ValidationRun:
 
 
 def score_partition(item: CompiledItem, row: dict) -> tuple | None:
-    """One partition's verdict for a fused or count item, from its rollup
-    row: ``(success, element_count, missing_count, unexpected_count,
-    observed_value)``. A count item (window, unique) reads its unexpected
-    count from ``row["__ux"]``. Touches no DataFrame, so collected mode
-    calls it on the driver and sink mode on executors.
+    """One partition's verdict for a fused, z-score or count item, from its
+    rollup row: ``(success, element_count, missing_count, unexpected_count,
+    observed_value)``. A z-score item reads its unexpected count from its
+    column of the z-score pass, a count item (window, unique) from
+    ``row["__ux"]``. Touches no DataFrame, so collected mode calls it on the
+    driver and sink mode on executors.
 
     Returns None when the verdict is NOT a pure function of the row (raw
     sample bootstrap KS, auto-built KL partitions, exact-opt-in quantiles,
@@ -1280,7 +1219,7 @@ def score_partition(item: CompiledItem, row: dict) -> tuple | None:
     per partition would attribute a GLOBAL value to every partition label
     and run one job per partition. Such items have no per-partition rows."""
     spec, kw = item.spec, item.kwargs
-    if spec.kind in ("map", "map_window", "map_unique"):
+    if spec.kind in ("map", "map_dependent", *_UX_ONLY_KINDS):
         el = int(row[item.slots["element"]] or 0)
         nn = int(row[item.slots["nonnull"]] or 0)
         ux = int(row[item.slots.get("unexpected", "__ux")] or 0)
@@ -1344,14 +1283,6 @@ def _scoring_error(row: dict, item: CompiledItem,
              "domain": _domain(item.kwargs),
              "error": f"{type(exc).__name__}: {exc}"},
             traceback.format_exc())
-
-
-def _sink_labels(item: CompiledItem) -> tuple[str, str, str, str]:
-    """An item's (expectation_type, domain, kind, config_kwargs) sink
-    columns."""
-    return (item.config.expectation_type, _domain(item.kwargs),
-            item.spec.kind,
-            json.dumps(item.kwargs, sort_keys=True, default=str))
 
 
 def _sink_observed(v: Any) -> float | None:
@@ -1782,11 +1713,10 @@ def _jsonable(v: Any) -> Any:
 
 def read_partition_verdicts(spark, sink_path: str) -> DataFrame:
     """All per-partition verdict rows a `partition_verdict_sink` run wrote
-    (one file per domain's fused items, per window/unique item and per
-    z-score pass, each scored on executors), as one DataFrame — the
-    scale-safe replacement for result.meta['partition_verdicts'] when
-    partitions number 100k+."""
-    import os
+    (``verdicts-<site>.parquet``, one per site ValidationRun._resolve
+    scored on executors: each domain's fused pass, z-score pass and window
+    and uniqueness items), as one DataFrame — the scale-safe replacement
+    for result.meta['partition_verdicts'] when partitions number 100k+."""
     return spark.read.parquet(os.path.join(sink_path, "verdicts-*.parquet"))
 
 

@@ -1,3 +1,5 @@
+import re
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -36,9 +38,15 @@ def audio_pair(spark, tmp_path_factory):
 
 def pytest_terminal_summary(terminalreporter):
     """Name lost correctness evidence in the summary even without ``-rs``:
-    a skip that says none of the reference corpus ran."""
+    a skip that says none of the reference corpus or none of the reference
+    parity tests ran, once per reason."""
+    lost = re.compile(r"\b0 of the (corpus cases|\d+ parity tests) ran")
+    by_reason: dict[str, list[str]] = {}
     for rep in terminalreporter.stats.get("skipped", []):
         reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else ""
-        if "0 of the corpus cases ran" in reason:
-            terminalreporter.write_line(f"SKIPPED {rep.nodeid}: {reason}",
-                                        yellow=True)
+        if lost.search(reason):
+            by_reason.setdefault(reason, []).append(rep.nodeid)
+    for reason, nodeids in by_reason.items():
+        more = f" (and {len(nodeids) - 1} more)" if len(nodeids) > 1 else ""
+        terminalreporter.write_line(f"SKIPPED {nodeids[0]}{more}: {reason}",
+                                    yellow=True)

@@ -549,6 +549,76 @@ def _op_jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def _rollup_sites_frame(spark):
+    """5,000 rows in 4 partitions: `v` has nulls and duplicates spanning
+    partitions, `x` wraps inside each `g` group as `id` climbs."""
+    return spark.range(0, 5000, numPartitions=4).select(
+        F.col("id"), (F.col("id") % 4).cast("string").alias("part"),
+        F.when(F.col("id") % 97 == 0, None)
+        .otherwise(F.col("id") % 2500).alias("v"),
+        (F.col("id") % 3).alias("g"), (F.col("id") % 50).alias("x"))
+
+
+def _sites_kw(mode, tmp_path):
+    kw = {}
+    if mode != "off":
+        kw = {"per_partition": True, "partition_col": "part"}
+    if mode == "sink":
+        kw["partition_verdict_sink"] = str(tmp_path / "sink")
+    return kw
+
+
+@pytest.mark.parametrize("rf,mode,budget", [
+    ("SUMMARY", "off", 16), ("SUMMARY", "collected", 17),
+    ("SUMMARY", "sink", 33), ("BOOLEAN_ONLY", "off", 10),
+    ("BOOLEAN_ONLY", "collected", 11), ("BOOLEAN_ONLY", "sink", 27)])
+def test_rollup_site_job_budget(spark, tmp_path, rf, mode, budget):
+    """Jobs per validate() of one suite with one item per rollup site (the
+    fused pass, uniqueness, a grouped window and the z-score pass), each
+    with violations, on 5,000 rows in 4 partitions. Every site hands its
+    rolled-up frame to one resolver; the budgets are the counts of the
+    engine whose sites each resolved their own rollup, measured on the
+    same frame and conf."""
+    from sparkcheck import ExpectationSuite, validate
+    from sparkcheck.runner import read_partition_verdicts
+    suite = (ExpectationSuite("sites")
+             .add("expect_column_values_to_not_be_null", column="v")
+             .add("expect_column_values_to_be_unique", column="v",
+                  mostly=0.5)
+             .add("expect_column_values_to_be_increasing", column="x",
+                  group_by="g", order_by="id", mostly=0.5)
+             .add("expect_column_value_z_scores_to_be_less_than",
+                  column="v", threshold=1.5, mostly=0.5))
+    kw = _sites_kw(mode, tmp_path)
+    jobs, res = _op_jobs(spark, lambda: validate(
+        _rollup_sites_frame(spark), suite, result_format=rf, **kw))
+    assert [r.success for r in res.results] == [False, False, True, True]
+    if rf == "SUMMARY":  # every site has violations to sample
+        assert all(r.result["unexpected_count"] for r in res.results)
+    verdicts = (read_partition_verdicts(spark, kw["partition_verdict_sink"])
+                .collect() if mode == "sink"
+                else res.meta.get("partition_verdicts", []))
+    assert len(verdicts) == (0 if mode == "off" else 4 * 4)
+    assert jobs == budget, jobs
+
+
+@pytest.mark.parametrize("mode,budget", [
+    ("off", 5), ("collected", 5), ("sink", 12)])
+def test_passing_window_item_job_budget(spark, tmp_path, mode, budget):
+    """A grouped window item with no violations runs no sample action:
+    its count comes first and only a failing item samples. Same frame as
+    test_rollup_site_job_budget, under SUMMARY."""
+    from sparkcheck import ExpectationSuite, validate
+    suite = ExpectationSuite("window").add(
+        "expect_column_values_to_be_increasing", column="id",
+        group_by="g", order_by="id")
+    jobs, res = _op_jobs(spark, lambda: validate(
+        _rollup_sites_frame(spark), suite, result_format="SUMMARY",
+        **_sites_kw(mode, tmp_path)))
+    assert res.success and res.results[0].result["unexpected_count"] == 0
+    assert jobs == budget, jobs
+
+
 _AUDIO_ITEMS = {
     "snr": ("expect_audio_snr_vs_reference_to_be_above",
             {"reference_table": "ref", "min_snr_db": 30.0}),

@@ -494,3 +494,42 @@ def test_clean_run_reports_no_partition_scoring_errors(spark):
     assert validate(df, suite, per_partition=True
                     ).meta["partition_scoring_errors"] == []
     assert "partition_scoring_errors" not in validate(df, suite).meta
+
+
+def test_z_score_partition_verdicts_are_scored(spark, tmp_path):
+    """A z-score item's partition verdicts are scored like a map item's:
+    element/missing counts of the partition from the z-score pass, success
+    from `mostly` over the partition's own counts (z against the GLOBAL
+    mean/stddev). Partition a holds 900 in-range values and 10
+    nulls, b holds 100 outliers; with mostly=0.95 the global EVR fails with
+    100 unexpected, b fails and a passes, collected and in the sink alike.
+    The single-pass checkpoint stores per-group rows for map items only,
+    so the z-score item keeps its one __global__ row there."""
+    from sparkcheck.checkpoint import Checkpoint
+    rows = ([("a", float(i % 10)) for i in range(900)] + [("a", None)] * 10
+            + [("b", 1000.0)] * 100)
+    df = spark.createDataFrame(rows, "part string, x double")
+    suite = ExpectationSuite("z").add(
+        "expect_column_value_z_scores_to_be_less_than", column="x",
+        threshold=1.0, mostly=0.95)
+    collected = validate(df, suite, per_partition=True, partition_col="part")
+    (evr,) = collected.results
+    assert not evr.success and evr.result["unexpected_count"] == 100
+    want = {"a": (True, 910, 10, 0), "b": (False, 100, 0, 100)}
+    assert {v["partition_id"]: (v["success"], v["element_count"],
+                                v["missing_count"], v["unexpected_count"])
+            for v in collected.meta["partition_verdicts"]} == want
+    sink_dir = str(tmp_path / "sink")
+    sunk = validate(df, suite, per_partition=True, partition_col="part",
+                    partition_verdict_sink=sink_dir)
+    assert sunk.results[0].result == evr.result
+    assert {r["partition_id"]: (r["success"], r["element_count"],
+                                r["missing_count"], r["unexpected_count"])
+            for r in read_partition_verdicts(spark, sink_dir).collect()} == want
+    for distributed in (False, True):
+        cp = Checkpoint(str(tmp_path / f"store-{distributed}"), suite,
+                        group_key="part", n_groups=2)
+        cp.run_single_pass(df, distributed_verdicts=distributed)
+        stored = cp.verdicts(spark).collect()
+        assert [(r["group_id"], r["success"]) for r in stored] == \
+            [("__global__", False)], distributed
