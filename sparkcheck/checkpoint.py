@@ -34,7 +34,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .runner import ValidationRun
+from .runner import ValidationRun, _domain
 from .types import ExpectationSuite
 
 VERDICT_FIELDS = [
@@ -119,6 +119,22 @@ def _counts_are_global(kind: str, kw: dict, group_key: str,
     if kind == "map_window":
         return kw.get("group_by") == group_key
     return False
+
+
+def _grouped_configs(result) -> set:
+    """The config ids run_single_pass stores as per-group rows: the map
+    items whose EVR did not raise. Their summed per-group counts equal the
+    whole-table run, so the rollup's mostly recompute is exact. Every other
+    item, a map item whose pass raised included, stores one ``__global__``
+    row from its EVR: aggregate/drift verdicts per group are NOT closed
+    under AND (a group mean can breach bounds while the global mean
+    passes)."""
+    from .expectations.defs import get_spec
+    return {config_id(evr.expectation_config.expectation_type,
+                      evr.expectation_config.kwargs)
+            for evr in result.results
+            if get_spec(evr.expectation_config.expectation_type).kind == "map"
+            and not evr.exception_info["raised_exception"]}
 
 
 class Checkpoint:
@@ -266,8 +282,7 @@ class Checkpoint:
                 "checkpoint_epoch": epoch,
                 "suite_name": self.suite.expectation_suite_name,
                 "config_id": config_id(etype, kw), "expectation_type": etype,
-                "domain": (kw.get("column")
-                           or ",".join(kw.get("column_list", [])) or ""),
+                "domain": _domain(kw),
                 "success": bool(success), "element_count": element,
                 "nonnull_count": element - int(missing or 0),
                 "unexpected_count": int(unexpected or 0),
@@ -337,10 +352,11 @@ class Checkpoint:
         group: the fused pass rolls up on the group-bucket expression
         (``df.rollup(bucket).agg(...)``), yielding per-group verdict rows for
         every fused expectation plus the exact global row, from a single
-        read. Expectations that need their own jobs (uniqueness, windows,
-        referential, audio) are evaluated once globally and stored as one
-        ``__global__`` row each (their exact whole-table counts — stricter
-        than per-group AND).
+        read. Map expectations store one row per group; every other
+        expectation (aggregates, drift, uniqueness, windows, referential,
+        audio) is evaluated once globally and stored as one ``__global__``
+        row (its exact whole-table verdict — stricter than per-group AND),
+        as is a map expectation whose pass raised (see _grouped_configs).
 
         ``distributed_verdicts=True`` (r4, for n_groups in the 100k+ range):
         the per-group rollup rows are NEVER collected to the driver — the
@@ -404,28 +420,19 @@ class Checkpoint:
         result = run.run(self.suite)
         rows, emit = self._verdict_rows(snapshot_id, epoch)
 
-        # per-group rows only for count-decomposable kinds (map/audio):
-        # their summed counts equal the whole-table run, so the rollup's
-        # mostly recompute is exact. Aggregate/drift verdicts per group are
-        # NOT closed under AND (a group mean can breach bounds while the
-        # global mean passes) — those get their exact global row instead.
-        grouped_configs = set()
+        grouped_configs = _grouped_configs(result)
         for pv in run.partition_verdicts:
-            if pv.get("kind") not in ("map", "audio"):
-                continue
-            if pv.get("element_count") is None:
-                continue
             etype, kw = pv["expectation_type"], pv["config_kwargs"]
-            grouped_configs.add(config_id(etype, kw))
-            emit(pv["partition_id"], etype, kw, count_based=True,
-                 success=pv["success"], element=pv["element_count"],
-                 missing=pv.get("missing_count"),
-                 unexpected=pv.get("unexpected_count"))
-        if distributed_verdicts:
-            # map-kind per-group rows were diverted to the work sink; write
-            # them into the store with a Spark job (no driver materialization)
-            grouped_configs |= self._write_grouped_verdicts_distributed(
-                df.sparkSession, work, snapshot_id, epoch)
+            if config_id(etype, kw) in grouped_configs:
+                emit(pv["partition_id"], etype, kw, count_based=True,
+                     success=pv["success"], element=pv["element_count"],
+                     missing=pv.get("missing_count"),
+                     unexpected=pv.get("unexpected_count"))
+        if distributed_verdicts and grouped_configs:
+            # the per-group rows went to the work sink; write them into the
+            # store with a Spark job (no driver materialization)
+            self._write_grouped_verdicts_distributed(
+                df.sparkSession, work, snapshot_id, epoch, grouped_configs)
         for evr in result.results:
             etype = evr.expectation_config.expectation_type
             kw = evr.expectation_config.kwargs
@@ -452,14 +459,13 @@ class Checkpoint:
                 "wall_sec": time.time() - t0}
 
     def _write_grouped_verdicts_distributed(self, spark, work: str,
-                                            snapshot_id: str,
-                                            epoch: int) -> set:
-        """Transform the runner-sink rows (one per group x fused map item)
-        into verdict-store rows entirely in Spark: broadcast-join the tiny
-        (expectation_type, kwargs-json) -> (config_id, mostly) mapping and
-        write the result as a parquet directory inside the store. Returns
-        the config_ids covered (their global rows are skipped, exactly like
-        the collected path)."""
+                                            snapshot_id: str, epoch: int,
+                                            grouped: set) -> None:
+        """Transform the runner-sink rows of the ``grouped`` configs (one
+        per group x config) into verdict-store rows entirely in Spark:
+        broadcast-join the tiny (expectation_type, kwargs-json) ->
+        (config_id, mostly) mapping and write the result as a parquet
+        directory inside the store."""
         from .expectations.defs import get_spec
         from .runner import read_partition_verdicts
         # keyed dict, not a list: a suite containing two IDENTICAL
@@ -468,28 +474,20 @@ class Checkpoint:
         # config_id, so one mapping row serves both). The kwargs JSON is the
         # sink's config_kwargs: the config's kwargs over the spec defaults.
         mapping: dict[tuple, tuple] = {}
-        grouped = set()
         for config in self.suite.expectations:
             etype = config.expectation_type
-            spec = get_spec(etype)
-            if spec.kind != "map":
-                continue
-            kw = {**spec.defaults, **config.kwargs}
+            kw = {**get_spec(etype).defaults, **config.kwargs}
             cid = config_id(etype, kw)
-            kwj = json.dumps(kw, sort_keys=True, default=str)
-            mapping[(etype, kwj)] = (etype, kwj, cid,
-                                     float(kw.get("mostly", 1.0)))
-            grouped.add(cid)
-        if not mapping:
-            return set()
+            if cid in grouped:
+                kwj = json.dumps(kw, sort_keys=True, default=str)
+                mapping[(etype, kwj)] = (etype, kwj, cid,
+                                         float(kw.get("mostly", 1.0)))
         m = spark.createDataFrame(
             list(mapping.values()),
             "expectation_type string, config_kwargs string, "
             "__cid string, __mostly double")
         v = read_partition_verdicts(spark, work)
-        out = (v.filter((F.col("kind") == "map")
-                        & F.col("element_count").isNotNull())
-               .join(F.broadcast(m), ["expectation_type", "config_kwargs"])
+        out = (v.join(F.broadcast(m), ["expectation_type", "config_kwargs"])
                .select(
                    F.col("partition_id").alias("group_id"),
                    F.lit(snapshot_id).alias("snapshot_id"),
@@ -509,7 +507,6 @@ class Checkpoint:
                    F.lit("[]").alias("unexpected_sample_json")))
         out.write.mode("overwrite").parquet(os.path.join(
             self.store_path, "verdicts", "single-pass-grouped.parquet"))
-        return grouped
 
     def verdicts(self, spark) -> DataFrame:
         # the glob reads BOTH plain files (group-*.parquet,

@@ -63,8 +63,18 @@ referential/audio without the frozen-reference opt-in, bootstrapped KS and
 auto-partition KL (raw-sample / batch-derived partitions).
 
 The per-snapshot stats file is a few KB of JSON regardless of delta size;
-merging is driver-side arithmetic plus (only when uniqueness is present) one
-tiny Spark job that unions the stored HLL sketches. Reference analogue: GE
+merging is driver-side arithmetic plus tiny Spark jobs over the stored
+sketches only (one HLL union when uniqueness/HLL statistics are present, a
+KLL merge and a quantile read when quantiles are).
+
+Verdicts are not scored here. Each domain's merged statistics become the
+row its fused pass would have produced, keyed by the plan's slot aliases
+(derived values — merged mean/stdev/min/max/sum, HLL estimates, KLL
+quantiles — in the item's own slot), and the runner scores that row with
+the code a full validation runs: ``ValidationRun._evr_from_row`` for fused
+items, the HLL prescreen scorer of ``unique_strategy='approx'`` for
+approximate uniqueness. The only incremental additions are notes in
+``details`` on how a sketch merged. Reference analogue: GE
 has no incremental mode — Checkpoint re-validates the full batch every run
 (checkpoint/checkpoint.py:202-306); this module is the Spark-first
 replacement for that loop on append-only tables.
@@ -83,11 +93,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .checkpoint import config_id
-from .planner import CompiledItem, compile_suite
-from .results import (format_map_output, mostly_success,
-                      normalize_result_format)
-from .runner import (UNEXPECTED_LIST_LIMIT, ValidationRun, _agg_custom_evr,
-                     _between_evr, _drift_evr)
+from .planner import CompiledItem, DomainPlan, _job_nonnull, compile_suite
+from .runner import ValidationRun, _drift_counts, _hll_unique_evr
 from .types import (ExpectationSuite, ExpectationSuiteValidationResult,
                     ExpectationValidationResult, build_statistics)
 
@@ -116,6 +123,9 @@ KLL_DEFAULT_K = 200
 _KLL_EPS_COEF, _KLL_EPS_EXP = 2.296, 0.9
 _KLL_MIN_K = 8  # the smallest k the DataSketches KLL sketch accepts
 _KLL_MAX_K = 16384  # ~0.04% rank error, ~300 KB sketch — still stats-file KB
+# key prefix of the HLL sketch that stands in for a uniqueness item's
+# approx_count_distinct slot
+_HLL_SKETCH = "hllsk::"
 
 
 def _kll_k_for(kw: dict) -> int:
@@ -147,9 +157,11 @@ def _suite_fingerprint(suite: ExpectationSuite) -> str:
     return hashlib.md5(json.dumps(ids).encode()).hexdigest()[:16]
 
 
-def _rsd_to_lg_config_k(rsd: float) -> int:
+def _hll_lg_k(kw: dict) -> int:
     """HLL standard error ~= 1.04 / sqrt(2^lgK); pick the smallest lgK whose
-    error is <= the requested rsd (clamped to the sketch's valid 4..21)."""
+    error is <= the expectation's rsd (clamped to the sketch's valid
+    4..21)."""
+    rsd = float(kw.get("rsd", 0.05))
     lg = math.ceil(2.0 * math.log2(1.04 / max(rsd, 1e-6)))
     return max(4, min(21, int(lg)))
 
@@ -292,6 +304,7 @@ class IncrementalCheckpoint:
             raise ValueError(
                 "suite has non-mergeable expectations: "
                 + json.dumps(self._unsupported, indent=2))
+        self._domains = self._domain_items()
         os.makedirs(os.path.join(store_path, "stats"), exist_ok=True)
 
     # ------------------------------------------------------------- plan walk
@@ -302,58 +315,56 @@ class IncrementalCheckpoint:
         for dp in self._plan.domains.values():
             yield from (dp.fused_items + dp.dependent_items + dp.job_items)
 
-    def _domain_items(self):
-        """(domain_id, domain_plan, [supported items]) triples."""
+    def _domain_items(self) -> list[tuple]:
+        """(domain_id, domain plan, supported items, their statistics) for
+        every domain."""
+        out = []
         for did, dp in self._plan.domains.items():
             items = [it for it in dp.fused_items + dp.job_items
                      if id(it.config) in self._strategy]
-            yield did, dp, items
+            out.append((did, dp, items, self._stat_exprs(dp, items)))
+        return out
 
     # -------------------------------------------------------- stat compiling
 
-    def _stat_exprs(self, items: list[CompiledItem]) -> dict[str, dict]:
-        """alias -> {"expr": Column, "op": merge-op}. Aliases are the
-        planner's semantic slot keys (stable across processes), so two
-        expectations sharing a metric share one statistic."""
+    def _stat_exprs(self, dp: DomainPlan,
+                    items: list[CompiledItem]) -> dict[str, dict]:
+        """key -> {"expr": Column, "op": merge-op, "col": its alias}. Keys
+        are the planner's semantic slot keys (stable across processes), so
+        two expectations sharing a metric share one statistic."""
         stats: dict[str, dict] = {}
 
-        def add(key: str, expr, op: str) -> str:
+        def add(key: str, expr, op: str) -> None:
             if key not in stats:
-                stats[key] = {"expr": expr.alias(f"s{len(stats)}"), "op": op,
-                              "col": f"s{len(stats)}"}
-            return key
+                col = f"s{len(stats)}"
+                stats[key] = {"expr": expr.alias(col), "op": op, "col": col}
 
+        inv = {a: k for k, a in dp.slot_table.keys.items()}
         for item in items:
             strat = self._strategy[id(item.config)]
             kw = item.kwargs
-            inv = {a: k for k, a in
-                   self._owning_domain(item).slot_table.keys.items()}
             if strat in ("map", "unique_approx", "drift", "row_count",
                          "distinct_set"):
                 for role, alias in item.slots.items():
                     key = inv[alias]
-                    expr = self._owning_domain(item).slot_table.exprs[alias]
+                    expr = dp.slot_table.exprs[alias]
                     if strat == "unique_approx" and role == "approx_distinct":
                         # replace the approx_count_distinct scalar (not
                         # mergeable) with the sketch itself (losslessly
                         # mergeable via hll_union_agg)
-                        nn = self._unique_nn(item)
                         target = (F.struct(*[F.col(c)
                                              for c in kw["column_list"]])
                                   if item.spec.extra.get("compound")
                                   else F.col(kw["column"]))
-                        lg = _rsd_to_lg_config_k(float(kw.get("rsd", 0.05)))
-                        add("hllsk::" + key,
-                            F.hll_sketch_agg(F.when(nn, target), F.lit(lg)),
-                            "hll")
+                        add(_HLL_SKETCH + key, F.hll_sketch_agg(
+                            F.when(_job_nonnull(item.spec, kw), target),
+                            F.lit(_hll_lg_k(kw))), "hll")
                     elif strat == "distinct_set" and role == "value":
                         add(key, expr, "set_union")
                     else:
                         add(key, expr, "sum")
                 for alias in item.info.get("bin_aliases", []):
-                    add(inv[alias],
-                        self._owning_domain(item).slot_table.exprs[alias],
-                        "sum")
+                    add(inv[alias], dp.slot_table.exprs[alias], "sum")
             elif strat.startswith("kll:"):
                 k = _kll_k_for(kw)
                 add(f"inc::kll::{kw['column']}::{k}",
@@ -362,11 +373,10 @@ class IncrementalCheckpoint:
                     "kll")
             elif strat == "unique_proportion:hll":
                 col = F.col(kw["column"])
-                lg = _rsd_to_lg_config_k(float(kw.get("rsd", 0.05)))
                 # lg in the key: two expectations on the same column with
                 # different rsd must not share (and silently degrade) a sketch
-                add(f"inc::hllp::{kw['column']}::{lg}",
-                    F.hll_sketch_agg(col, F.lit(lg)), "hll")
+                add(f"inc::hllp::{kw['column']}::{_hll_lg_k(kw)}",
+                    F.hll_sketch_agg(col, F.lit(_hll_lg_k(kw))), "hll")
                 add(f"inc::nncnt::{kw['column']}", F.count(col), "sum")
             elif strat.startswith("agg:"):
                 col = F.col(kw["column"])
@@ -385,26 +395,35 @@ class IncrementalCheckpoint:
                     add(f"inc::nsum::{kw['column']}", F.sum(col),
                         "sum_nullable")
                 if what == "hll":
-                    lg = _rsd_to_lg_config_k(float(kw.get("rsd", 0.05)))
                     add(f"inc::hll::{kw['column']}",
-                        F.hll_sketch_agg(col, F.lit(lg)), "hll")
+                        F.hll_sketch_agg(col, F.lit(_hll_lg_k(kw))), "hll")
         return stats
 
-    def _owning_domain(self, item: CompiledItem):
-        for dp in self._plan.domains.values():
-            if item in dp.fused_items or item in dp.job_items:
-                return dp
-        raise KeyError(item.config.expectation_type)
-
-    @staticmethod
-    def _unique_nn(item: CompiledItem):
-        from .metrics import conditions as C
-        kw = item.kwargs
-        if item.spec.extra.get("compound") or "column_list" in kw:
-            return C.multicolumn_domain_filter(
-                {**kw, "ignore_row_if":
-                 kw.get("ignore_row_if", "all_values_are_missing")})
-        return F.col(kw["column"]).isNotNull()
+    def _merged_row(self, dp: DomainPlan, items: list[CompiledItem],
+                    acc: dict) -> dict:
+        """The merged statistics ``acc`` as the row the domain's fused pass
+        would have produced: slot alias -> value. Summed slots carry over;
+        each derived metric (mean, stdev, min, max, sum, an HLL estimate,
+        KLL quantiles) goes into its item's own slot."""
+        inv = {a: k for k, a in dp.slot_table.keys.items()}
+        row = {a: acc[k] for a, k in inv.items() if k in acc}
+        for item in items:
+            strat = self._strategy[id(item.config)]
+            kw, slots, c = item.kwargs, item.slots, item.kwargs.get("column")
+            if strat == "unique_approx":
+                a = slots["approx_distinct"]
+                row[a] = acc[_HLL_SKETCH + inv[a]]
+            elif strat == "unique_proportion:hll":
+                row[slots["distinct"]] = acc[f"inc::hllp::{c}::{_hll_lg_k(kw)}"]
+                row[slots["nonnull"]] = acc[f"inc::nncnt::{c}"]
+            elif strat.startswith("kll:"):
+                qmap = acc[f"inc::kll::{c}::{_kll_k_for(kw)}"] or {}
+                values = [qmap.get(q) for q in _kll_quantiles(strat, item)]
+                row[slots["value"]] = (values[0] if strat == "kll:median"
+                                       else values)
+            elif strat.startswith("agg:"):
+                row[slots["value"]] = _merged_agg(strat[4:], c, acc, kw)
+        return row
 
     # ---------------------------------------------------------- delta passes
 
@@ -443,15 +462,14 @@ class IncrementalCheckpoint:
                      "format_version": STATS_FORMAT_VERSION, "domains": {},
                      "schema": {}}
         from .metrics import conditions as C
-        for did, dp, items in self._domain_items():
+        for did, dp, _, stats in self._domains:
+            if not stats:
+                continue
             dfd = df
             if dp.row_condition:
                 dfd = dfd.filter(C.row_condition_filter(
                     {"row_condition": dp.row_condition,
                      "condition_parser": dp.condition_parser}))
-            stats = self._stat_exprs(items)
-            if not stats:
-                continue
             row = dfd.agg(*[s["expr"] for s in stats.values()]).first()
             vals = {}
             for key, s in stats.items():
@@ -581,22 +599,11 @@ class IncrementalCheckpoint:
         deltas = self._load_stats()
         if not deltas:
             raise ValueError("no validated snapshots in the stats store")
-        merged_domains: dict[str, dict] = {}
-        hll_pending: list[tuple[str, str, list[bytes]]] = []  # (did,key,[sk])
-        kll_pending: list[tuple[str, str, int, list[bytes]]] = []
-        kll_need: dict[str, set] = {}   # "did\x00key" -> quantiles wanted
-        for did, dp, items in self._domain_items():
-            stats = self._stat_exprs(items)   # recompiled for op metadata
-            for item in items:
-                strat = self._strategy[id(item.config)]
-                if strat.startswith("kll:"):
-                    kw = item.kwargs
-                    key = (f"inc::kll::{kw['column']}"
-                           f"::{_kll_k_for(kw)}")
-                    qs = ({0.5} if strat == "kll:median"
-                          else {float(q) for q in item.info["quantiles"]})
-                    kll_need.setdefault(f"{did}\x00{key}", set()).update(qs)
-            acc: dict = {}
+        merged: dict[str, dict] = {}
+        # sketch op -> (did, key, [stored sketches]) folded by Spark below
+        pending: dict[str, list] = {"hll": [], "kll": []}
+        for did, _, _, stats in self._domains:
+            acc = merged[did] = {}
             for key, s in stats.items():
                 # A key the CURRENT engine folds but a stored delta lacks
                 # means that delta was validated by an engine version that
@@ -613,57 +620,30 @@ class IncrementalCheckpoint:
                         f"{key!r} — they were validated by an engine version "
                         "that did not fold it; re-validate them or start a "
                         "fresh stats store")
-                vals = [_decode(d["domains"].get(did, {}).get(key))
-                        for d in deltas]
-                op = s["op"]
-                if op == "sum":
-                    acc[key] = sum(int(v) if isinstance(v, int) else v
-                                   for v in vals if v is not None) \
-                        if any(v is not None for v in vals) else 0
-                elif op == "sum_nullable":
-                    nn = [v for v in vals if v is not None]
-                    acc[key] = sum(nn) if nn else None
-                elif op == "min":
-                    nn = [v for v in vals if v is not None]
-                    acc[key] = min(nn) if nn else None
-                elif op == "max":
-                    nn = [v for v in vals if v is not None]
-                    acc[key] = max(nn) if nn else None
-                elif op == "set_union":
-                    u = set()
-                    for v in vals:
-                        u.update(v or [])
-                    acc[key] = sorted(u)
-                elif op == "hll":
-                    sketches = [v for v in vals if v is not None]
-                    hll_pending.append((did, key, sketches))
+                vals = [v for v in (_decode(d["domains"][did][key])
+                                    for d in deltas) if v is not None]
+                if s["op"] in pending:
+                    pending[s["op"]].append((did, key, vals))
                     acc[key] = None  # filled below
-                elif op == "kll":
-                    sketches = [v for v in vals if v is not None]
-                    kll_pending.append(
-                        (did, key, int(key.rsplit("::", 1)[1]), sketches))
-                    acc[key] = None  # filled below
-                else:  # pragma: no cover
-                    raise ValueError(op)
-            merged_domains[did] = acc
-        if any(sk for _, _, sk in hll_pending):
+                else:
+                    acc[key] = _fold(s["op"], vals)
+        hll = [(f"{did}\x00{key}", sk)
+               for did, key, sks in pending["hll"] for sk in sks]
+        if hll:
             if spark is None:
                 raise ValueError(
                     "merging uniqueness sketches needs a SparkSession — "
                     "pass spark to merged_result()")
-            rows = [(f"{did}\x00{key}", sk)
-                    for did, key, sks in hll_pending for sk in sks]
-            if rows:
-                est = {r["k"]: int(r["est"]) for r in
-                       (spark.createDataFrame(rows, "k string, sk binary")
-                        .groupBy("k")
-                        .agg(F.hll_sketch_estimate(
-                            F.hll_union_agg("sk", F.lit(True))).alias("est"))
-                        .collect())}
-                for did, key, sks in hll_pending:
-                    if sks:
-                        merged_domains[did][key] = est.get(f"{did}\x00{key}", 0)
-        if any(sk for _, _, _, sk in kll_pending):
+            est = {r["k"]: int(r["est"]) for r in
+                   (spark.createDataFrame(hll, "k string, sk binary")
+                    .groupBy("k")
+                    .agg(F.hll_sketch_estimate(
+                        F.hll_union_agg("sk", F.lit(True))).alias("est"))
+                    .collect())}
+            for did, key, sks in pending["hll"]:
+                if sks:
+                    merged[did][key] = est.get(f"{did}\x00{key}", 0)
+        if any(sks for _, _, sks in pending["kll"]):
             if spark is None:
                 raise ValueError(
                     "merging quantile sketches needs a SparkSession — "
@@ -671,11 +651,10 @@ class IncrementalCheckpoint:
             # two tiny jobs over the KB-sized sketches (never the data):
             # 1. merge per (composite key, k) — one job per distinct k so the
             #    merged sketch keeps the caller's accuracy parameter
-            from collections import defaultdict
-            by_k: dict[int, list] = defaultdict(list)
-            for did, key, k, sks in kll_pending:
-                for sk in sks:
-                    by_k[k].append((f"{did}\x00{key}", sk))
+            by_k: dict[int, list] = {}
+            for did, key, sks in pending["kll"]:
+                by_k.setdefault(int(key.rsplit("::", 1)[1]), []).extend(
+                    (f"{did}\x00{key}", sk) for sk in sks)
             merged_sk: dict[str, bytes] = {}
             for k, rows in by_k.items():
                 for r in (spark.createDataFrame(rows, "k string, sk binary")
@@ -686,39 +665,31 @@ class IncrementalCheckpoint:
             # 2. extract every quantile any expectation needs from the
             #    merged sketches — the rank argument must be foldable, so
             #    each distinct quantile becomes one literal column
-            all_qs = sorted({float(q) for qs in kll_need.values()
-                             for q in qs})
+            qs = sorted({q for _, _, items, _ in self._domains
+                         for it in items for q in _kll_quantiles(
+                             self._strategy[id(it.config)], it)})
             qvals: dict[tuple, float] = {}
-            if merged_sk and all_qs:
-                res = (spark.createDataFrame(
-                           list(merged_sk.items()), "k string, sk binary")
-                       .select("k", *[
-                           F.kll_sketch_get_quantile_double("sk", F.lit(q))
-                           .alias(f"q{i}") for i, q in enumerate(all_qs)])
-                       .collect())
-                for r in res:
-                    for i, q in enumerate(all_qs):
-                        qvals[(r["k"], q)] = r[f"q{i}"]
-            for did, key, k, sks in kll_pending:
+            for r in (spark.createDataFrame(
+                          list(merged_sk.items()), "k string, sk binary")
+                      .select("k", *[
+                          F.kll_sketch_get_quantile_double("sk", F.lit(q))
+                          .alias(f"q{i}") for i, q in enumerate(qs)])
+                      .collect()):
+                for i, q in enumerate(qs):
+                    qvals[(r["k"], q)] = r[f"q{i}"]
+            for did, key, sks in pending["kll"]:
                 if sks:
-                    ck = f"{did}\x00{key}"
-                    merged_domains[did][key] = {
-                        q: qvals.get((ck, float(q)))
-                        for q in kll_need.get(ck, ())}
-        return self._verdicts(merged_domains, deltas)
+                    merged[did][key] = {q: qvals.get((f"{did}\x00{key}", q))
+                                        for q in qs}
+        return self._verdicts(merged, deltas)
 
     # ------------------------------------------------------------- verdicts
 
-    def _verdicts(self, merged_domains: dict,
+    def _verdicts(self, merged: dict,
                   deltas: list[dict]) -> ExpectationSuiteValidationResult:
-        # a detached ValidationRun shim for _map_evr's result format; the
-        # fused-EVR functions used below (_between_evr / _agg_custom_evr /
-        # _drift_evr on explicit partition_objects) get no DataFrame, so
-        # they are row arithmetic only
-        vr = ValidationRun.__new__(ValidationRun)
-        vr.rf = normalize_result_format(self.result_format)
-        vr.rf.setdefault("unexpected_list_limit", UNEXPECTED_LIST_LIMIT)
-        vr.partition_verdicts = []
+        """Each domain's merged row scored by the runner's verdict code, as
+        a full validation scores its fused row."""
+        vr = ValidationRun(None, result_format=self.result_format)
         results = []
         for item in self._plan.schema_items:
             cid = config_id(item.config.expectation_type, item.kwargs)
@@ -727,21 +698,28 @@ class IncrementalCheckpoint:
             results.append(ExpectationValidationResult(
                 success=success, expectation_config=item.config,
                 result={"details": {"per_snapshot_success": oks}}))
-        for did, dp, items in self._domain_items():
-            acc = merged_domains.get(did, {})
-            stats = self._stat_exprs(items)
-            inv_rows = {key: acc.get(key) for key in stats}
-
+        for did, dp, items, _ in self._domains:
+            row = self._merged_row(dp, items, merged[did])
             for item in items:
                 strat = self._strategy[id(item.config)]
                 if strat in ("job_counts", "rowcount_vs_other"):
                     results.append(self._job_verdict(vr, item, strat, deltas))
                     continue
-                inv = {a: k for k, a in dp.slot_table.keys.items()}
-                row = {a: inv_rows.get(inv[a]) for a in inv
-                       if inv[a] in inv_rows}
-                results.append(self._item_verdict(vr, item, strat, row,
-                                                  inv_rows, inv))
+                if strat == "unique_approx":
+                    evr, _ = _hll_unique_evr(vr.rf, item, row,
+                                             "hll_prescreen_incremental")
+                else:
+                    if strat == "drift" and "values" in item.info:
+                        counts, _, _, nonnull = _drift_counts(item, row)
+                        if nonnull - sum(counts) > 0.5:
+                            raise ValueError(
+                                "categorical drift merge saw values outside "
+                                "the expected set; resolving their mass "
+                                "needs per-value counts — run a full "
+                                "validation for this check")
+                    evr = vr._evr_from_row(item, row, None, {})
+                _add_merge_details(evr, item, strat, row)
+                results.append(evr)
         return ExpectationSuiteValidationResult(
             success=all(r.success for r in results),
             results=results, statistics=build_statistics(results),
@@ -780,118 +758,71 @@ class IncrementalCheckpoint:
         ux = sum(r["ux"] for r in recs)
         return vr._map_evr(item, el, el - mi, ux, [], None)
 
-    def _item_verdict(self, vr, item: CompiledItem, strat: str, row: dict,
-                      inv_rows: dict, inv: dict) -> ExpectationValidationResult:
-        kw = item.kwargs
-        if strat == "map":
-            element = int(row[item.slots["element"]] or 0)
-            nonnull = int(row[item.slots["nonnull"]] or 0)
-            unexpected = int(row[item.slots["unexpected"]] or 0)
-            # samples live with each delta's own validation, not the stats
-            return vr._map_evr(item, element, nonnull, unexpected, [], None)
-        if strat == "unique_approx":
-            element = int(row[item.slots["element"]] or 0)
-            nonnull = int(row[item.slots["nonnull"]] or 0)
-            approx = int(inv_rows.get(
-                "hllsk::" + inv[item.slots["approx_distinct"]]) or 0)
-            rsd = float(kw.get("rsd", 0.05))
-            est_dups = max(0, nonnull - approx)
-            tolerated = 3.0 * rsd * max(nonnull, 1)
-            suspect = est_dups > tolerated
-            success = (not suspect) or mostly_success(
-                element, nonnull, est_dups, kw.get("mostly", 1.0))
-            result = format_map_output(vr.rf, bool(success), element, nonnull,
-                                       est_dups if suspect else 0, [])
-            result["details"] = {
-                "strategy": "hll_prescreen_incremental",
-                "approx_distinct": approx,
-                "note": ("merged DataSketches HLL union across snapshots; "
-                         "exact dup counts need one full-table pass"),
-            }
-            return ExpectationValidationResult(
-                success=bool(success), expectation_config=item.config,
-                result=result)
-        if strat.startswith("agg:"):
-            what = strat.split(":", 1)[1]
-            c = kw["column"]
-            if what == "mean":
-                cnt = inv_rows.get(f"inc::cnt::{c}") or 0
-                value = (inv_rows.get(f"inc::sum::{c}") / cnt) if cnt else None
-            elif what == "stdev":
-                cnt = inv_rows.get(f"inc::cnt::{c}") or 0
-                s1 = inv_rows.get(f"inc::sum::{c}") or 0.0
-                s2 = inv_rows.get(f"inc::sumsq::{c}") or 0.0
-                value = (math.sqrt(max(0.0, (s2 - s1 * s1 / cnt) / (cnt - 1)))
-                         if cnt >= 2 else None)
-            elif what == "min":
-                value = _maybe_temporal(inv_rows.get(f"inc::min::{c}"), kw)
-            elif what == "max":
-                value = _maybe_temporal(inv_rows.get(f"inc::max::{c}"), kw)
-            elif what == "sum":
-                value = inv_rows.get(f"inc::nsum::{c}")
-            elif what == "hll":
-                value = inv_rows.get(f"inc::hll::{c}")
-            else:  # pragma: no cover
-                raise ValueError(what)
-            return _between_evr(item, value)
-        if strat.startswith("kll:"):
-            c = kw["column"]
-            k = _kll_k_for(kw)
-            qmap = inv_rows.get(f"inc::kll::{c}::{k}") or {}
-            note = {"strategy": "kll_sketch_merge",
-                    "kll_k": k,
-                    "note": ("merged DataSketches KLL doubles sketches "
-                             "across snapshots; observed quantiles are "
-                             "within the sketch's normalized rank-error "
-                             "bound of a full recompute")}
-            if strat == "kll:median":
-                evr = _between_evr(item, qmap.get(0.5))
-                evr.result.setdefault("details", {}).update(note)
-                return evr
-            quantiles = [float(q) for q in item.info["quantiles"]]
-            values = [qmap.get(q) for q in quantiles]
-            ranges = kw["quantile_ranges"]["value_ranges"]
-            successes = [bool(v is not None
-                              and (lo is None or v >= lo)
-                              and (hi is None or v <= hi))
-                         for v, (lo, hi) in zip(values, ranges)]
-            return ExpectationValidationResult(
-                success=all(successes) and all(v is not None for v in values)
-                and len(values) == len(ranges),
-                expectation_config=item.config,
-                result={"observed_value": {"quantiles": quantiles,
-                                           "values": values},
-                        "details": {"success_details": successes, **note}})
-        if strat == "unique_proportion:hll":
-            c = kw["column"]
-            lg = _rsd_to_lg_config_k(float(kw.get("rsd", 0.05)))
-            distinct = inv_rows.get(f"inc::hllp::{c}::{lg}")
-            nonnull = int(inv_rows.get(f"inc::nncnt::{c}") or 0)
-            value = (distinct / nonnull) if nonnull else None
-            evr = _between_evr(item, value)
-            evr.result.setdefault("details", {}).update({
-                "strategy": "hll_union_incremental",
-                "approx_distinct": distinct,
-                "nonnull_count": nonnull,
+
+def _kll_quantiles(strat: str, item: CompiledItem) -> list[float]:
+    """The quantiles an item merged by ``strat`` reads from its KLL
+    sketch."""
+    if strat == "kll:median":
+        return [0.5]
+    if strat == "kll:quantiles":
+        return item.info["quantiles"]
+    return []
+
+
+def _fold(op: str, vals: list):
+    """One statistic's non-null per-delta values folded by ``op``."""
+    if op == "sum":
+        return sum(vals)
+    if op == "set_union":
+        return sorted({x for v in vals for x in v})
+    if not vals:
+        return None
+    return {"sum_nullable": sum, "min": min, "max": max}[op](vals)
+
+
+def _merged_agg(what: str, c: str, acc: dict, kw: dict):
+    """Column ``c``'s ``what`` aggregate from its merged statistics: mean =
+    sum/count, sample stdev = sqrt((S2 - S1^2/C)/(C-1)), folded min/max/sum,
+    the unioned HLL estimate."""
+    if what in ("mean", "stdev"):
+        cnt = acc[f"inc::cnt::{c}"] or 0
+        if what == "mean":
+            return acc[f"inc::sum::{c}"] / cnt if cnt else None
+        s1 = acc[f"inc::sum::{c}"] or 0.0
+        s2 = acc[f"inc::sumsq::{c}"] or 0.0
+        return (math.sqrt(max(0.0, (s2 - s1 * s1 / cnt) / (cnt - 1)))
+                if cnt >= 2 else None)
+    if what in ("min", "max"):
+        return _maybe_temporal(acc[f"inc::{what}::{c}"], kw)
+    return acc[f"inc::{'nsum' if what == 'sum' else 'hll'}::{c}"]
+
+
+def _add_merge_details(evr: ExpectationValidationResult, item: CompiledItem,
+                       strat: str, row: dict) -> None:
+    """Note in a merged EVR's details how its sketch statistics merged."""
+    if strat == "unique_approx":
+        # the prescreen's noise band is reported by full validations only
+        details = evr.result["details"]
+        del details["rsd"], details["dup_rows_upper_bound"]
+        note = {"note": ("merged DataSketches HLL union across snapshots; "
+                         "exact dup counts need one full-table pass")}
+    elif strat.startswith("kll:"):
+        note = {"strategy": "kll_sketch_merge",
+                "kll_k": _kll_k_for(item.kwargs),
+                "note": ("merged DataSketches KLL doubles sketches across "
+                         "snapshots; observed quantiles are within the "
+                         "sketch's normalized rank-error bound of a full "
+                         "recompute")}
+    elif strat == "unique_proportion:hll":
+        note = {"strategy": "hll_union_incremental",
+                "approx_distinct": row[item.slots["distinct"]],
+                "nonnull_count": int(row[item.slots["nonnull"]] or 0),
                 "note": ("proportion = merged DataSketches HLL distinct "
                          "estimate / summed nonnull count; distinct "
-                         "standard error ≈ 1.04/sqrt(2^lgConfigK)")})
-            return evr
-        if strat in ("row_count", "distinct_set"):
-            return _agg_custom_evr(item, row)
-        if strat == "drift":
-            if "values" in item.info:
-                nonnull = float(row[item.slots["nonnull"]] or 0)
-                seen = sum(float(row[a] or 0)
-                           for a in item.info["bin_aliases"])
-                if nonnull - seen > 0.5:
-                    raise ValueError(
-                        "categorical drift merge saw values outside the "
-                        "expected set; resolving their mass needs per-value "
-                        "counts — run a full validation for this check")
-            return _drift_evr(item, row)
-        raise ValueError(strat)  # pragma: no cover
-
+                         "standard error ≈ 1.04/sqrt(2^lgConfigK)")}
+    else:
+        return
+    evr.result.setdefault("details", {}).update(note)
 
 def _maybe_temporal(value, kw: dict):
     """_encode JSON-serializes a date/timestamp min/max fold as str(v); a

@@ -92,7 +92,11 @@ def _nonnull_pred(spec: ExpectationSpec, kw: dict) -> Column:
 
 
 def _job_nonnull(spec: ExpectationSpec, kw: dict) -> Column:
-    """The domain filter of a job item's nonnull slot."""
+    """The domain filter of a job item's nonnull slot. Uniqueness scans
+    filter by it too (the exact dup groups, the incremental HLL sketch), so
+    their counts agree with the slot's. Compound keys default to
+    all_values_are_missing (expect_compound_columns_to_be_unique.py:35):
+    partially-null keys take part in dup grouping, nulls grouping together."""
     if spec.extra.get("compound") or "column_list" in kw:
         return C.multicolumn_domain_filter(
             {**kw, "ignore_row_if": kw.get("ignore_row_if", "all_values_are_missing")})

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from .expectations.defs import ExpectationSpec, get_spec
 from .metrics import conditions as C
 from .metrics import sketches
-from .planner import CompiledItem, DomainPlan, compile_suite
+from .planner import CompiledItem, DomainPlan, _job_nonnull, compile_suite
 from .results import (
     format_map_output,
     mostly_success,
@@ -81,13 +81,14 @@ _UX_ONLY_KINDS = ("map_window", "map_unique")
 @dataclass
 class _DomainRollup:
     """The fused rollup of the domain being run, as its count items read
-    it: its partition rows in collected mode (in sink mode its stored
-    ``rollup-<site>.parquet``). Sink files are named after their site,
-    ``rollup-<site>.parquet`` and ``verdicts-<site>.parquet``: the fused
-    pass's site is ``domain-<d>``, the domain's n-th later site (the z-score
-    pass, then each window and uniqueness item) ``domain-<d>-<n>``."""
+    it: its partition rows in collected mode, the read-back of its stored
+    ``rollup-<site>.parquet`` in sink mode. Sink files are named after their
+    site, ``rollup-<site>.parquet`` and ``verdicts-<site>.parquet``: the
+    fused pass's site is ``domain-<d>``, the domain's n-th later site (the
+    z-score pass, then each window and uniqueness item) ``domain-<d>-<n>``."""
     site: str
     parts: list[dict] = field(default_factory=list)
+    stored: DataFrame | None = None
     sites: int = 0  # later sites of the domain resolved so far
 
 
@@ -204,9 +205,10 @@ class ValidationRun:
         (``rollup-domain-<d>.parquet`` in sink mode) are the domain
         rollup. A count item (window, unique) rolls up only its unexpected
         count, and its partitions are the domain rollup's, with their
-        element/nonnull: a null-safe join to the stored domain rollup here
-        in sink mode, a merge of dicts in _split otherwise. A partition
-        without a count row has no unexpected rows."""
+        element/nonnull: a null-safe join to the fused site's read-back
+        here in sink mode, a merge of dicts in _split otherwise. A
+        partition without a count row has no unexpected rows. Read-backs
+        take the frame's schema, so no job infers it from the files."""
         if self.partition_verdict_sink is None:
             return frame
         dom = self._domain_rollup
@@ -217,15 +219,17 @@ class ValidationRun:
         def path(kind: str, site: str) -> str:
             return os.path.join(self.partition_verdict_sink,
                                 f"{kind}-{site}.parquet")
-        read = frame.sparkSession.read.parquet
         frame.write.mode("overwrite").parquet(path("rollup", site))
-        stored = read(path("rollup", site))
+        stored = frame.sparkSession.read.schema(frame.schema).parquet(
+            path("rollup", site))
+        if fused:
+            dom.stored = stored
         parts = stored.filter(f"{_GRAND} = 0")
         if items and items[0].spec.kind in _UX_ONLY_KINDS:
             slots = dict.fromkeys(it.slots[r] for it in items
                                   for r in ("element", "nonnull"))
-            domain = (read(path("rollup", dom.site))
-                      .filter(f"{_GRAND} = 0").select("__pid", *slots))
+            domain = (dom.stored.filter(f"{_GRAND} = 0")
+                      .select("__pid", *slots))
             counts = parts.select(F.col("__pid").alias("__cpid"), "__ux")
             parts = domain.join(counts, domain["__pid"].eqNullSafe(
                 counts["__cpid"]), "left").drop("__cpid")
@@ -612,48 +616,22 @@ class ValidationRun:
         nonnull = int(grow[item.slots["nonnull"]] or 0)
         details: dict = {"strategy": "exact_groupby"}
         if self.unique_strategy in ("approx", "auto"):
-            approx = int(grow[item.slots["approx_distinct"]] or 0)
-            rsd = float(kw.get("rsd", 0.05))
-            # HLL++ prescreen (north_star): the fused pass already paid for
-            # approx_count_distinct. est_dups beyond the 3*rsd noise band is
-            # REAL duplication; inside the band the sketch cannot distinguish
-            # dups from estimation error.
-            est_dups = max(0, nonnull - approx)
-            tolerated = 3.0 * rsd * max(nonnull, 1)
-            suspect = est_dups > tolerated
-            if self.unique_strategy == "auto" and suspect:
-                # fall through to the exact groupBy job below
-                details = {"strategy": "exact_after_suspect_prescreen",
-                           "approx_distinct": approx}
-            else:
-                if self.unique_strategy == "auto":
-                    # clean prescreen: no detectable duplicates at the
-                    # sketch's resolution — skip the exact job entirely
-                    success, reported = True, 0
-                else:  # pure 'approx' verdict
-                    success = (not suspect) or mostly_success(
-                        element, nonnull, est_dups, kw.get("mostly", 1.0))
-                    reported = est_dups if suspect else 0
-                result = format_map_output(
-                    self.rf, bool(success), element, nonnull, reported, [])
-                result["details"] = {
-                    "strategy": ("hll_prescreen_clean"
-                                 if self.unique_strategy == "auto" else "hll_approx"),
-                    "approx_distinct": approx, "rsd": rsd,
-                    "dup_rows_upper_bound": int(tolerated)}
-                return ExpectationValidationResult(
-                    success=bool(success), expectation_config=item.config, result=result)
+            auto = self.unique_strategy == "auto"
+            evr, suspect = _hll_unique_evr(
+                self.rf, item, grow,
+                "hll_prescreen_clean" if auto else "hll_approx")
+            if not (auto and suspect):
+                # 'approx' is the sketch's verdict; a clean 'auto'
+                # prescreen (no duplicates at the sketch's resolution)
+                # skips the exact job
+                return evr
+            approx = evr.result["details"]["approx_distinct"]
+            details = {"strategy": "exact_after_suspect_prescreen",
+                       "approx_distinct": approx}
 
-        # reference default is all_values_are_missing
-        # (expect_compound_columns_to_be_unique.py:35): partially-null keys
-        # DO participate in dup grouping (nulls group together). Must match
-        # the fused nonnull slot's filter (planner.py) or the mostly
-        # denominator and the dup scan would disagree on partially-null rows.
-        nn = C.multicolumn_domain_filter(
-            {"column_list": cols,
-             "ignore_row_if": kw.get("ignore_row_if", "all_values_are_missing")}) \
-            if compound else F.col(cols[0]).isNotNull()
-        kept = dfd.filter(nn)
+        # the nonnull slot's domain filter, or the mostly denominator and
+        # the dup scan would disagree on partially-null compound keys
+        kept = dfd.filter(_job_nonnull(item.spec, kw))
         if self.per_partition:
             # (key, partition) pre-agg: map-side partial aggregation does the
             # heavy lift, everything after it is distinct-key sized
@@ -1126,21 +1104,21 @@ class ValidationRun:
             dfd = self.df
             if dp.row_condition:
                 try:
-                    rc = C.row_condition_filter(
+                    dfd = dfd.filter(C.row_condition_filter(
                         {"row_condition": dp.row_condition,
-                         "condition_parser": dp.condition_parser})
+                         "condition_parser": dp.condition_parser}))
                 except Exception as exc:  # noqa: BLE001 — bad condition: EVRs, not abort
                     if not self.catch_exceptions:
                         raise
-                    # an unparseable row_condition fails every expectation in
-                    # this domain as an exception EVR (same contract as any
-                    # other config error) and the rest of the suite still runs
+                    # a row_condition that does not parse or resolve fails
+                    # every expectation in this domain as an exception EVR
+                    # (same contract as any other config error) and the
+                    # rest of the suite still runs
                     def _reraise(e=exc):
                         raise ValueError(f"invalid row_condition: {e}") from e
                     for it in dp.fused_items + dp.dependent_items + dp.job_items:
                         record(it.config, _reraise)
                     continue
-                dfd = dfd.filter(rc)
 
             self._domain_rollup = _DomainRollup(f"domain-{didx}")
             grow: dict = {}
@@ -1354,6 +1332,32 @@ def _between_evr(item: CompiledItem, value: Any) -> ExpectationValidationResult:
                 ov.strftime(fmt) if fmt else str(ov))
     return ExpectationValidationResult(
         success=out["success"], expectation_config=item.config, result=out["result"])
+
+
+def _hll_unique_evr(rf: dict, item: CompiledItem, row: dict, strategy: str
+                    ) -> tuple[ExpectationValidationResult, bool]:
+    """A uniqueness item's HLL++ prescreen verdict from its fused row (the
+    element, nonnull and approx_distinct slots), and whether the prescreen
+    is suspect. est_dups = nonnull - approx beyond the 3*rsd noise band is
+    REAL duplication, scored against mostly; inside the band the sketch
+    cannot tell dups from estimation error, and the item passes."""
+    kw = item.kwargs
+    element = int(row[item.slots["element"]] or 0)
+    nonnull = int(row[item.slots["nonnull"]] or 0)
+    approx = int(row[item.slots["approx_distinct"]] or 0)
+    rsd = float(kw.get("rsd", 0.05))
+    est_dups = max(0, nonnull - approx)
+    tolerated = 3.0 * rsd * max(nonnull, 1)
+    suspect = est_dups > tolerated
+    success = (not suspect) or mostly_success(
+        element, nonnull, est_dups, kw.get("mostly", 1.0))
+    result = format_map_output(rf, bool(success), element, nonnull,
+                               est_dups if suspect else 0, [])
+    result["details"] = {"strategy": strategy, "approx_distinct": approx,
+                         "rsd": rsd, "dup_rows_upper_bound": int(tolerated)}
+    return ExpectationValidationResult(
+        success=bool(success), expectation_config=item.config,
+        result=result), suspect
 
 
 def _agg_custom_evr(item: CompiledItem, row: dict,

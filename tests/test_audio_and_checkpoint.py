@@ -1179,20 +1179,40 @@ class TestDistributedSinglePass:
         return out
 
     def test_distributed_matches_collected(self, spark, clips6k, tmp_path):
+        """Also with a column-pair item, labelled by its column_A in both
+        modes, and a map item whose fused pass raises (an unclosed regex,
+        in a domain of its own), stored as one failed __global__ row in
+        both modes next to the healthy domain's per-group rows."""
         from sparkcheck.checkpoint import Checkpoint
-        a = Checkpoint(str(tmp_path / "collected"), self._suite(),
+
+        def suite():
+            return (self._suite()
+                    .add("expect_column_pair_values_to_be_equal",
+                         column_A="sr_hz", column_B="sr_hz")
+                    .add("expect_column_values_to_match_regex",
+                         column="clip_id", regex="(unclosed",
+                         row_condition="sr_hz > 0",
+                         condition_parser="spark"))
+        a = Checkpoint(str(tmp_path / "collected"), suite(),
                        group_key="clip_id", n_groups=6)
         a.run_single_pass(clips6k)
-        b = Checkpoint(str(tmp_path / "distributed"), self._suite(),
+        b = Checkpoint(str(tmp_path / "distributed"), suite(),
                        group_key="clip_id", n_groups=6)
         b.run_single_pass(clips6k, distributed_verdicts=True)
         ra, rb = self._rows(spark, a), self._rows(spark, b)
         assert set(ra) == set(rb)
         assert ra == rb
-        # per-group rows for both map expectations on all 6 groups,
-        # plus __global__ rows for mean / unique
+        # per-group rows for the three healthy map expectations on all 6
+        # groups, plus __global__ rows for mean / unique / the bad regex
         groups = {g for g, _ in ra}
         assert groups == {str(i) for i in range(6)} | {"__global__"}
+        by_type: dict = {}
+        for (g, _), row in ra.items():
+            by_type.setdefault(row[0], []).append((g, row[1], row[2]))
+        assert sorted(by_type["expect_column_pair_values_to_be_equal"]) == [
+            (str(i), "sr_hz", True) for i in range(6)]
+        assert by_type["expect_column_values_to_match_regex"] == [
+            ("__global__", "clip_id", False)]
         # the work sink is cleaned up after commit
         import os
         assert not os.path.exists(str(tmp_path / "distributed" /

@@ -319,6 +319,23 @@ class TestTableAndSchema:
                 row_condition="c IS NOT NULL")
         assert r.success
 
+    @pytest.mark.parametrize("row_condition", ["nosuchcol > 1", "a >>> 1"])
+    def test_unresolvable_spark_row_condition(self, ge_mixed, row_condition):
+        """A Spark row_condition that does not resolve (unknown column) or
+        parse fails its domain's items as exception EVRs and the rest of the
+        suite still runs; without catch_exceptions it raises."""
+        suite = (ExpectationSuite("rc")
+                 .add("expect_column_values_to_not_be_null", column="c",
+                      row_condition=row_condition, condition_parser="spark")
+                 .add("expect_table_row_count_to_equal", value=4))
+        bad, good = validate(ge_mixed, suite).results
+        assert not bad.success
+        assert bad.exception_info["raised_exception"]
+        assert "invalid row_condition" in bad.exception_info["exception_message"]
+        assert good.success
+        with pytest.raises(Exception, match="nosuchcol|>>>|PARSE|SYNTAX"):
+            validate(ge_mixed, suite, catch_exceptions=False)
+
     def test_schema_checks(self, ge_mixed):
         assert one(ge_mixed, "expect_column_to_exist", column="a").success
         assert not one(ge_mixed, "expect_column_to_exist", column="zz").success

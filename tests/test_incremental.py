@@ -623,3 +623,113 @@ def test_approximate_unique_proportion_merges(spark, tmp_path):
     assert full.success
     assert r.result["observed_value"] == pytest.approx(
         full.result["observed_value"], rel=0.1)
+
+
+# ---------------------------------------------------------------- pinned EVRs
+
+_PINNED_EVRS = os.path.join(os.path.dirname(__file__), "data",
+                            "incremental_merged_evrs.json")
+
+
+def _pinned_suite() -> ExpectationSuite:
+    """One expectation (at least) per merge strategy."""
+    v_bins = {"bins": [0.0, 30.0, 60.0, 120.0], "weights": [0.3, 0.3, 0.4]}
+    kinds = {"values": ["a", "b", "c", "z"],
+             "weights": [0.25, 0.25, 0.25, 0.25]}
+    return (
+        ExpectationSuite("pinned")
+        .add("expect_column_to_exist", column="kind")
+        .add("expect_column_values_to_not_be_null", column="user",
+             mostly=0.8)
+        .add("expect_column_values_to_be_in_set", column="kind",
+             value_set=["a", "b", "c"], mostly=0.5)
+        .add("expect_column_values_to_be_between", column="v",
+             min_value=0, max_value=90, row_condition='kind != "z"',
+             condition_parser="spark")
+        .add("expect_column_values_to_be_unique", column="user", mostly=0.5)
+        .add("expect_column_mean_to_be_between", column="v", min_value=0,
+             max_value=100)
+        .add("expect_column_min_to_be_between", column="v", min_value=1)
+        .add("expect_column_max_to_be_between", column="v", max_value=200)
+        .add("expect_column_sum_to_be_between", column="v", min_value=0)
+        .add("expect_column_stdev_to_be_between", column="v", min_value=0,
+             max_value=20)
+        .add("expect_column_unique_value_count_to_be_between", column="kind",
+             min_value=1, max_value=3, approximate=True)
+        .add("expect_column_median_to_be_between", column="v", min_value=0,
+             max_value=100)
+        .add("expect_column_quantile_values_to_be_between", column="v",
+             quantile_ranges={"quantiles": [0.1, 0.5, 0.9],
+                              "value_ranges": [[0, 20], [40, 60],
+                                               [100, 200]]})
+        .add("expect_column_proportion_of_unique_values_to_be_between",
+             column="n", min_value=0.5, approximate=True)
+        .add("expect_table_row_count_to_be_between", min_value=1,
+             max_value=1000)
+        .add("expect_table_row_count_to_equal", value=170)
+        .add("expect_column_distinct_values_to_be_in_set", column="kind",
+             value_set=["a", "b", "c", "z"])
+        .add("expect_column_kl_divergence_to_be_less_than", column="v",
+             partition_object=v_bins, threshold=0.5)
+        .add("expect_column_psi_to_be_less_than", column="v",
+             partition_object=v_bins, threshold=0.1)
+        .add("expect_column_ks_statistic_to_be_less_than", column="v",
+             partition_object=v_bins, threshold=0.2)
+        .add("expect_column_kl_divergence_to_be_less_than", column="kind",
+             partition_object=kinds, threshold=0.1)
+        .add("expect_column_chisquare_test_p_value_to_be_greater_than",
+             column="kind", partition_object=kinds, threshold=0.05)
+        .add("expect_column_values_to_be_in_table", column="user",
+             other_table="ref", other_column="user", mostly=0.5)
+        .add("expect_table_row_count_to_equal_other_table",
+             other_table_name="other")
+    )
+
+
+def _pinned_df(spark, lo, hi):
+    """Users repeat across deltas, some are null or missing from ``ref``;
+    under 200 rows in all, so the KLL sketches never compact and the merged
+    quantiles are deterministic."""
+    return spark.range(lo, hi).select(
+        F.when(F.col("id") % 11 == 4, None)
+        .otherwise(F.concat(F.lit("u"), F.col("id") % 60)).alias("user"),
+        F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("c"), F.lit("z")),
+                     (F.col("id") % 4 + 1).cast("int")).alias("kind"),
+        (F.col("id") % 37 * 3).cast("double").alias("v"),
+        (F.col("id") % 53).alias("n"))
+
+
+def merged_evr_dicts(spark, store: str) -> dict:
+    """The pinned suite validated as two deltas, merged under SUMMARY and
+    BOOLEAN_ONLY: result format -> one dict per merged EVR."""
+    tables = {"ref": spark.range(0, 50).select(
+                  F.concat(F.lit("u"), F.col("id")).alias("user")),
+              "other": spark.range(170)}
+    inc = IncrementalCheckpoint(_pinned_suite(), store, tables=tables,
+                                frozen_reference=True, strict=True)
+    inc.validate_delta(_pinned_df(spark, 0, 80), snapshot_id="d1")
+    inc.validate_delta(_pinned_df(spark, 80, 170), snapshot_id="d2")
+    out = {}
+    for rf in ("SUMMARY", "BOOLEAN_ONLY"):
+        merged = IncrementalCheckpoint(
+            _pinned_suite(), store, result_format=rf, tables=tables,
+            frozen_reference=True).merged_result(spark)
+        out[rf] = [{"expectation_type": r.expectation_config.expectation_type,
+                    "success": r.success, "result": r.result,
+                    "exception_info": r.exception_info}
+                   for r in merged.results]
+    return out
+
+
+def test_merged_evrs_are_pinned(spark, tmp_path):
+    """Every merge strategy's merged EVR, details included, is pinned as
+    JSON text (key order too) in tests/data/incremental_merged_evrs.json.
+    The file was written by the engine whose incremental merge scored EVRs
+    with its own per-strategy code; the merge now scores through the
+    runner's verdict functions and must reproduce it byte for byte."""
+    import json
+    got = json.dumps(merged_evr_dicts(spark, str(tmp_path / "store")),
+                     indent=1, default=str)
+    with open(_PINNED_EVRS) as f:
+        expected = json.dumps(json.load(f), indent=1)
+    assert got == expected

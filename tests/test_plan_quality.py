@@ -273,8 +273,7 @@ def test_incremental_stats_pass_prunes_scan(spark, clips_path):
     inc._strategy = {id(it.config): _classify_item(it)
                      for it in inc._iter_items()}
     d = spark.read.parquet(clips_path)
-    (did, dp, items), = list(inc._domain_items())
-    stats = inc._stat_exprs(items)
+    (did, dp, items, stats), = inc._domain_items()
     agg = d.agg(*[s["expr"] for s in stats.values()])
     txt = _executed_plan(agg)
     m = re.search(r"ReadSchema: struct<([^>]*)>", txt)
@@ -380,9 +379,10 @@ def test_exact_unique_job_budget(spark, clips_path, monkeypatch, tmp_path,
     per-partition dup counts from ONE plan over one scan: a change that
     adds an action (and with it a re-scan of the input) fails here. The
     budgets are the jobs that plan takes under adaptive execution (one per
-    shuffle stage plus the result stage); sink mode adds the read-back of
-    the stored frame and the verdict write."""
-    budget = {"global": 3, "per_partition": 4, "sink": 9}[mode]
+    shuffle stage plus the result stage); sink mode adds the rollup writes
+    and the verdict writes. Sink read-backs take the frame's schema, so no
+    job infers it (9 sink jobs when each read-back inferred it)."""
+    budget = {"global": 3, "per_partition": 4, "sink": 7}[mode]
     kw = {}
     if mode != "global":
         kw["per_partition"] = True
@@ -570,15 +570,18 @@ def _sites_kw(mode, tmp_path):
 
 @pytest.mark.parametrize("rf,mode,budget", [
     ("SUMMARY", "off", 16), ("SUMMARY", "collected", 17),
-    ("SUMMARY", "sink", 33), ("BOOLEAN_ONLY", "off", 10),
-    ("BOOLEAN_ONLY", "collected", 11), ("BOOLEAN_ONLY", "sink", 27)])
+    ("SUMMARY", "sink", 27), ("BOOLEAN_ONLY", "off", 10),
+    ("BOOLEAN_ONLY", "collected", 11), ("BOOLEAN_ONLY", "sink", 21)])
 def test_rollup_site_job_budget(spark, tmp_path, rf, mode, budget):
     """Jobs per validate() of one suite with one item per rollup site (the
     fused pass, uniqueness, a grouped window and the z-score pass), each
     with violations, on 5,000 rows in 4 partitions. Every site hands its
     rolled-up frame to one resolver; the budgets are the counts of the
     engine whose sites each resolved their own rollup, measured on the
-    same frame and conf."""
+    same frame and conf, less 6 sink jobs: read-backs of the stored
+    rollups take the frame's schema instead of inferring it, and the
+    window and uniqueness sites join the fused site's read-back instead
+    of reading the domain rollup again (33 and 27 sink jobs before)."""
     from sparkcheck import ExpectationSuite, validate
     from sparkcheck.runner import read_partition_verdicts
     suite = (ExpectationSuite("sites")
@@ -603,11 +606,12 @@ def test_rollup_site_job_budget(spark, tmp_path, rf, mode, budget):
 
 
 @pytest.mark.parametrize("mode,budget", [
-    ("off", 5), ("collected", 5), ("sink", 12)])
+    ("off", 5), ("collected", 5), ("sink", 9)])
 def test_passing_window_item_job_budget(spark, tmp_path, mode, budget):
     """A grouped window item with no violations runs no sample action:
     its count comes first and only a failing item samples. Same frame as
-    test_rollup_site_job_budget, under SUMMARY."""
+    test_rollup_site_job_budget, under SUMMARY; sink mode spends 3 jobs
+    less than when its read-backs inferred their schema (12)."""
     from sparkcheck import ExpectationSuite, validate
     suite = ExpectationSuite("window").add(
         "expect_column_values_to_be_increasing", column="id",
