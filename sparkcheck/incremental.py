@@ -9,29 +9,32 @@ scale-correct loop is:
     for each NEW snapshot:  validate only the appended delta (one fused pass)
     whole-table verdicts:   merge per-snapshot sufficient statistics
 
-Which statistics make an expectation mergeable (all folds are exact unless
-noted):
+The planner declares how each slot of the fused pass merges
+(``SlotTable.merges``). This module decides which expectations merge, runs
+the declared statistics of their slots over each delta, folds them by the
+declared op and calls each slot's ``finalize``. The statistics (all folds
+are exact unless noted):
 
 - map / pair / multicolumn conditions — each row's pass/fail depends on that
-  row alone, so (element, nonnull, unexpected) counts SUM exactly.
-- row_count — counts sum.
-- mean / sum — (count, sum) sum; merged mean = sum/count.
-- min / max — fold by min/max.
-- stddev (sample) — (count, sum, sum of squares) sum; merged
+  row alone, so (element, nonnull, unexpected) counts SUM exactly; so do the
+  row count and drift's histogram / category buckets.
+- min / max fold by min / max, sum by a sum that stays null over empty
+  input, a distinct value set (subset/superset/equal) by set union.
+- mean / stddev (sample) — (count, sum, sum of squares) sum; merged
   stddev = sqrt((S2 - S1^2/C)/(C-1)). Float64 sums: the only inexactness is
   last-ulp association order, bounded by the snapshot count (not row count).
 - drift (KL / KS / PSI / chi-square with an explicit partition_object) —
-  histogram bucket counts sum exactly, so the merged score is IDENTICAL to a
-  full recompute. Categorical drift merges only when no out-of-set values
-  were observed (resolving out-of-set mass needs per-value counts).
-- distinct value set (subset/superset/equal) — per-delta ``collect_set``
-  folds by set union.
-- uniqueness — approximate only: per-delta DataSketches HLL
-  (``hll_sketch_agg``) merge losslessly via ``hll_union_agg``; the merged
-  verdict is the engine's documented HLL-prescreen strategy
-  (``unique_strategy='approx'``). EXACT uniqueness is NOT derivable from
+  summed bucket counts make the merged score IDENTICAL to a full recompute.
+  Categorical drift merges only when no out-of-set values were observed
+  (resolving out-of-set mass needs per-value counts).
+- approximate distinct counts — per-delta DataSketches HLL sketches
+  (``hll_sketch_agg``) merge losslessly via ``hll_union_agg``. Uniqueness
+  merges as the engine's documented HLL-prescreen strategy
+  (``unique_strategy='approx'``); EXACT uniqueness is NOT derivable from
   per-delta statistics (a duplicate can span two snapshots) — it is reported
-  as unsupported and needs one full-table pass.
+  as unsupported and needs one full-table pass. The same holds for exact
+  unique_value_count / unique proportion, which merge with the
+  ``approximate=True`` opt-in.
 - median / quantiles — approximate with a declared bound: per-delta
   DataSketches KLL doubles sketches (``kll_sketch_agg_double``) merge
   losslessly via ``kll_merge_agg_double``; the merged quantile differs from
@@ -43,7 +46,6 @@ noted):
   per-delta sketches.
 - schema checks — evaluated per delta, folded by AND (sound for append-only
   tables: every file ever written satisfied the check).
-
 - audio invariants (SNR/payload/header) and referential checks — mergeable
   with ``frozen_reference=True`` (+ ``tables=``): each delta runs its own
   prescreen-join/anti-join job against the reference table and the
@@ -57,98 +59,58 @@ NOT mergeable, reported in ``unsupported`` (run a full validation for these):
 exact-opt-in median/quantiles (see above), z-score
 (defined against the evolving global mean/std — old rows' verdicts change
 when data appends), increasing/decreasing windows (order spans snapshots),
-exact uniqueness / exact unique_proportion / exact unique_value_count
-(both of the latter merge with the approximate=True HLL opt-in),
+exact uniqueness / exact unique_proportion / exact unique_value_count,
 referential/audio without the frozen-reference opt-in, bootstrapped KS and
 auto-partition KL (raw-sample / batch-derived partitions).
 
 The per-snapshot stats file is a few KB of JSON regardless of delta size;
-merging is driver-side arithmetic plus tiny Spark jobs over the stored
-sketches only (one HLL union when uniqueness/HLL statistics are present, a
-KLL merge and a quantile read when quantiles are).
+merging is driver-side folds plus tiny Spark jobs over the stored sketches
+only (one HLL union when HLL statistics are present, one KLL merge that
+also reads the quantiles when quantiles are).
 
 Verdicts are not scored here. Each domain's merged statistics become the
-row its fused pass would have produced, keyed by the plan's slot aliases
-(derived values — merged mean/stdev/min/max/sum, HLL estimates, KLL
-quantiles — in the item's own slot), and the runner scores that row with
-the code a full validation runs: ``ValidationRun._evr_from_row`` for fused
-items, the HLL prescreen scorer of ``unique_strategy='approx'`` for
-approximate uniqueness. The only incremental additions are notes in
-``details`` on how a sketch merged. Reference analogue: GE
-has no incremental mode — Checkpoint re-validates the full batch every run
-(checkpoint/checkpoint.py:202-306); this module is the Spark-first
-replacement for that loop on append-only tables.
+row its fused pass would have produced, keyed by the plan's slot aliases,
+and the runner scores that row with the code a full validation runs:
+``ValidationRun._evr_from_row`` for fused items, the HLL prescreen scorer of
+``unique_strategy='approx'`` for approximate uniqueness. The only
+incremental additions are notes in ``details`` on how a sketch merged.
+Reference analogue: GE has no incremental mode — Checkpoint re-validates the
+full batch every run (checkpoint/checkpoint.py:202-306); this module is the
+Spark-first replacement for that loop on append-only tables.
 """
 
 from __future__ import annotations
 
 import base64
+import datetime
+import decimal
 import hashlib
 import json
-import math
-import numbers
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .checkpoint import config_id
-from .planner import CompiledItem, DomainPlan, _job_nonnull, compile_suite
+# KLL_DEFAULT_K and _KLL_MIN_K are part of this module's kll_k contract
+from .planner import (KLL_DEFAULT_K, _KLL_EPS_COEF, _KLL_EPS_EXP,  # noqa: F401
+                      _KLL_MAX_K, _KLL_MIN_K, CompiledItem, DomainPlan,
+                      _kll_k_for, compile_suite)
 from .runner import ValidationRun, _drift_counts, _hll_unique_evr
 from .types import (ExpectationSuite, ExpectationSuiteValidationResult,
                     ExpectationValidationResult, build_statistics)
 
-STATS_FORMAT_VERSION = 1
+STATS_FORMAT_VERSION = 2
 
 # distinct-set statistics are stored verbatim in the per-snapshot JSON; the
 # KB-sized-stats-file guarantee requires them to stay value-set-sized
 MAX_DISTINCT_SET = 10_000
 
-# agg-kind expectation types with an exact sufficient-statistic decomposition
-_MERGEABLE_AGGS = {
-    "expect_column_mean_to_be_between": "mean",
-    "expect_column_min_to_be_between": "min",
-    "expect_column_max_to_be_between": "max",
-    "expect_column_sum_to_be_between": "sum",
-    "expect_column_stdev_to_be_between": "stdev",
-}
-
 _DRIFT_SCORES_MERGEABLE = {"kl", "ks", "psi", "chisq_p", "ks_param_p"}
 
-# default DataSketches KLL k: ~0.8% one-sided normalized rank error at 99%
-# confidence, 4-5 KB serialized — override per expectation with kll_k=
-KLL_DEFAULT_K = 200
-# published DataSketches KLL accuracy model (single-sided, 99% confidence):
-# eps(k) ≈ 2.296 / k^0.9 — inverted to honor allow_relative_error
-_KLL_EPS_COEF, _KLL_EPS_EXP = 2.296, 0.9
-_KLL_MIN_K = 8  # the smallest k the DataSketches KLL sketch accepts
-_KLL_MAX_K = 16384  # ~0.04% rank error, ~300 KB sketch — still stats-file KB
-# key prefix of the HLL sketch that stands in for a uniqueness item's
-# approx_count_distinct slot
-_HLL_SKETCH = "hllsk::"
-
-
-def _kll_k_for(kw: dict) -> int:
-    """Effective KLL k for a quantile expectation: explicit ``kll_k`` wins;
-    otherwise a positive ``allow_relative_error`` is treated as the caller's
-    rank-error tolerance and k is derived from the inverted accuracy model
-    (never below the default — tighter than requested is always safe).
-    Tolerances the largest supported sketch cannot deliver are rejected at
-    classification time, not silently rounded to k=200. An explicit k
-    outside [_KLL_MIN_K, _KLL_MAX_K] is a configuration error."""
-    if "kll_k" in kw:
-        k = kw["kll_k"]
-        if (isinstance(k, bool) or not isinstance(k, numbers.Integral)
-                or not _KLL_MIN_K <= k <= _KLL_MAX_K):
-            raise ValueError(
-                f"kll_k={k!r} must be an integer in "
-                f"[{_KLL_MIN_K}, {_KLL_MAX_K}]")
-        return int(k)
-    err = kw.get("allow_relative_error", False)
-    if isinstance(err, (int, float)) and not isinstance(err, bool) and err > 0:
-        k = math.ceil((_KLL_EPS_COEF / float(err)) ** (1.0 / _KLL_EPS_EXP))
-        return max(KLL_DEFAULT_K, k)
-    return KLL_DEFAULT_K
+# strategies whose items run their own join job on each delta and keep its
+# counts, instead of merging fused statistics
+_JOB_STRATEGIES = ("job_counts", "rowcount_vs_other")
 
 
 def _suite_fingerprint(suite: ExpectationSuite) -> str:
@@ -157,22 +119,14 @@ def _suite_fingerprint(suite: ExpectationSuite) -> str:
     return hashlib.md5(json.dumps(ids).encode()).hexdigest()[:16]
 
 
-def _hll_lg_k(kw: dict) -> int:
-    """HLL standard error ~= 1.04 / sqrt(2^lgK); pick the smallest lgK whose
-    error is <= the expectation's rsd (clamped to the sketch's valid
-    4..21)."""
-    rsd = float(kw.get("rsd", 0.05))
-    lg = math.ceil(2.0 * math.log2(1.04 / max(rsd, 1e-6)))
-    return max(4, min(21, int(lg)))
-
-
 class _Unsupported(Exception):
     pass
 
 
-def _classify_item(item: CompiledItem, *,
+def _classify_item(item: CompiledItem, merges: dict, *,
                    frozen_reference: bool = False) -> str:
-    """-> merge strategy name, or raise _Unsupported(reason)."""
+    """-> merge strategy name, or raise _Unsupported(reason). ``merges`` are
+    the slot merge declarations of the item's domain."""
     kind = item.spec.kind
     etype = item.config.expectation_type
     if kind in ("audio", "referential"):
@@ -186,30 +140,26 @@ def _classify_item(item: CompiledItem, *,
             return "rowcount_vs_other"
         return "job_counts"
     if kind == "map":
-        return "map"
+        return "fused"
     if kind == "agg":
-        if etype in _MERGEABLE_AGGS:
-            return "agg:" + _MERGEABLE_AGGS[etype]
+        if item.slots["value"] in merges:
+            # a median merges approximately, within the KLL sketch's declared
+            # rank-error bound (the full-validation path is exact F.median;
+            # merging sketches is the documented incremental tolerance, like
+            # HLL uniqueness)
+            return ("kll" if etype == "expect_column_median_to_be_between"
+                    else "fused")
         if etype == "expect_column_unique_value_count_to_be_between":
-            if item.kwargs.get("approximate"):
-                return "agg:hll"
             raise _Unsupported(
                 "exact distinct count is not derivable from per-delta "
                 "statistics (pass approximate=True for a mergeable HLL "
                 "sketch, or run a full validation)")
-        if etype == "expect_column_median_to_be_between":
-            # approximate within the KLL sketch's declared rank-error bound
-            # (the full-validation path is exact F.median; merging sketches
-            # is the documented incremental tolerance, like HLL uniqueness)
-            return "kll:median"
         raise _Unsupported(
             f"{etype} has no exact sufficient-statistic decomposition")
     if kind == "agg_custom":
         handler = item.spec.extra["handler"]
-        if handler == "row_count":
-            return "row_count"
-        if handler == "distinct_set":
-            return "distinct_set"
+        if handler in ("row_count", "distinct_set"):
+            return "fused"
         if handler == "quantiles":
             kw = item.kwargs
             err = kw.get("allow_relative_error", False)
@@ -228,7 +178,7 @@ def _classify_item(item: CompiledItem, *,
                     f"{_KLL_EPS_COEF / _KLL_MAX_K ** _KLL_EPS_EXP:.2%} rank "
                     "error) — loosen it, pass kll_k= explicitly, or run a "
                     "full validation")
-            return "kll:quantiles"
+            return "kll"
         if handler == "unique_proportion":
             if item.kwargs.get("approximate"):
                 return "unique_proportion:hll"
@@ -285,14 +235,14 @@ class IncrementalCheckpoint:
         self.tables = tables or {}
         self._fp = _suite_fingerprint(suite)
         # uniqueness merges through HLL sketches across snapshots, so plan
-        # the prescreen slot that _stat_exprs swaps for hll_sketch_agg
+        # the prescreen slot, whose declared state is the sketch
         self._plan = compile_suite(suite.expectations, unique_strategy="approx")
         self._strategy: dict[int, str] = {}   # id(config) -> strategy
         self._unsupported: list[dict] = []
-        for item in self._iter_items():
+        for item, merges in self._iter_items():
             try:
                 self._strategy[id(item.config)] = _classify_item(
-                    item, frozen_reference=frozen_reference)
+                    item, merges, frozen_reference=frozen_reference)
             except _Unsupported as e:
                 self._unsupported.append({
                     "expectation_type": item.config.expectation_type,
@@ -310,120 +260,27 @@ class IncrementalCheckpoint:
     # ------------------------------------------------------------- plan walk
 
     def _iter_items(self):
+        """(item, the slot merge declarations of its domain) for every
+        item."""
         for item in self._plan.schema_items:
-            yield item
+            yield item, {}
         for dp in self._plan.domains.values():
-            yield from (dp.fused_items + dp.dependent_items + dp.job_items)
+            for item in dp.fused_items + dp.dependent_items + dp.job_items:
+                yield item, dp.slot_table.merges
 
     def _domain_items(self) -> list[tuple]:
-        """(domain_id, domain plan, supported items, their statistics) for
-        every domain."""
+        """(domain_id, domain plan, supported items, the statistics of their
+        slots — see _statistics) for every domain."""
         out = []
         for did, dp in self._plan.domains.items():
             items = [it for it in dp.fused_items + dp.job_items
                      if id(it.config) in self._strategy]
-            out.append((did, dp, items, self._stat_exprs(dp, items)))
+            aliases = dict.fromkeys(
+                a for it in items
+                if self._strategy[id(it.config)] not in _JOB_STRATEGIES
+                for a in (*it.slots.values(), *it.info.get("bin_aliases", ())))
+            out.append((did, dp, items, _statistics(dp, aliases)))
         return out
-
-    # -------------------------------------------------------- stat compiling
-
-    def _stat_exprs(self, dp: DomainPlan,
-                    items: list[CompiledItem]) -> dict[str, dict]:
-        """key -> {"expr": Column, "op": merge-op, "col": its alias}. Keys
-        are the planner's semantic slot keys (stable across processes), so
-        two expectations sharing a metric share one statistic."""
-        stats: dict[str, dict] = {}
-
-        def add(key: str, expr, op: str) -> None:
-            if key not in stats:
-                col = f"s{len(stats)}"
-                stats[key] = {"expr": expr.alias(col), "op": op, "col": col}
-
-        inv = {a: k for k, a in dp.slot_table.keys.items()}
-        for item in items:
-            strat = self._strategy[id(item.config)]
-            kw = item.kwargs
-            if strat in ("map", "unique_approx", "drift", "row_count",
-                         "distinct_set"):
-                for role, alias in item.slots.items():
-                    key = inv[alias]
-                    expr = dp.slot_table.exprs[alias]
-                    if strat == "unique_approx" and role == "approx_distinct":
-                        # replace the approx_count_distinct scalar (not
-                        # mergeable) with the sketch itself (losslessly
-                        # mergeable via hll_union_agg)
-                        target = (F.struct(*[F.col(c)
-                                             for c in kw["column_list"]])
-                                  if item.spec.extra.get("compound")
-                                  else F.col(kw["column"]))
-                        add(_HLL_SKETCH + key, F.hll_sketch_agg(
-                            F.when(_job_nonnull(item.spec, kw), target),
-                            F.lit(_hll_lg_k(kw))), "hll")
-                    elif strat == "distinct_set" and role == "value":
-                        add(key, expr, "set_union")
-                    else:
-                        add(key, expr, "sum")
-                for alias in item.info.get("bin_aliases", []):
-                    add(inv[alias], dp.slot_table.exprs[alias], "sum")
-            elif strat.startswith("kll:"):
-                k = _kll_k_for(kw)
-                add(f"inc::kll::{kw['column']}::{k}",
-                    F.kll_sketch_agg_double(
-                        F.col(kw["column"]).cast("double"), F.lit(k)),
-                    "kll")
-            elif strat == "unique_proportion:hll":
-                col = F.col(kw["column"])
-                # lg in the key: two expectations on the same column with
-                # different rsd must not share (and silently degrade) a sketch
-                add(f"inc::hllp::{kw['column']}::{_hll_lg_k(kw)}",
-                    F.hll_sketch_agg(col, F.lit(_hll_lg_k(kw))), "hll")
-                add(f"inc::nncnt::{kw['column']}", F.count(col), "sum")
-            elif strat.startswith("agg:"):
-                col = F.col(kw["column"])
-                dbl = col.cast("double")
-                what = strat.split(":", 1)[1]
-                if what in ("mean", "stdev"):
-                    add(f"inc::cnt::{kw['column']}", F.count(col), "sum")
-                    add(f"inc::sum::{kw['column']}", F.sum(dbl), "sum")
-                if what == "stdev":
-                    add(f"inc::sumsq::{kw['column']}", F.sum(dbl * dbl), "sum")
-                if what == "min":
-                    add(f"inc::min::{kw['column']}", F.min(col), "min")
-                if what == "max":
-                    add(f"inc::max::{kw['column']}", F.max(col), "max")
-                if what == "sum":
-                    add(f"inc::nsum::{kw['column']}", F.sum(col),
-                        "sum_nullable")
-                if what == "hll":
-                    add(f"inc::hll::{kw['column']}",
-                        F.hll_sketch_agg(col, F.lit(_hll_lg_k(kw))), "hll")
-        return stats
-
-    def _merged_row(self, dp: DomainPlan, items: list[CompiledItem],
-                    acc: dict) -> dict:
-        """The merged statistics ``acc`` as the row the domain's fused pass
-        would have produced: slot alias -> value. Summed slots carry over;
-        each derived metric (mean, stdev, min, max, sum, an HLL estimate,
-        KLL quantiles) goes into its item's own slot."""
-        inv = {a: k for k, a in dp.slot_table.keys.items()}
-        row = {a: acc[k] for a, k in inv.items() if k in acc}
-        for item in items:
-            strat = self._strategy[id(item.config)]
-            kw, slots, c = item.kwargs, item.slots, item.kwargs.get("column")
-            if strat == "unique_approx":
-                a = slots["approx_distinct"]
-                row[a] = acc[_HLL_SKETCH + inv[a]]
-            elif strat == "unique_proportion:hll":
-                row[slots["distinct"]] = acc[f"inc::hllp::{c}::{_hll_lg_k(kw)}"]
-                row[slots["nonnull"]] = acc[f"inc::nncnt::{c}"]
-            elif strat.startswith("kll:"):
-                qmap = acc[f"inc::kll::{c}::{_kll_k_for(kw)}"] or {}
-                values = [qmap.get(q) for q in _kll_quantiles(strat, item)]
-                row[slots["value"]] = (values[0] if strat == "kll:median"
-                                       else values)
-            elif strat.startswith("agg:"):
-                row[slots["value"]] = _merged_agg(strat[4:], c, acc, kw)
-        return row
 
     # ---------------------------------------------------------- delta passes
 
@@ -470,11 +327,14 @@ class IncrementalCheckpoint:
                 dfd = dfd.filter(C.row_condition_filter(
                     {"row_condition": dp.row_condition,
                      "condition_parser": dp.condition_parser}))
-            row = dfd.agg(*[s["expr"] for s in stats.values()]).first()
+            cols = [c for alias, merge, _ in stats for c in (
+                [dp.slot_table.exprs[alias]] if isinstance(merge, str)
+                else merge.build(dfd))]
+            row = dfd.agg(*[c.alias(f"s{i}")
+                            for i, c in enumerate(cols)]).first()
             vals = {}
-            for key, s in stats.items():
-                v = row[s["col"]]
-                if (s["op"] == "set_union" and v is not None
+            for (key, op), v in zip(_ops(stats).items(), row):
+                if (op == "set_union" and v is not None
                         and len(v) > MAX_DISTINCT_SET):
                     # the per-snapshot stats file must stay KB-sized; a
                     # high-cardinality distinct-set column would silently
@@ -485,7 +345,7 @@ class IncrementalCheckpoint:
                         "a value-set check on a high-cardinality column is "
                         "not incrementally mergeable at bounded size; drop "
                         "it from the suite or validate it with a full run")
-                vals[key] = _encode(v, key, s["op"])
+                vals[key] = _encode(v)
             out["domains"][did] = vals
         if self._plan.schema_items:
             vr = ValidationRun(df)
@@ -493,9 +353,8 @@ class IncrementalCheckpoint:
                 evr = vr._run_schema_item(item)
                 out["schema"][config_id(item.config.expectation_type,
                                         item.kwargs)] = bool(evr.success)
-        job_items = [it for it in self._iter_items()
-                     if self._strategy.get(id(it.config)) in
-                     ("job_counts", "rowcount_vs_other")]
+        job_items = [it for it, _ in self._iter_items()
+                     if self._strategy.get(id(it.config)) in _JOB_STRATEGIES]
         if job_items:
             # frozen-reference audio/referential: run their own join jobs on
             # THIS delta only (prescreen/anti-join against the full reference
@@ -589,22 +448,24 @@ class IncrementalCheckpoint:
         return out
 
     def merged_result(self, spark=None) -> ExpectationSuiteValidationResult:
-        """Whole-table verdicts from the merged statistics. The merge itself
-        is driver-side arithmetic over the KB-sized stats files; ``spark``
-        (an active session) is only needed when the suite contains
-        uniqueness/HLL expectations — one tiny job unions the stored
-        sketches. (Plan compilation in ``__init__`` builds Catalyst Column
-        objects, so the process still needs a live SparkContext — merge
-        never runs a job or scans data, but it is not JVM-free.)"""
+        """Whole-table verdicts from the merged statistics: each statistic
+        the planner declared for a slot is folded by its declared op, and
+        each slot's ``finalize`` turns its merged state into the slot's
+        value. The folds are driver-side arithmetic over the KB-sized stats
+        files; ``spark`` (an active session) is only needed when the suite
+        merges HLL or KLL sketches — tiny jobs union the stored sketches.
+        (Plan compilation in ``__init__`` builds Catalyst Column objects, so
+        the process still needs a live SparkContext — merge never scans
+        data, but it is not JVM-free.)"""
         deltas = self._load_stats()
         if not deltas:
             raise ValueError("no validated snapshots in the stats store")
         merged: dict[str, dict] = {}
-        # sketch op -> (did, key, [stored sketches]) folded by Spark below
-        pending: dict[str, list] = {"hll": [], "kll": []}
+        # sketch op -> composite key -> stored sketches, merged by Spark below
+        sketches: dict[str, list] = {"hll": [], "kll": []}
         for did, _, _, stats in self._domains:
             acc = merged[did] = {}
-            for key, s in stats.items():
+            for key, op in _ops(stats).items():
                 # A key the CURRENT engine folds but a stored delta lacks
                 # means that delta was validated by an engine version that
                 # classified the expectation as unsupported (e.g. median /
@@ -622,65 +483,42 @@ class IncrementalCheckpoint:
                         "fresh stats store")
                 vals = [v for v in (_decode(d["domains"][did][key])
                                     for d in deltas) if v is not None]
-                if s["op"] in pending:
-                    pending[s["op"]].append((did, key, vals))
+                if op in sketches:
+                    sketches[op] += [(f"{did}\x00{key}", sk) for sk in vals]
                     acc[key] = None  # filled below
                 else:
-                    acc[key] = _fold(s["op"], vals)
-        hll = [(f"{did}\x00{key}", sk)
-               for did, key, sks in pending["hll"] for sk in sks]
-        if hll:
-            if spark is None:
-                raise ValueError(
-                    "merging uniqueness sketches needs a SparkSession — "
-                    "pass spark to merged_result()")
-            est = {r["k"]: int(r["est"]) for r in
-                   (spark.createDataFrame(hll, "k string, sk binary")
-                    .groupBy("k")
-                    .agg(F.hll_sketch_estimate(
-                        F.hll_union_agg("sk", F.lit(True))).alias("est"))
-                    .collect())}
-            for did, key, sks in pending["hll"]:
-                if sks:
-                    merged[did][key] = est.get(f"{did}\x00{key}", 0)
-        if any(sks for _, _, sks in pending["kll"]):
-            if spark is None:
-                raise ValueError(
-                    "merging quantile sketches needs a SparkSession — "
-                    "pass spark to merged_result()")
-            # two tiny jobs over the KB-sized sketches (never the data):
-            # 1. merge per (composite key, k) — one job per distinct k so the
-            #    merged sketch keeps the caller's accuracy parameter
-            by_k: dict[int, list] = {}
-            for did, key, sks in pending["kll"]:
-                by_k.setdefault(int(key.rsplit("::", 1)[1]), []).extend(
-                    (f"{did}\x00{key}", sk) for sk in sks)
-            merged_sk: dict[str, bytes] = {}
-            for k, rows in by_k.items():
-                for r in (spark.createDataFrame(rows, "k string, sk binary")
-                          .groupBy("k")
-                          .agg(F.kll_merge_agg_double("sk", F.lit(k))
-                               .alias("m")).collect()):
-                    merged_sk[r["k"]] = bytes(r["m"])
-            # 2. extract every quantile any expectation needs from the
-            #    merged sketches — the rank argument must be foldable, so
-            #    each distinct quantile becomes one literal column
-            qs = sorted({q for _, _, items, _ in self._domains
-                         for it in items for q in _kll_quantiles(
-                             self._strategy[id(it.config)], it)})
-            qvals: dict[tuple, float] = {}
-            for r in (spark.createDataFrame(
-                          list(merged_sk.items()), "k string, sk binary")
-                      .select("k", *[
-                          F.kll_sketch_get_quantile_double("sk", F.lit(q))
-                          .alias(f"q{i}") for i, q in enumerate(qs)])
+                    acc[key] = _fold(op, vals)
+        if (sketches["hll"] or sketches["kll"]) and spark is None:
+            raise ValueError(
+                "merging HLL / KLL sketches (uniqueness, distinct counts, "
+                "quantiles) needs a SparkSession — pass spark to "
+                "merged_result()")
+        if sketches["hll"]:
+            for r in (spark.createDataFrame(sketches["hll"],
+                                            "k string, sk binary")
+                      .groupBy("k")
+                      .agg(F.hll_sketch_estimate(F.hll_union_agg(
+                          "sk", F.lit(True))).alias("est"))
                       .collect()):
-                for i, q in enumerate(qs):
-                    qvals[(r["k"], q)] = r[f"q{i}"]
-            for did, key, sks in pending["kll"]:
-                if sks:
-                    merged[did][key] = {q: qvals.get((f"{did}\x00{key}", q))
-                                        for q in qs}
+                did, key = r["k"].split("\x00", 1)
+                merged[did][key] = int(r["est"])
+        if sketches["kll"]:
+            # one job merges the sketches (a merged sketch keeps the k of
+            # its inputs) and reads every quantile any slot needs, one
+            # literal column each: the rank argument must be foldable
+            qs = sorted({q for _, _, _, stats in self._domains
+                         for _, m, _ in stats
+                         for q in getattr(m, "quantiles", ())})
+            for r in (spark.createDataFrame(sketches["kll"],
+                                            "k string, sk binary")
+                      .groupBy("k")
+                      .agg(F.kll_merge_agg_double("sk").alias("m"))
+                      .select("k", *[F.kll_sketch_get_quantile_double(
+                          "m", F.lit(q)).alias(f"q{i}")
+                          for i, q in enumerate(qs)])
+                      .collect()):
+                did, key = r["k"].split("\x00", 1)
+                merged[did][key] = {q: r[f"q{i}"] for i, q in enumerate(qs)}
         return self._verdicts(merged, deltas)
 
     # ------------------------------------------------------------- verdicts
@@ -698,11 +536,16 @@ class IncrementalCheckpoint:
             results.append(ExpectationValidationResult(
                 success=success, expectation_config=item.config,
                 result={"details": {"per_snapshot_success": oks}}))
-        for did, dp, items, _ in self._domains:
-            row = self._merged_row(dp, items, merged[did])
+        for did, _, items, stats in self._domains:
+            acc = merged[did]
+            # slot alias -> value: a foldable slot's folded value, or its
+            # Merge's finalize over its merged state
+            row = {a: acc[next(iter(st))] if isinstance(m, str)
+                   else m.finalize(*[acc[k] for k in st])
+                   for a, m, st in stats}
             for item in items:
                 strat = self._strategy[id(item.config)]
-                if strat in ("job_counts", "rowcount_vs_other"):
+                if strat in _JOB_STRATEGIES:
                     results.append(self._job_verdict(vr, item, strat, deltas))
                     continue
                 if strat == "unique_approx":
@@ -759,14 +602,24 @@ class IncrementalCheckpoint:
         return vr._map_evr(item, el, el - mi, ux, [], None)
 
 
-def _kll_quantiles(strat: str, item: CompiledItem) -> list[float]:
-    """The quantiles an item merged by ``strat`` reads from its KLL
-    sketch."""
-    if strat == "kll:median":
-        return [0.5]
-    if strat == "kll:quantiles":
-        return item.info["quantiles"]
-    return []
+def _statistics(dp: DomainPlan, aliases) -> list[tuple]:
+    """(alias, merge declaration, statistics: key -> op) for each slot
+    alias. A foldable slot's one statistic is its own value, under the
+    slot's key; a Merge's state goes under ``inc::<name>::<slot key>``.
+    Slot keys are semantic (stable across processes), so expectations that
+    share a slot share its statistics."""
+    inv = {a: k for k, a in dp.slot_table.keys.items()}
+    out = []
+    for a in aliases:
+        m = dp.slot_table.merges[a]
+        out.append((a, m, {inv[a]: m} if isinstance(m, str) else
+                    {f"inc::{n}::{inv[a]}": op for n, op in m.state.items()}))
+    return out
+
+
+def _ops(stats: list[tuple]) -> dict[str, str]:
+    """Every statistic of a domain: key -> op, in aggregate order."""
+    return {k: op for _, _, st in stats for k, op in st.items()}
 
 
 def _fold(op: str, vals: list):
@@ -780,23 +633,6 @@ def _fold(op: str, vals: list):
     return {"sum_nullable": sum, "min": min, "max": max}[op](vals)
 
 
-def _merged_agg(what: str, c: str, acc: dict, kw: dict):
-    """Column ``c``'s ``what`` aggregate from its merged statistics: mean =
-    sum/count, sample stdev = sqrt((S2 - S1^2/C)/(C-1)), folded min/max/sum,
-    the unioned HLL estimate."""
-    if what in ("mean", "stdev"):
-        cnt = acc[f"inc::cnt::{c}"] or 0
-        if what == "mean":
-            return acc[f"inc::sum::{c}"] / cnt if cnt else None
-        s1 = acc[f"inc::sum::{c}"] or 0.0
-        s2 = acc[f"inc::sumsq::{c}"] or 0.0
-        return (math.sqrt(max(0.0, (s2 - s1 * s1 / cnt) / (cnt - 1)))
-                if cnt >= 2 else None)
-    if what in ("min", "max"):
-        return _maybe_temporal(acc[f"inc::{what}::{c}"], kw)
-    return acc[f"inc::{'nsum' if what == 'sum' else 'hll'}::{c}"]
-
-
 def _add_merge_details(evr: ExpectationValidationResult, item: CompiledItem,
                        strat: str, row: dict) -> None:
     """Note in a merged EVR's details how its sketch statistics merged."""
@@ -806,7 +642,7 @@ def _add_merge_details(evr: ExpectationValidationResult, item: CompiledItem,
         del details["rsd"], details["dup_rows_upper_bound"]
         note = {"note": ("merged DataSketches HLL union across snapshots; "
                          "exact dup counts need one full-table pass")}
-    elif strat.startswith("kll:"):
+    elif strat == "kll":
         note = {"strategy": "kll_sketch_merge",
                 "kll_k": _kll_k_for(item.kwargs),
                 "note": ("merged DataSketches KLL doubles sketches across "
@@ -824,41 +660,34 @@ def _add_merge_details(evr: ExpectationValidationResult, item: CompiledItem,
         return
     evr.result.setdefault("details", {}).update(note)
 
-def _maybe_temporal(value, kw: dict):
-    """_encode JSON-serializes a date/timestamp min/max fold as str(v); a
-    merged verdict with parse_strings_as_datetimes=True would then compare
-    str vs datetime bounds and raise TypeError (ADVICE r4). Decode the ISO
-    string back when the expectation declares datetime semantics."""
-    if isinstance(value, str) and kw.get("parse_strings_as_datetimes"):
-        import datetime
-        # str(date) is exactly 'YYYY-MM-DD'; decode it back to a date, not
-        # a midnight datetime (datetime.fromisoformat also accepts
-        # date-only strings, so it must not be tried first — a decoded
-        # midnight datetime compared against a date bound raises TypeError
-        # and diverges from full validation's observed_value rendering).
-        parse = (datetime.date.fromisoformat if len(value) == 10
-                 else datetime.datetime.fromisoformat)
-        try:
-            return parse(value)
-        except ValueError:
-            return value
-    return value
+
+# JSON form of statistic values JSON cannot hold: tag -> (type, encode,
+# decode). Sketches are bytes; dates, timestamps and decimals decode back to
+# the type the fused pass returns.
+_TAGGED = {
+    "b64": ((bytes, bytearray), lambda v: base64.b64encode(bytes(v)).decode(),
+            base64.b64decode),
+    "datetime": (datetime.datetime, datetime.datetime.isoformat,
+                 datetime.datetime.fromisoformat),
+    "date": (datetime.date, datetime.date.isoformat,
+             datetime.date.fromisoformat),
+    "decimal": (decimal.Decimal, str, decimal.Decimal),
+}
 
 
-def _encode(v, key: str, op: str):
-    if v is None:
-        return None
-    if op in ("hll", "kll"):
-        return {"b64": base64.b64encode(bytes(v)).decode()}
-    if op == "set_union":
-        return list(v)
-    if isinstance(v, (bool, int, float, str)):
-        return v
-    # timestamps/dates from min/max fold fine as ISO strings
-    return str(v)
+def _encode(v):
+    if isinstance(v, list):
+        return [_encode(x) for x in v]
+    for tag, (types, enc, _) in _TAGGED.items():  # datetime before date
+        if isinstance(v, types):
+            return {tag: enc(v)}
+    return v
 
 
 def _decode(v):
-    if isinstance(v, dict) and "b64" in v:
-        return base64.b64decode(v["b64"])
+    if isinstance(v, list):
+        return [_decode(x) for x in v]
+    if isinstance(v, dict):
+        (tag, text), = v.items()
+        return _TAGGED[tag][2](text)
     return v

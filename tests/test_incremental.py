@@ -495,6 +495,85 @@ def test_date_min_max_merge_decodes_date_not_midnight(spark, tmp_path):
         r.result["observed_value"] for r in full.results]
 
 
+def test_decimal_min_max_sum_merge_equals_full(spark, tmp_path):
+    """Decimal min/max/sum statistics fold as Decimals and merge to the
+    verdicts and observed values of a full validation. The deltas' values
+    differ in digit count, where a fold over their text would order them
+    wrongly."""
+    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        (F.col("id") * 37 % 1009 / 4).cast("decimal(10,2)").alias("p"))
+    suite = (ExpectationSuite("dec")
+             .add("expect_column_min_to_be_between", column="p", min_value=0)
+             .add("expect_column_max_to_be_between", column="p",
+                  max_value=200)
+             .add("expect_column_sum_to_be_between", column="p",
+                  min_value=0, max_value=10_000))
+    inc = IncrementalCheckpoint(suite, str(tmp_path / "store"), strict=True)
+    inc.validate_delta(mk(0, 3), snapshot_id="d1")    # 0.00, 9.25, 18.50
+    inc.validate_delta(mk(3, 120), snapshot_id="d2")
+    merged = inc.merged_result().results
+    full = validate(mk(0, 120), suite).results
+    assert [(r.success, r.result["observed_value"]) for r in merged] == [
+        (r.success, r.result["observed_value"]) for r in full]
+    assert [r.success for r in full] == [True, False, False]
+
+
+def test_hll_merges_any_input_type(spark, tmp_path):
+    """The HLL statistics take any input type: a compound (struct) key and
+    DOUBLE columns validate as deltas and merge within the HLL bound of a
+    full approximate validation of the union. Nulls stay out of the
+    sketches."""
+    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        (F.col("id") % 40).alias("a"), (F.col("id") % 3).alias("b"),
+        F.when(F.col("id") % 10 == 0, None)
+        .otherwise(F.col("id") % 97 / 4).alias("x"))
+    suite = (ExpectationSuite("hll")
+             .add("expect_compound_columns_to_be_unique",
+                  column_list=["a", "b"], mostly=0.1)
+             .add("expect_column_unique_value_count_to_be_between",
+                  column="x", min_value=1, max_value=1000, approximate=True)
+             .add("expect_column_proportion_of_unique_values_to_be_between",
+                  column="x", min_value=0.01, approximate=True))
+    inc = IncrementalCheckpoint(suite, str(tmp_path / "store"), strict=True)
+    inc.validate_delta(mk(0, 200), snapshot_id="d1")
+    inc.validate_delta(mk(150, 400), snapshot_id="d2")
+    merged = _by_key(inc.merged_result(spark))
+    full = _by_key(validate(mk(0, 200).union(mk(150, 400)), suite,
+                            unique_strategy="approx"))
+    assert merged.keys() == full.keys()
+    for key, f in full.items():
+        m = merged[key]
+        assert m.success == f.success is True, key
+        field = ("observed_value" if "observed_value" in f.result
+                 else "unexpected_count")
+        # rsd 0.05: a standard error of at most 5% per estimate
+        assert m.result[field] == pytest.approx(f.result[field], rel=0.15)
+    assert merged[("expect_compound_columns_to_be_unique", "a,b")].result[
+        "element_count"] == 450
+
+
+def test_older_stats_format_is_refused(spark, tmp_path):
+    """A stats file written in an older format is refused by name, before
+    any of its statistics is read."""
+    import json
+    suite = ExpectationSuite("v").add(
+        "expect_column_mean_to_be_between", column="v", max_value=1000)
+    store = str(tmp_path / "store")
+    inc = IncrementalCheckpoint(suite, store, strict=True)
+    inc.validate_delta(_mkdf(spark, 0, 50), snapshot_id="old")
+    path = os.path.join(store, "stats", "old.json")
+    with open(path) as f:
+        stats = json.load(f)
+    # the format-1 form of the mean's statistics
+    stats["format_version"] = 1
+    stats["domains"] = {did: {"inc::cnt::v": 50, "inc::sum::v": 1225.0}
+                        for did in stats["domains"]}
+    with open(path, "w") as f:
+        json.dump(stats, f)
+    with pytest.raises(ValueError, match="stats format mismatch in old"):
+        inc.merged_result()
+
+
 def test_allow_relative_error_sizes_kll_sketch(spark, tmp_path):
     """A positive allow_relative_error is honored as the caller's rank-error
     tolerance: k is derived from the inverted published KLL accuracy model

@@ -253,10 +253,12 @@ def test_verdict_sink_rollup_prunes_binary(spark, tmp_path, clips_path):
     assert kinds == {"map", "agg"}
 
 
-def test_incremental_stats_pass_prunes_scan(spark, clips_path):
+def test_incremental_stats_pass_prunes_scan(spark, clips_path, tmp_path):
     """The incremental per-delta statistics pass must read ONLY the columns
     its mergeable expectations reference — never the binary column — and the
     transcript-rate pair condition must fuse into the same single agg."""
+    import pyspark.sql.classic.dataframe as CD
+
     from sparkcheck.incremental import IncrementalCheckpoint
     from sparkcheck.types import ExpectationSuite
     suite = (ExpectationSuite("inc")
@@ -265,16 +267,21 @@ def test_incremental_stats_pass_prunes_scan(spark, clips_path):
                   min_value=0, max_value=10**9)
              .add("expect_transcript_words_per_second_to_be_between",
                   min_wps=0.05, max_wps=200.0))
-    inc = IncrementalCheckpoint.__new__(IncrementalCheckpoint)
-    inc.suite = suite
-    from sparkcheck.planner import compile_suite
-    from sparkcheck.incremental import _classify_item
-    inc._plan = compile_suite(suite.expectations)
-    inc._strategy = {id(it.config): _classify_item(it)
-                     for it in inc._iter_items()}
+    inc = IncrementalCheckpoint(suite, str(tmp_path / "store"), strict=True)
     d = spark.read.parquet(clips_path)
-    (did, dp, items, stats), = inc._domain_items()
-    agg = d.agg(*[s["expr"] for s in stats.values()])
+    aggs = []
+    orig = CD.DataFrame.agg
+
+    def spy(self, *cols):
+        aggs.append(orig(self, *cols))
+        return aggs[-1]
+
+    CD.DataFrame.agg = spy
+    try:
+        inc.validate_delta(d, snapshot_id="s1")
+    finally:
+        CD.DataFrame.agg = orig
+    (agg,) = aggs  # the delta pass's one aggregate
     txt = _executed_plan(agg)
     m = re.search(r"ReadSchema: struct<([^>]*)>", txt)
     assert m, txt[:500]
