@@ -1,11 +1,12 @@
-"""Per-row audio invariants as vectorized Arrow pandas UDFs.
+"""Per-row audio invariants over Arrow batches.
 
 North-star requirement (BASELINE.json input_hint): decoded-PCM allclose with
 SNR >= 30 dB vs a reference clip + transcript equality, with *no per-row
-Python* — everything rides Arrow batches through `pandas_udf`. Transcript
-equality itself stays a native Column (eqNullSafe — reference semantics
-column_pair_values_equal.py:40-43); only the PCM decode/SNR needs Python, and
-it runs per Arrow batch.
+Python* — the decode and the header parse run per Arrow batch in
+`mapInPandas`, and nothing is cached. Transcript equality itself stays a
+native Column (eqNullSafe — reference semantics
+column_pair_values_equal.py:40-43); only the PCM decode/SNR and the header
+parse need Python.
 
 Codec support: 'wav'/'pcm' are decoded for real (stdlib wave/numpy — WAV is a
 trivial RIFF container). 'flac'/'mp3'/'opus' decoding requires codec libraries
@@ -132,26 +133,6 @@ def snr_db(ref: np.ndarray | None, test: np.ndarray | None) -> float:
     if sig == 0.0:
         return float("-inf")
     return 10.0 * np.log10(sig / noise)
-
-
-def make_snr_udf(strict_codecs: bool = False):
-    """pandas UDF (bytes, codec, ref_bytes, ref_codec) -> snr double.
-
-    Arrow-batched: one Python invocation per record batch, numpy inside.
-    """
-
-    @F.pandas_udf(T.DoubleType())
-    def _snr(payload: pd.Series, codec: pd.Series, ref_payload: pd.Series,
-             ref_codec: pd.Series) -> pd.Series:
-        out = np.empty(len(payload), dtype=np.float64)
-        for i in range(len(payload)):
-            out[i] = snr_db(
-                decode_pcm(ref_payload.iloc[i], ref_codec.iloc[i], strict_codecs),
-                decode_pcm(payload.iloc[i], codec.iloc[i], strict_codecs),
-            )
-        return pd.Series(out)
-
-    return _snr
 
 
 _CRBS = "spark.sql.parquet.columnarReaderBatchSize"
@@ -307,7 +288,6 @@ def salted_repartition(df: DataFrame, hot_key: str, n_salts: int = 16,
     the exchange (ADVICE r4). On tables where every non-binary column is
     shared by many rows, pass ``salt_cols=[unique key]`` explicitly."""
     if salt_cols is None:
-        from pyspark.sql import types as T
         salt_cols = [f.name for f in df.schema.fields
                      if not isinstance(f.dataType, T.BinaryType)]
         if not salt_cols:  # degenerate all-binary table: hash everything
@@ -389,10 +369,6 @@ def snr_scores(
         schema=f"{join_key} {key_type}, __has_ref boolean, __nn boolean, __snr_db double")
 
 
-# backwards-compatible name
-with_snr_vs_reference = snr_scores
-
-
 def run_snr_item(run, item, dfd: DataFrame, grow: dict):
     """Engine hook: expect_audio_snr_vs_reference_to_be_above.
 
@@ -427,15 +403,14 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
 
     ``hash_prescreen=False`` forces the full decode compare over every pair
     (snr_scores) — for re-encoded corpora where bytes always differ. Its
-    counts and samples come from a persisted projection of the decode,
-    which is a Python map: two actions over it, or two branches of one
-    action with no exchange between, would each run the decode.
+    counts, mean SNR and first k bad keys come from one sampler action over
+    the decode's (key, nonnull, bad, snr) rows, tagged with their decode
+    position, which the sampler puts under one exchange so the decode runs
+    once.
 
     The binary column never enters the fused suite pass. Assumes the
     reference table has unique join keys (the golden twin).
     """
-    from pyspark import StorageLevel
-
     kw = item.kwargs
     key = kw.get("join_key", "clip_id")
     ref = run.tables[kw["reference_table"]]
@@ -450,29 +425,18 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
             strict_codecs=kw.get("strict_codecs", False),
             num_partitions=kw.get("num_partitions"))
         nn = F.col("__nn")
-        bad = nn & (~F.col("__has_ref") | (F.col("__snr_db") < min_snr))
         proj = scored.select(
-            F.col(key).alias("__k"), nn.alias("__nn2"), bad.alias("__bad"),
-            F.when(nn & F.col("__has_ref"), F.col("__snr_db")).alias("__snr"))
-        proj = proj.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            with payload_batch_guard(dfd.sparkSession,
-                                     kw.get("payload_batch_rows", 256)), \
-                 arrow_batch_guard(dfd.sparkSession,
-                                   kw.get("arrow_batch_rows", 256)):
-                agg = proj.agg(
-                    F.count(F.lit(1)).alias("element"),
-                    F.coalesce(F.sum(F.when(F.col("__nn2"), 1).otherwise(0)), F.lit(0)).alias("nonnull"),
-                    F.coalesce(F.sum(F.when(F.col("__bad"), 1).otherwise(0)), F.lit(0)).alias("u"),
-                    F.avg("__snr").alias("mean_snr")).first()
-            unexpected, element, nonnull = int(agg["u"]), int(agg["element"]), int(agg["nonnull"])
-            samples: list = []
-            if unexpected and run.rf["result_format"] != "BOOLEAN_ONLY":
-                samples = [r["__k"] for r in proj.filter("__bad").select("__k")
-                           .limit(run._sample_limit()).collect()]
-        finally:
-            proj.unpersist()
-        evr = run._map_evr(item, element, nonnull, unexpected, samples)
+            F.col(key).alias("__k"), nn,
+            (nn & (~F.col("__has_ref") | (F.col("__snr_db") < min_snr)))
+            .alias("__bad"),
+            F.when(nn & F.col("__has_ref"), F.col("__snr_db")).alias("__snr"),
+            F.monotonically_increasing_id().alias("__mid"))
+        with payload_batch_guard(dfd.sparkSession,
+                                 kw.get("payload_batch_rows", 256)), \
+             arrow_batch_guard(dfd.sparkSession,
+                               kw.get("arrow_batch_rows", 256)):
+            evr, agg = _keyed_map_evr(run, item, proj, nn, F.col("__bad"),
+                                      F.avg("__snr").alias("mean_snr"))
         if evr.result:
             evr.result["details"] = {
                 "mean_snr_db": _finite(agg["mean_snr"]), "min_snr_db": min_snr,
@@ -570,21 +534,17 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
             else:
                 # the key set is the prescreen join's mismatch rows, planned
                 # again inside the decode (JVM hashing only) and broadcast
-                # so the big binary side never shuffles for the semi-join.
-                # An exchange over the narrow (key, snr) rows feeds both
-                # branches of the sampler's action, so the decode runs once;
-                # the key count keeps the aggregate branch reading the key
-                # too (pruned to snr alone it would plan its own exchange,
-                # and its own decode, under it)
+                # so the big binary side never shuffles for the semi-join;
+                # the decoded rows carry their position for the sampler
                 mk = hj.filter(mismatch).select(F.col("__k").alias(key))
                 scored = decode(dfd.join(F.broadcast(mk), key, "left_semi"),
                                 ref.join(F.broadcast(mk), key, "left_semi"))
                 bad_row = F.col("__snr_db") < min_snr
                 (snr_bad_keys,), a2 = run._collect_samples(
-                    scored.repartition(parts), [(F.col(key), bad_row, k)],
+                    scored.withColumn("__mid", F.monotonically_increasing_id()),
+                    [(F.col(key), bad_row, k)],
                     aggs=[F.count_if(bad_row).alias("u"),
-                          F.avg("__snr_db").alias("mean_snr"),
-                          F.count(key).alias("decoded")])
+                          F.avg("__snr_db").alias("mean_snr")])
                 bad_snr, mean_mismatch_snr = int(a2["u"]), a2["mean_snr"]
 
     unexpected = no_ref + bad_snr
@@ -622,18 +582,11 @@ def run_payload_item(run, item, dfd: DataFrame, grow: dict):
     hj = hash_prescreen_join(dfd, ref, key, bytes_col, hash_col, ref_hash_col)
     nn = F.col("__nn")
     bad = nn & (~F.col("__has_ref") | ~F.coalesce(F.col("__same"), F.lit(False)))
-    k = run._sample_limit()
     with payload_batch_guard(
             dfd.sparkSession,
             None if (hash_col and ref_hash_col)
             else kw.get("payload_batch_rows", 256)):
-        (samples,), agg = run._collect_samples(
-            hj, [(F.col("__k"), bad, k)],
-            aggs=[F.count(F.lit(1)).alias("element"),
-                  F.count_if(nn).alias("nonnull"),
-                  F.count_if(bad).alias("u")])
-    evr = run._map_evr(item, int(agg["element"]), int(agg["nonnull"]),
-                       int(agg["u"]), samples)
+        evr, _ = _keyed_map_evr(run, item, hj, nn, bad)
     if evr.result:
         evr.result["details"] = {"strategy": "payload_hash_match",
                                  "hash_column": hash_col}
@@ -642,8 +595,10 @@ def run_payload_item(run, item, dfd: DataFrame, grow: dict):
 
 def run_header_item(run, item, dfd: DataFrame, grow: dict):
     """Engine hook: expect_audio_header_to_match_metadata — RIFF header
-    sample rate must equal the sr_hz metadata column. Header-only parse (no
-    PCM decode), single mapInPandas scan, no join."""
+    sample rate must equal the sr_hz metadata column; a null sr_hz is
+    unexpected. Header-only parse (no PCM decode), single mapInPandas scan,
+    no join; counts and the first k bad keys from one sampler action over
+    the parse's rows, tagged with their scan position."""
     kw = item.kwargs
     key = kw.get("join_key", "clip_id")
     bytes_col = kw.get("bytes_column", "bytes")
@@ -659,32 +614,37 @@ def run_header_item(run, item, dfd: DataFrame, grow: dict):
                 if not nn.iloc[i]:
                     continue
                 hdr = wav_header_sr(bytes(pdf[bytes_col].iloc[i]))
+                # Arrow hands a nullable INT column with nulls over as
+                # float64, its nulls as NaN
                 meta = pdf[sr_col].iloc[i]
-                bad[i] = hdr is None or meta is None or int(hdr) != int(meta)
+                bad[i] = hdr is None or pd.isna(meta) or int(hdr) != int(meta)
             yield pd.DataFrame({"__k": pdf[key], "__nn": nn, "__bad": bad})
 
     key_type = dfd.schema[key].dataType.simpleString()
     proj = (dfd.select(key, bytes_col, sr_col)
-            .mapInPandas(check, schema=f"__k {key_type}, __nn boolean, __bad boolean"))
-    from pyspark import StorageLevel
-    proj = proj.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        with payload_batch_guard(dfd.sparkSession,
-                                 kw.get("payload_batch_rows", 256)), \
-             arrow_batch_guard(dfd.sparkSession,
-                               kw.get("arrow_batch_rows", 256)):
-            agg = proj.agg(
-                F.count(F.lit(1)).alias("element"),
-                F.coalesce(F.sum(F.when(F.col("__nn"), 1).otherwise(0)), F.lit(0)).alias("nonnull"),
-                F.coalesce(F.sum(F.when(F.col("__bad"), 1).otherwise(0)), F.lit(0)).alias("u")).first()
-        unexpected, element, nonnull = int(agg["u"]), int(agg["element"]), int(agg["nonnull"])
-        samples: list = []
-        if unexpected and run.rf["result_format"] != "BOOLEAN_ONLY":
-            samples = [r["__k"] for r in proj.filter("__bad").select("__k")
-                       .limit(run._sample_limit()).collect()]
-    finally:
-        proj.unpersist()
-    return run._map_evr(item, element, nonnull, unexpected, samples)
+            .mapInPandas(check, schema=f"__k {key_type}, __nn boolean, __bad boolean")
+            .withColumn("__mid", F.monotonically_increasing_id()))
+    with payload_batch_guard(dfd.sparkSession,
+                             kw.get("payload_batch_rows", 256)), \
+         arrow_batch_guard(dfd.sparkSession,
+                           kw.get("arrow_batch_rows", 256)):
+        evr, _ = _keyed_map_evr(run, item, proj, F.col("__nn"), F.col("__bad"))
+    return evr
+
+
+def _keyed_map_evr(run, item, rows: DataFrame, nn: Column, bad: Column,
+                   *extra: Column):
+    """Score ``rows`` (one per input row, keyed ``__k``) as a map item from
+    one sampler action: returns (the EVR from the element, nonnull and
+    unexpected counts and the first k unexpected keys; the aggregate row,
+    which also holds the ``extra`` aggregates)."""
+    (samples,), agg = run._collect_samples(
+        rows, [(F.col("__k"), bad, run._sample_limit())],
+        aggs=[F.count(F.lit(1)).alias("element"),
+              F.count_if(nn).alias("nonnull"),
+              F.count_if(bad).alias("u"), *extra])
+    return run._map_evr(item, int(agg["element"]), int(agg["nonnull"]),
+                        int(agg["u"]), samples), agg
 
 
 def _finite(v):

@@ -362,9 +362,10 @@ class ValidationRun:
         action. Returns ``(value lists in entry order, agg dict or None)``.
 
         Each row is tagged with its scan position (``__mid``: partition,
-        then position in it) and exploded into one row per entry whose
-        condition it meets (other rows explode to nothing, and every
-        condition is evaluated once per row); ``row_number()`` per entry in
+        then position in it; see below for a frame that has its own) and
+        exploded into one row per entry whose condition it meets (other
+        rows explode to nothing, and every condition is evaluated once per
+        row); ``row_number()`` per entry in
         ``__mid`` order keeps the first ``limit``. Spark plans that as a
         WindowGroupLimit on both sides of the exchange, so the shuffle holds
         at most partitions x entries x limit rows however many rows match,
@@ -373,16 +374,31 @@ class ValidationRun:
         such job per item instead). The aggregate row joins the ranked rows
         through ``unionByName``. The two branches share ``dfd``'s plan, and
         Spark reuses its exchanges, so what sits below an exchange runs
-        once; what sits above the last one (a scan on the probe side of a
-        broadcast join, a Python map) runs once per branch, so callers
-        with ``aggs`` put an exchange over such work. Entries with a limit
-        of 0 are left out; with none left and no ``aggs`` no action runs."""
+        once; what sits above the last one runs once per branch.
+
+        A Python map's output is such work. A caller tags each of its rows
+        with its position there as ``__mid``; rows are ranked by that tag
+        (the order ``filter().limit()`` over the map samples), and when
+        both branches run the frame goes under one exchange keyed on all
+        its columns. Column pruning cannot narrow what an exchange's key
+        reads, so both branches read the same columns below it, Spark
+        reuses it and the map runs once; under a round-robin exchange each
+        branch would prune the map's output to its own columns and plan its
+        own exchange and map. A scan on the probe side of a broadcast join
+        the caller puts under an exchange that both branches need whole.
+        Entries with a limit of 0 are left out; with none left and no
+        ``aggs`` no action runs."""
         live = [i for i, (_, _, lim) in enumerate(wanted) if lim > 0]
         firsts: list[list] = [[] for _ in wanted]
         if not live and not aggs:
             return firsts, None
         parts = []
         top = max((wanted[i][2] for i in live), default=0)
+        mid = F.monotonically_increasing_id()
+        if "__mid" in dfd.columns:
+            mid = F.col("__mid")
+            if live and aggs:
+                dfd = dfd.repartition(*[F.col(c) for c in dfd.columns])
         if live:
             violated = F.array_compact(F.array(
                 *[F.when(wanted[i][1], F.lit(i)) for i in live]))
@@ -394,7 +410,7 @@ class ValidationRun:
                 keep &= F.col("__rank") <= F.element_at(limits, F.col("__item") + 1)
             parts.append(
                 dfd.select(F.explode(violated).alias("__item"),
-                           F.monotonically_increasing_id().alias("__mid"),
+                           mid.alias("__mid"),
                            *[wanted[i][0].alias(f"__v{i}") for i in live])
                 .withColumn("__rank", F.row_number().over(first))
                 .filter(keep))
@@ -680,50 +696,45 @@ class ValidationRun:
         """Most-common value(s) with the tie collect BOUNDED (`max_ties`,
         default 100): on a degenerate column where every value occurs once,
         ALL distinct values tie at the max, so an uncapped collect pulls the
-        whole column to the driver. Above the cap the success flag is still
-        exact — tie count and set membership resolve as two JVM-side scalar
-        jobs — only the reported list is truncated (annotated in details).
-        Reference (pandas value_counts, expect_column_most_common_value_
-        to_be_in_set) keeps all ties; identical below the cap."""
+        whole column to the driver. One action over one plan: the value
+        counts, joined to their broadcast max, give the ties; the first
+        ``max_ties + 1`` of them in value order, the tie count and whether
+        any tie is in the value set come back together. Above the cap the
+        success flag is still exact from that count and membership; only
+        the reported list is truncated (annotated in details). Reference
+        (pandas value_counts, expect_column_most_common_value_to_be_in_set)
+        keeps all ties; identical below the cap."""
         kw = item.kwargs
         col = kw["column"]
         cap = int(kw.get("max_ties", 100))
         value_set = set(kw["value_set"])
         vc = dfd.filter(F.col(col).isNotNull()).groupBy(col).agg(
             F.count(F.lit(1)).alias("__cnt"))
-        vc = vc.persist()
-        truncated = False
+        # an empty column has a null max and so no ties
+        ties = vc.join(F.broadcast(vc.agg(F.max("__cnt").alias("__cnt"))),
+                       "__cnt")
+        top = ties.select(col).orderBy(col).limit(cap + 1)
+        stats = ties.agg(
+            F.count(F.lit(1)).alias("__n_ties"),
+            F.count_if(F.col(col).isin(list(value_set))).alias("__in_set"))
+        rows = top.unionByName(stats, allowMissingColumns=True).collect()
+        (st,) = [r for r in rows if r["__n_ties"] is not None]
+        top_values = [r[col] for r in rows if r["__n_ties"] is None]
+        observed = sorted(top_values[:cap])
         details = None
-        try:
-            mx_row = vc.agg(F.max("__cnt").alias("m")).first()
-            mx = mx_row["m"]
-            if mx is None:
-                observed: list = []
-                success = False  # empty column: nothing can be most common
-            else:
-                ties = vc.filter(F.col("__cnt") == mx)
-                top = ties.select(col).orderBy(col).limit(cap + 1).collect()
-                truncated = len(top) > cap
-                observed = sorted(r[col] for r in top[:cap])
-                if truncated:
-                    n_ties = ties.count()
-                    in_set = bool(value_set) and ties.filter(
-                        F.col(col).isin(list(value_set))).limit(1).count() > 0
-                    if kw.get("ties_okay"):
-                        success = in_set
-                    else:
-                        success = False  # n_ties > cap >= 1, never exactly one
-                    details = {"ties_truncated": {
-                        "n_ties": int(n_ties), "max_ties": cap,
-                        "note": "observed_value lists the first max_ties tied "
-                                "values; success computed exactly from "
-                                "distributed tie count / set membership"}}
-                elif kw.get("ties_okay"):
-                    success = len(set(observed) & value_set) > 0
-                else:
-                    success = len(observed) == 1 and observed[0] in value_set
-        finally:
-            vc.unpersist()
+        if len(top_values) > cap:
+            # without ties_okay n_ties > cap >= 1 ties are never exactly one
+            success = (kw.get("ties_okay") and bool(value_set)
+                       and st["__in_set"] > 0)
+            details = {"ties_truncated": {
+                "n_ties": int(st["__n_ties"]), "max_ties": cap,
+                "note": "observed_value lists the first max_ties tied "
+                        "values; success computed exactly from "
+                        "distributed tie count / set membership"}}
+        elif kw.get("ties_okay"):
+            success = len(set(observed) & value_set) > 0
+        else:
+            success = len(observed) == 1 and observed[0] in value_set
         result = {"observed_value": observed}
         if details:
             result["details"] = details

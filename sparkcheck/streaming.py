@@ -23,7 +23,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-from .runner import ValidationRun
+from .runner import ValidationRun, _domain
 from .types import ExpectationSuite
 
 STREAM_VERDICT_FIELDS = [
@@ -68,8 +68,7 @@ class StreamValidator:
             rows["batch_id"].append(int(batch_id))
             rows["suite_name"].append(self.suite.expectation_suite_name)
             rows["expectation_type"].append(evr.expectation_config.expectation_type)
-            rows["domain"].append(
-                kw.get("column") or ",".join(kw.get("column_list", [])) or "")
+            rows["domain"].append(_domain(kw))
             rows["success"].append(bool(evr.success))
             rows["element_count"].append(int(evr.result.get("element_count") or 0))
             rows["unexpected_count"].append(int(evr.result.get("unexpected_count") or 0))

@@ -638,20 +638,27 @@ _AUDIO_ITEMS = {
     "in_table": ("expect_column_values_to_be_in_table",
                  {"column": "clip_id", "other_table": "ref",
                   "other_column": "clip_id"}),
+    "full_decode": ("expect_audio_snr_vs_reference_to_be_above",
+                    {"reference_table": "ref", "min_snr_db": 30.0,
+                     "hash_prescreen": False}),
+    "header": ("expect_audio_header_to_match_metadata", {}),
 }
 
 
 @pytest.mark.parametrize("case,budget,before", [
-    ("snr", 9, 13), ("payload", 5, 6), ("in_table", 8, 10)])
+    ("snr", 9, 13), ("payload", 5, 6), ("in_table", 8, 10),
+    ("full_decode", 7, 9), ("header", 4, 5)])
 def test_audio_job_budget(spark, audio_pair, case, budget, before):
     """Jobs per validate() of one failing item on the 2,000-clip pair
     (this session's conf). The hash-prescreen SNR item runs one prescreen
-    action and one decode action, the payload item and the referential
-    anti-join one action each for counts and samples together. ``before``
-    is the count of the engine that persisted the prescreen join and ran
-    an aggregate, a key collect and per-class ``limit()`` jobs after it (and
-    planned the anti-join twice, for ``count()`` and for ``limit()``),
-    measured on the same fixture and conf."""
+    action and one decode action; the payload item, the referential
+    anti-join, the full decode and the header item one action each for
+    counts and samples together. ``before`` is the count of the engine
+    that persisted the prescreen join and ran an aggregate, a key collect
+    and per-class ``limit()`` jobs after it (and planned the anti-join
+    twice, for ``count()`` and for ``limit()``), and that persisted the
+    full decode's and the header parse's rows for an aggregate and a
+    ``limit()`` job, measured on the same fixture and conf."""
     from sparkcheck import ExpectationSuite, validate
     dirty, ref = audio_pair
     etype, kw = _AUDIO_ITEMS[case]
@@ -661,6 +668,25 @@ def test_audio_job_budget(spark, audio_pair, case, budget, before):
     assert not evr.exception_info.get("raised_exception"), evr.exception_info
     assert evr.result["unexpected_count"] and evr.result["partial_unexpected_list"]
     assert jobs == budget < before, jobs
+
+
+def test_most_common_truncation_job_budget(spark):
+    """Jobs per validate() of most-common over 3,000 distinct values that
+    all tie, truncated at 50: the tie list, the tie count and the set
+    membership come from one plan over the value counts. 11 jobs when the
+    value counts were persisted and the max, the list, the count and the
+    membership each ran as their own job."""
+    from sparkcheck import ExpectationSuite, validate
+    df = spark.range(0, 3000, numPartitions=4).select(
+        F.format_string("v%05d", F.col("id")).alias("v"))
+    suite = ExpectationSuite("mc").add(
+        "expect_column_most_common_value_to_be_in_set", column="v",
+        value_set=["v02999"], ties_okay=True, max_ties=50)
+    jobs, res = _op_jobs(spark, lambda: validate(df, suite))
+    (evr,) = res.results
+    assert evr.success and len(evr.result["observed_value"]) == 50
+    assert evr.result["details"]["ties_truncated"]["n_ties"] == 3000
+    assert jobs == 7, jobs
 
 
 def test_snr_prescreen_and_decode_in_two_actions(spark, audio_pair,

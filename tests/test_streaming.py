@@ -52,6 +52,27 @@ def test_stream_validation_rate_source(spark, tmp_path):
     assert nn["unexpected_count"] == total_null
 
 
+def test_stream_store_labels_column_pairs(spark, tmp_path):
+    """A column-pair check is stored under the domain label the checkpoint
+    store gives it (its column_A), so two pair checks on different pairs
+    keep their own summary rows: one batch is one batch for each."""
+    from pyspark.sql import functions as F
+    df = spark.range(0, 20, numPartitions=2).select(
+        F.col("id").alias("a"), F.col("id").alias("b"),
+        F.col("id").alias("c"), (F.col("id") % 5).alias("d"))
+    suite = (ExpectationSuite("pairs")
+             .add("expect_column_pair_values_to_be_equal",
+                  column_A="a", column_B="b")
+             .add("expect_column_pair_values_to_be_equal",
+                  column_A="c", column_B="d"))
+    sv = StreamValidator(suite, store_path=str(tmp_path / "verdicts"))
+    sv.process_batch(df, 0)
+    summ = {r["domain"]: r for r in sv.summary(spark).collect()}
+    assert sorted(summ) == ["a", "c"]
+    assert [summ[d]["n_batches"] for d in ("a", "c")] == [1, 1]
+    assert [summ[d]["unexpected_count"] for d in ("a", "c")] == [0, 15]
+
+
 def test_windowed_profile_with_watermark(spark, tmp_path):
     """Event-time tumbling windows + watermark: per-window profile rows
     finalize with the watermark and match a batch recomputation."""
